@@ -77,7 +77,7 @@ def _vocab_broadcast(df: DataFrame, sf_dir: str) -> DataFrame:
     applies to statistics-chosen joins, not user hints — so a bare hint
     on a word-keyed marginal is a driver OOM waiting for a web-scale
     vocabulary. The gate reads the documents table's parquet-footer row
-    count (no Spark job, same pattern as ``_KNN_BROADCAST_MAX_ROWS`` in
+    count (no Spark job, same pattern as ``_KNN_TILE_ROWS`` in
     llm_vector.py): under ``_VOCAB_BROADCAST_MAX_DOCS`` the hint stays
     and fixture plans keep their BroadcastHashJoin (pinned in
     tests/test_plans.py); above it the hint disappears and AQE chooses

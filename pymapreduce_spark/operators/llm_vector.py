@@ -25,6 +25,7 @@ cosine ≡ dot product throughout.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 
@@ -255,6 +256,50 @@ def _needs_canonicalization(spark, sf_dir: str, wf: DataFrame) -> bool:
     return need
 
 
+def _queries(emb: DataFrame, pred, *carry) -> DataFrame:
+    """The rows of ``emb`` matching ``pred`` as a query side for
+    :func:`_exact_top_k`: (query_id, qe, *carry)."""
+    return emb.where(pred).select(
+        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), *carry
+    )
+
+
+def _top_k(pairs: DataFrame, k: int = 5) -> DataFrame:
+    """Each query's k best (query_id, neighbor_id, cos) rows under
+    (cos DESC, neighbor_id) — the oracles' tie-break — ranked 1..k in
+    ``nn_rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
+    return pairs.withColumn("nn_rank", F.row_number().over(w)).where(
+        F.col("nn_rank") <= k
+    )
+
+
+def _exact_top_k(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """Exact top-k in Spark expressions: broadcast ``queries`` (query_id,
+    qe, carried columns), scan the corpus ``emb`` (vec_id, e, carried
+    columns) once, score every pair but the query itself with the
+    DuckDB-order fold :func:`_dot`, keep :func:`_top_k`. Rows carry both
+    sides' columns plus neighbor_id, cos and nn_rank."""
+    pairs = (
+        emb.crossJoin(F.broadcast(queries))
+        .where(F.col("vec_id") != F.col("query_id"))
+        .withColumn("cos", _dot(F.col("qe"), F.col("e")))
+        .withColumnRenamed("vec_id", "neighbor_id")
+        .drop("qe", "e")
+    )
+    return _top_k(pairs, k)
+
+
+def _cosine_rows(top: DataFrame) -> DataFrame:
+    """The neighbor rows every top-k operator emits."""
+    return top.select(
+        "query_id",
+        "neighbor_id",
+        "nn_rank",
+        round_sane("cos", 6).alias("cosine"),
+    )
+
+
 @query(
     "llm_sim_search",
     oracle=_wf("""
@@ -278,28 +323,8 @@ def llm_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_embeddings(spark, sf_dir).select(
         "vec_id", _as_double("embedding").alias("e")
     )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    joined = (
-        emb.crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _dot(F.col("qe"), F.col("e")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), "neighbor_id"
-    )
-    return (
-        joined.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 5)
-        .select(
-            "query_id", "neighbor_id", "nn_rank", round_sane("cos", 6).alias("cosine")
-        )
-    )
+    q = _queries(emb, F.col("vec_id") < 10)
+    return _cosine_rows(_exact_top_k(emb, q))
 
 
 def _exact_topk_evidence(
@@ -309,23 +334,8 @@ def _exact_topk_evidence(
     evidence recall: the exact top-k (broadcast queries, one candidate
     scan, same tie-break) is computed alongside and left-joined on
     (query_id, neighbor_id)."""
-    q = emb.where(query_pred).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    pairs = (
-        emb.crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _dot(F.col("qe"), F.col("e")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    exact = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", F.lit(True).alias("in_exact_topk"))
+    exact = _exact_top_k(emb, _queries(emb, query_pred), k).select(
+        "query_id", "neighbor_id", F.lit(True).alias("in_exact_topk")
     )
     return ann.join(
         F.broadcast(exact), ["query_id", "neighbor_id"], "left"
@@ -360,33 +370,10 @@ def sim_search_ann_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
         # envelope calibrated on corpus-scale geometry, and on a
         # handful of random vectors every pair can legitimately sit
         # outside it (3 rows returned ZERO candidates on the round-7
-        # tiny axis). Exact search is both correct and faster here.
-        q = emb.where(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-        )
-        pairs = (
-            emb.crossJoin(F.broadcast(q))
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                _dot(F.col("qe"), F.col("e")).alias("cos"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cos"), "neighbor_id"
-        )
-        ann = (
-            pairs.withColumn("nn_rank", F.row_number().over(w))
-            .where(F.col("nn_rank") <= 5)
-            .select(
-                "query_id",
-                "neighbor_id",
-                "nn_rank",
-                round_sane("cos", 6).alias("cosine"),
-            )
-        )
-        return _exact_topk_evidence(ann, emb, F.col("vec_id") < 10)
+        # tiny axis). Exact search is both correct and faster here,
+        # and every row it returns IS an exact top-5 neighbor.
+        exact = _exact_top_k(emb, _queries(emb, F.col("vec_id") < 10))
+        return _cosine_rows(exact).withColumn("in_exact_topk", F.lit(True))
     model = BucketedRandomProjectionLSH(
         inputCol="features",
         outputCol="hashes",
@@ -405,17 +392,7 @@ def sim_search_ann_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("datasetB.vec_id").alias("neighbor_id"),
         _dot(F.col("datasetA.e"), F.col("datasetB.e")).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    ann = (
-        pairs.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "nn_rank",
-            round_sane("cos", 6).alias("cosine"),
-        )
-    )
+    ann = _cosine_rows(_top_k(pairs))
     # Outlier-query exact fallback (round-8 zero-embed sweep find): the
     # radius is calibrated on corpus-scale geometry of WELL-FORMED
     # vectors, so a corrupted query — the axis's [1e30]*dim vector sits
@@ -429,29 +406,10 @@ def sim_search_ann_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the index (radius ≥ √2 ≈ every pair for random vectors).
     counts = ann.groupBy("query_id").agg(F.count("*").alias("n_cand"))
     sated = counts.where(F.col("n_cand") >= 5)
-    starved = (
-        q.select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-        .join(F.broadcast(sated), "query_id", "left_anti")
+    starved = _queries(emb, F.col("vec_id") < 10).join(
+        F.broadcast(sated), "query_id", "left_anti"
     )
-    fb_pairs = (
-        emb.crossJoin(F.broadcast(starved))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _dot(F.col("qe"), F.col("e")).alias("cos"),
-        )
-    )
-    fb = (
-        fb_pairs.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "nn_rank",
-            round_sane("cos", 6).alias("cosine"),
-        )
-    )
+    fb = _cosine_rows(_exact_top_k(emb, starved))
     ann = ann.join(
         F.broadcast(sated.select("query_id")), "query_id", "left_semi"
     ).unionByName(fb)
@@ -529,30 +487,17 @@ def llm_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN (k=5) majority-vote label prediction for 50 queries, with a
     deterministic tie rule (most votes, then smallest label)."""
     emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", "label", _as_double("embedding").alias("e")
+        "vec_id",
+        F.col("label").alias("nbr_label"),
+        _as_double("embedding").alias("e"),
     )
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("true_label"),
-        F.col("e").alias("qe"),
+    q = _queries(
+        emb, F.col("vec_id") < 50, F.col("nbr_label").alias("true_label")
     )
-    pairs = (
-        emb.crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "true_label",
-            F.col("label").alias("nbr_label"),
-            F.col("vec_id").alias("neighbor_id"),
-            _dot(F.col("qe"), F.col("e")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    top5 = pairs.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= 5
-    )
-    votes = top5.groupBy("query_id", "true_label", "nbr_label").agg(
-        F.count("*").alias("n_votes")
+    votes = (
+        _exact_top_k(emb, q)
+        .groupBy("query_id", "true_label", "nbr_label")
+        .agg(F.count("*").alias("n_votes"))
     )
     vw = Window.partitionBy("query_id").orderBy(
         F.desc("n_votes"), "nbr_label"
@@ -622,8 +567,8 @@ def llm_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: Above this corpus size the exact O(N²) pair join is off-limits and
-#: the LSH bucket-join candidate path takes over (20 k rows ≈ 2×10⁸
-#: candidate pairs — the most the demo form should ever chew).
+#: :func:`_dedup_embed_lsh` takes over (20 k rows ≈ 2×10⁸ candidate
+#: pairs — the most the demo form should ever chew).
 _DEDUP_EMBED_MAX_ROWS = 20_000
 
 
@@ -681,9 +626,10 @@ def _dedup_embed_lsh(
       threshold sits inside the random-cosine noise band, where NO
       sub-quadratic candidate generator can amplify (the sign-
       agreement gap over random pairs vanishes), so the honest scale
-      path is the distributed O(N²·d) GEMM — corpus tiles of
-      ≤ _KNN_TILE_ROWS broadcast one at a time, every vector streams
-      against the tile, pairs emitted once via the a < b orientation.
+      path is the distributed O(N²·d) GEMM — :func:`_tile_scan` with
+      :func:`_near_dup_block`: corpus tiles of ≤ _KNN_TILE_ROWS
+      broadcast one at a time, every vector streams against the tile,
+      pairs emitted once via the a < b orientation.
       BLAS absorbs the quadratic term the way a 1000-executor cluster
       would (tasks × tiles), with every single working set bounded.
 
@@ -707,7 +653,18 @@ def _dedup_embed_lsh(
         )
     bits, n_bands = _srp_params(threshold, n_rows)
     if n_bands > _SRP_MAX_BANDS:
-        return _dedup_embed_pairs_tiled(emb, threshold, n_rows)
+
+        def checkpoint_union(pairs, part):
+            part = part.localCheckpoint(eager=True)
+            return part if pairs is None else pairs.unionByName(part)
+
+        return _tile_scan(
+            emb.withColumnRenamed("e", "embedding"),
+            n_rows,
+            partial(_near_dup_block, threshold=threshold),
+            "vec_a bigint, vec_b bigint, cos double",
+            checkpoint_union,
+        ).select("vec_a", "vec_b", round_sane("cos", 6).alias("cosine"))
     rng = np.random.RandomState(42)
     planes = rng.standard_normal((n_bands * bits, EMBED_DIM)).astype(
         np.float64
@@ -755,87 +712,6 @@ def _dedup_embed_lsh(
         .withColumn("cos", _dot(F.col("ea"), F.col("eb")))
         .where(F.col("cos") >= threshold)
         .select("vec_a", "vec_b", round_sane("cos", 6).alias("cosine"))
-    )
-
-
-def _dedup_embed_pairs_tiled(
-    emb: DataFrame, threshold: float, n_rows: int
-) -> DataFrame:
-    """Exact ≥-threshold pair scan via tiled GEMM (see
-    :func:`_dedup_embed_lsh` for when this regime applies). Each
-    unordered pair is emitted exactly once: the pair (a < b) surfaces
-    only from the tile containing b, when a streams past it."""
-    import numpy as np
-
-    spark = emb.sparkSession
-    # NULL embeddings can never cross the threshold (same exclusion as
-    # the tiled kNN path — np.stack cannot hold them).
-    emb = emb.where(F.col("e").isNotNull())
-    # The tile loop scans emb twice per tile (tile extraction + query
-    # pass); without a persist that is 2·n_tiles full source re-reads —
-    # O(N²/_KNN_TILE_ROWS) scanned I/O on top of the inherent GEMM.
-    # Cache once, spillable, and release after the last checkpoint.
-    emb = emb.persist()
-    n_tiles = max(1, -(-n_rows // _KNN_TILE_ROWS))
-    tile_of = F.pmod(F.xxhash64("vec_id"), F.lit(n_tiles))
-
-    def tile_kernel(bc):
-        def pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cand_ids, cand = bc.value
-            n = len(cand_ids)
-            blk = max(1, _KNN_BLOCK_ELEMS // max(n, 1))
-            for pdf in batches:
-                for lo in range(0, len(pdf), blk):
-                    sub = pdf.iloc[lo : lo + blk]
-                    if not len(sub):
-                        continue
-                    Q = np.stack(sub["e"].values).astype(np.float64)
-                    S = Q @ cand.T  # BLAS bulk pass
-                    qids = sub["vec_id"].to_numpy(dtype=np.int64)
-                    # hybrid (see _ord_dots): eps-expanded candidate
-                    # mask, then the surviving pairs' dots recomputed
-                    # order-fixed — membership AND the emitted cos are
-                    # position-uniform at BLAS bulk speed (the pair
-                    # set above threshold is sparse, so the recompute
-                    # is O(pairs), not O(N²)).
-                    qi, ci = np.nonzero(
-                        (S >= threshold - _slack(threshold))
-                        & (qids[:, None] < cand_ids[None, :])
-                    )
-                    ex = _ord_pair_dots(Q[qi], cand[ci])
-                    keep = ex >= threshold
-                    yield pd.DataFrame(
-                        {
-                            "vec_a": qids[qi][keep],
-                            "vec_b": cand_ids[ci][keep],
-                            "cos": ex[keep],
-                        }
-                    )
-
-        return pairs
-
-    out = None
-    for t in range(n_tiles):
-        tbl = emb.where(tile_of == t).toArrow()
-        ids = np.asarray(tbl.column("vec_id").to_numpy(), dtype=np.int64)
-        if len(ids) == 0:
-            continue  # empty tile (footer count > surviving rows)
-        mat = np.array(tbl.column("e").to_pylist(), dtype=np.float64)
-        bc = spark.sparkContext.broadcast((ids, mat))
-        part = emb.mapInPandas(
-            tile_kernel(bc), "vec_a bigint, vec_b bigint, cos double"
-        ).localCheckpoint(eager=True)
-        out = part if out is None else out.unionByName(part)
-        bc.destroy()
-    # Every per-tile result is checkpointed — nothing downstream reads
-    # emb's lineage anymore.
-    emb.unpersist()
-    if out is None:
-        return spark.createDataFrame(
-            [], "vec_a bigint, vec_b bigint, cosine double"
-        )
-    return out.select(
-        "vec_a", "vec_b", round_sane("cos", 6).alias("cosine")
     )
 
 
@@ -936,171 +812,162 @@ def llm_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(decode, schema)
 
 
-#: Largest corpus the broadcast-matmul kNN path may collect to the
-#: driver. 200 k × 64-d float64 ≈ 100 MB — comfortable broadcast size;
-#: past it the O(N²) scan is the bigger problem anyway and the LSH
-#: bucket-join path below takes over.
-_KNN_BROADCAST_MAX_ROWS = 200_000
+#: Peak similarity count one GEMM block may materialize in a task
+#: (block_rows × candidates ≈ 256 MB of float64 at the cap). The tile
+#: scan and the semdedup pair kernel both row-block their products
+#: under it, so a large tile or a skewed cluster never builds a full
+#: n×n matrix; blocking never changes their output.
+_GEMM_BLOCK_ELEMS = 32_000_000
 
-#: Peak float count one semdedup pair-kernel block may materialize
-#: (block_rows × cluster_size similarities ≈ 256 MB of float64). Above
-#: a ~sqrt(bound)-sized cluster the kernel switches from one n×n GEMM
-#: to row-blocked GEMMs with identical output.
-_SEMDEDUP_BLOCK_ELEMS = 32_000_000
-
-#: Same bound for the kNN broadcast kernel's query-block × candidate
-#: similarity matrix (~256 MB of float64 per task at the cap).
-_KNN_BLOCK_ELEMS = 32_000_000
-
-
-#: Rows per corpus tile in the exact tiled kNN path: one tile's matrix
+#: Rows per corpus tile of :func:`_tile_scan`: one tile's matrix
 #: (200 k × 64-d float64 ≈ 100 MB) is the largest thing fetched to the
-#: driver or broadcast at a time, whatever N is.
+#: driver or broadcast at a time, whatever N is. A corpus of at most
+#: this many rows is one tile and runs as a single lazy broadcast pass.
 _KNN_TILE_ROWS = 200_000
 
 
-def _knn_self_join_tiled(
-    spark: SparkSession, emb: DataFrame, n_rows: int, k: int = 5
+def _tile_scan(
+    emb: DataFrame, n_rows: int, block, schema: str, merge
 ) -> DataFrame:
-    """Exact distributed kNN self-join — the above-broadcast-bound path.
+    """The one exact similarity kernel, shared by the kNN self-join and
+    the tiled near-dup pair scan.
 
-    The operator's contract is EXACT top-k (its oracle is the exact
-    window form), so the scale path stays exact: O(N²·d) compute is
-    inherent to "top-k for every vector" and a 1000-executor cluster
-    absorbs it as N²/tasks; what must NOT grow with N is any single
-    task's — or the driver's — working set. Tiling bounds both: the
-    corpus splits into ⌈N / _KNN_TILE_ROWS⌉ id-hash tiles; per tile,
-    only that tile is Arrow-fetched and broadcast (≤ ~100 MB), every
-    query computes its top-k against the tile with the row-blocked
-    numpy GEMM kernel, and a running best-k merges tiles through one
-    bounded window (running state is N·k rows, re-checkpointed per
-    tile so at most one tile broadcast is live). Rounding happens once
-    after the final merge — per-tile rounding could flip near-tie
-    order vs the oracle's unrounded sort.
+    ``emb`` holds (vec_id, embedding). The corpus splits into
+    ⌈n_rows / _KNN_TILE_ROWS⌉ id-hash tiles. Each non-empty tile is
+    Arrow-fetched, sorted by id and broadcast (≤ ~100 MB), and every
+    vector streams past it through ``mapInPandas`` in row blocks of at
+    most ``_GEMM_BLOCK_ELEMS`` similarities. Each block's BLAS product
+    ``S = Q·candᵀ`` goes to ``block(qids, Q, cand_ids, cand, S)``, which
+    returns rows of ``schema``. BLAS only selects: every value a block
+    ranks by or emits is recomputed with the DuckDB-order fold
+    :func:`_ord_pair_dots` (see :func:`_ord_dots` for why).
 
-    This replaces a BucketedRandomProjectionLSH ``approxSimilarityJoin``
-    path that was structurally degenerate at the only scale it could
-    run: one scalar projection per hash table over unit vectors
-    (projection std = 1/√d ≈ 0.125) lands ~everything in a handful of
-    buckets at bucketLength 0.5, and with the no-op distance cut 2.0
-    the bucket join enumerated ~N² candidate PAIRS — more work than
-    the all-pairs product it existed to avoid, and approximate on top.
-    Exact tiling is strictly cheaper and keeps the contract. (Users
-    who want sub-quadratic search use llm_sim_search_ann / _ivf.)"""
+    One tile returns the lazy ``mapInPandas`` result: one fetch, no
+    persist, no checkpoint. With several tiles the corpus is cached
+    (each tile otherwise re-reads the source twice), ``merge(out,
+    part)`` folds each tile's result into the running output and must
+    materialize it, and the tile's broadcast is then destroyed, so at
+    most one tile broadcast is live and lineage stays O(1) in tiles.
+
+    O(N²·d) compute is inherent to "all pairs" / "top-k for every
+    vector" and a cluster absorbs it as N²/tasks; what must not grow
+    with N is any single task's — or the driver's — working set, and
+    tiling bounds both. A whole-NULL embedding has no position in
+    similarity space, so it is dropped before the numpy kernels
+    (np.stack cannot hold it)."""
     import numpy as np
 
-    # A whole-NULL embedding survives the scan doctrine but has no
-    # position in similarity space: it can neither neighbor nor be
-    # neighbored (NULL cosine never orders above a real one), so it is
-    # excluded from both sides before the numpy kernels (np.stack
-    # cannot represent it).
+    spark = emb.sparkSession
     emb = emb.where(F.col("embedding").isNotNull())
-    # Cache the corpus once: the tile loop otherwise re-reads the
-    # source twice per tile (toArrow extraction + mapInPandas query
-    # pass) — 2·n_tiles full scans of unpersisted lineage.
-    emb = emb.persist()
     n_tiles = max(1, -(-n_rows // _KNN_TILE_ROWS))
+    if n_tiles > 1:
+        emb = emb.persist()
 
-    def tile_kernel(bc):
-        def topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(bc):
+        def blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             cand_ids, cand = bc.value
-            n = len(cand_ids)
-            blk = max(1, _KNN_BLOCK_ELEMS // max(n, 1))
+            blk = max(1, _GEMM_BLOCK_ELEMS // len(cand_ids))
             for pdf in batches:
                 for lo in range(0, len(pdf), blk):
                     sub = pdf.iloc[lo : lo + blk]
-                    if not len(sub):
-                        continue
                     Q = np.stack(sub["embedding"].values).astype(np.float64)
-                    S = Q @ cand.T  # BLAS bulk pass
                     qids = sub["vec_id"].to_numpy(dtype=np.int64)
-                    pos = np.searchsorted(cand_ids, qids)
-                    hit = (pos < n) & (
-                        cand_ids[np.minimum(pos, n - 1)] == qids
-                    )
-                    S[np.flatnonzero(hit), pos[hit]] = -np.inf
-                    kk = min(k, n)
-                    thresh = np.partition(S, n - kk, axis=1)[:, n - kk]
-                    # hybrid head select + exact-fold recompute (see
-                    # _ord_dots / _ord_pair_dots): emitted cos must be
-                    # DuckDB-fold-equal — it feeds the cross-tile rank
-                    # AND the final (cos DESC, id) window both engines
-                    # compare. Batched: one fold call per block, not
-                    # one dispatch per query row (r13 verdict).
-                    head = (
-                        S >= (thresh - _slack(thresh))[:, None]
-                    ) & np.isfinite(S)
-                    ri, ci = np.nonzero(head)  # row-major: ri ascending
-                    ex_all = _ord_pair_dots(Q[ri], cand[ci])
-                    starts = np.searchsorted(
-                        ri, np.arange(len(qids) + 1)
-                    )
-                    qs, ns, cs = [], [], []
-                    for i, qid in enumerate(qids):
-                        s0, s1 = starts[i], starts[i + 1]
-                        idx, ex = ci[s0:s1], ex_all[s0:s1]
-                        sel = np.lexsort((cand_ids[idx], -ex))[:kk]
-                        top = idx[sel]
-                        qs.append(np.full(len(top), qid, dtype=np.int64))
-                        ns.append(cand_ids[top])
-                        cs.append(ex[sel])
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.concatenate(qs),
-                            "neighbor_id": np.concatenate(ns),
-                            "cos": np.concatenate(cs),
-                        }
-                    )
+                    yield block(qids, Q, cand_ids, cand, Q @ cand.T)
 
-        return topk
+        return blocks
 
-    part_schema = "query_id bigint, neighbor_id bigint, cos double"
-    tile_of = F.pmod(F.xxhash64("vec_id"), F.lit(n_tiles))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
+    out = None
+    try:
+        for t in range(n_tiles):
+            tile = emb
+            if n_tiles > 1:
+                tile = emb.where(
+                    F.pmod(F.xxhash64("vec_id"), F.lit(n_tiles)) == t
+                )
+            tbl = tile.toArrow()
+            ids = np.asarray(tbl.column("vec_id").to_numpy(), dtype=np.int64)
+            if len(ids) == 0:
+                # n_rows is the parquet FOOTER count while tiles draw
+                # from the filtered/canonicalized set — a tile can be
+                # empty (heavy dup-id collapse, NULL filter), and a
+                # (0,)-shaped candidate matrix would crash the GEMM.
+                continue
+            mat = np.array(
+                tbl.column("embedding").to_pylist(), dtype=np.float64
+            )
+            order = np.argsort(ids)
+            bc = spark.sparkContext.broadcast((ids[order], mat[order]))
+            part = emb.mapInPandas(scan(bc), schema)
+            if n_tiles == 1:
+                return part  # lazy: the broadcast lives with the plan
+            try:
+                out = merge(out, part)
+            finally:
+                bc.destroy()
+    finally:
+        if n_tiles > 1:
+            emb.unpersist()
+    return out if out is not None else spark.createDataFrame([], schema)
+
+
+def _knn_block(qids, Q, cand_ids, cand, S, k: int) -> pd.DataFrame:
+    """kNN block function for :func:`_tile_scan`: each query's top-k
+    neighbors in the tile under (cos DESC, neighbor_id ASC), itself
+    excluded, ranked 1..k in ``nn_rank``.
+
+    No full N-sort per query: the vectorized k-th largest BLAS value
+    bounds each query's head, and every true top-k member is within
+    ``_slack`` of it even under BLAS position jitter. Only the head's
+    dots are recomputed with the exact fold, in ONE call per block, and
+    rank and emitted ``cos`` use only the recomputed values — the same
+    output as a full fold sort, at BLAS bulk speed."""
+    import numpy as np
+
+    n = len(cand_ids)
+    # Self-exclusion via binary search on the sorted id axis — O(log n)
+    # per query, not an n-length mask.
+    pos = np.searchsorted(cand_ids, qids)
+    hit = (pos < n) & (cand_ids[np.minimum(pos, n - 1)] == qids)
+    S[np.flatnonzero(hit), pos[hit]] = -np.inf
+    # k ≤ n: np.partition(S, n - k) needs a valid kth on a tiny tile.
+    k = min(k, n)
+    thresh = np.partition(S, n - k, axis=1)[:, n - k]
+    # isfinite drops the -inf self slot, which would otherwise pass
+    # `-inf >= -inf` when a whole row is self-excluded (n == 1).
+    head = (S >= (thresh - _slack(thresh))[:, None]) & np.isfinite(S)
+    ri, ci = np.nonzero(head)
+    ex = _ord_pair_dots(Q[ri], cand[ci])
+    order = np.lexsort((cand_ids[ci], -ex, ri))
+    ri, ci, ex = ri[order], ci[order], ex[order]
+    rank = np.arange(len(ri)) - np.searchsorted(ri, ri)
+    keep = rank < k
+    return pd.DataFrame(
+        {
+            "query_id": qids[ri[keep]],
+            "neighbor_id": cand_ids[ci[keep]],
+            "nn_rank": rank[keep].astype(np.int32) + 1,
+            "cos": ex[keep],
+        }
     )
-    running = None
-    for t in range(n_tiles):
-        tbl = emb.where(tile_of == t).toArrow()
-        ids = np.asarray(tbl.column("vec_id").to_numpy(), dtype=np.int64)
-        if len(ids) == 0:
-            # n_tiles derives from the parquet FOOTER count while tiles
-            # draw from the filtered/canonicalized set — a tile can be
-            # legitimately empty (heavy dup-id collapse, NULL filter),
-            # and a (0,)-shaped candidate matrix would crash the GEMM.
-            continue
-        mat = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
-        order = np.argsort(ids)
-        bc = spark.sparkContext.broadcast((ids[order], mat[order]))
-        partial = emb.mapInPandas(tile_kernel(bc), part_schema)
-        merged = (
-            partial
-            if running is None
-            else running.unionByName(partial)
-        )
-        # Materialize the running best-k NOW so exactly one tile
-        # broadcast is ever live and lineage stays O(1) across tiles.
-        running = (
-            merged.withColumn("rn__", F.row_number().over(w))
-            .where(F.col("rn__") <= k)
-            .drop("rn__")
-            .localCheckpoint(eager=True)
-        )
-        bc.destroy()
-    # The running best-k is checkpointed — emb's lineage is no longer
-    # referenced by anything this function returns.
-    emb.unpersist()
-    if running is None:  # every tile empty — no candidates exist
-        return spark.createDataFrame(
-            [],
-            "query_id bigint, neighbor_id bigint, nn_rank int,"
-            " cosine double",
-        )
-    return running.withColumn("nn_rank", F.row_number().over(w)).select(
-        "query_id",
-        "neighbor_id",
-        "nn_rank",
-        round_sane("cos", 6).alias("cosine"),
+
+
+def _near_dup_block(qids, Q, cand_ids, cand, S, threshold: float):
+    """Near-dup block function for :func:`_tile_scan`: every pair
+    (vec_a < vec_b) whose fold cosine is ≥ ``threshold``. The pair
+    surfaces only from the tile holding vec_b, when vec_a streams past
+    it, so each unordered pair is emitted exactly once. The slack mask
+    keeps every pair BLAS jitter could move across the threshold; the
+    pair set above it is sparse, so the fold recompute is O(pairs)."""
+    import numpy as np
+
+    qi, ci = np.nonzero(
+        (S >= threshold - _slack(threshold))
+        & (qids[:, None] < cand_ids[None, :])
+    )
+    ex = _ord_pair_dots(Q[qi], cand[ci])
+    keep = ex >= threshold
+    return pd.DataFrame(
+        {"vec_a": qids[qi][keep], "vec_b": cand_ids[ci][keep], "cos": ex[keep]}
     )
 
 
@@ -1129,114 +996,39 @@ def llm_knn_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full kNN self-join: top-5 cosine neighbors for EVERY vector (the
     compute-bound BASELINE.md row: 2 k × 2 k × 64-d at sf0.1).
 
-    This is the vectorized-Python fast path: the candidate matrix
-    (N×64 doubles — ~1 MB at sf0.1) is broadcast to every task as a
-    numpy array, and queries stream through ``mapInPandas`` computing a
-    blocked float64 matmul + per-row top-5 selection. That turns 4 M
-    scalar dot-product expressions into a handful of BLAS calls —
-    measured ~20× faster than the expression-tree formulation at sf0.1
-    and faster than the DuckDB envelope.
+    Vectorized-Python exact kernel (:func:`_tile_scan` +
+    :func:`_knn_block`): the candidate matrix (N×64 doubles — ~1 MB at
+    sf0.1) is broadcast to every task as a numpy array, and queries
+    stream through ``mapInPandas`` computing a blocked float64 matmul +
+    per-row top-5 selection. That turns 4 M scalar dot-product
+    expressions into a handful of BLAS calls — measured ~20× faster
+    than the expression-tree formulation at sf0.1 and faster than the
+    DuckDB envelope.
 
-    Scale: O(N²·d) stays O(N²·d) — the broadcast side must fit in
-    executor memory (fine to ~10⁶×10³ dims). The bound is ENFORCED in
-    code: above ``_KNN_BROADCAST_MAX_ROWS`` the operator switches to
-    the exact tiled path (:func:`_knn_self_join_tiled`) — same kernel,
-    one ≤100 MB corpus tile broadcast at a time — instead of collecting
-    the whole corpus to the driver."""
-    import numpy as np
+    Scale: above ``_KNN_TILE_ROWS`` the corpus is never collected
+    whole: it is scanned one ≤100 MB tile broadcast at a time, and a
+    running best-5 merges the tiles through one bounded window (N·5
+    rows, re-checkpointed per tile). Rounding happens once, after the
+    final merge — per-tile rounding could flip near-tie order vs the
+    oracle's unrounded sort. Exact tiling replaced a BRP-LSH
+    ``approxSimilarityJoin`` that was degenerate on unit vectors (one
+    scalar projection per table put ~everything in a handful of
+    buckets, enumerating ~N² candidate pairs); users who want
+    sub-quadratic search use llm_sim_search_ann / _ivf."""
+    emb = load_embeddings(spark, sf_dir).select("vec_id", "embedding")
 
-    # whole-NULL embeddings survive the scan doctrine but can neither
-    # neighbor nor be neighbored — excluded on BOTH dispatch paths (the
-    # numpy kernels cannot hold them), mirrored in the oracle.
-    emb = (
-        load_embeddings(spark, sf_dir)
-        .where(F.col("embedding").isNotNull())
-        .select("vec_id", "embedding")
+    def keep_best(best, part):
+        both = part if best is None else best.unionByName(part)
+        return _top_k(both).localCheckpoint(eager=True)
+
+    best = _tile_scan(
+        emb,
+        table_row_count(sf_dir, "embeddings"),
+        partial(_knn_block, k=5),
+        "query_id bigint, neighbor_id bigint, nn_rank int, cos double",
+        keep_best,
     )
-    n_rows = table_row_count(sf_dir, "embeddings")
-    if n_rows > _KNN_BROADCAST_MAX_ROWS:
-        return _knn_self_join_tiled(spark, emb, n_rows, k=5)
-    tbl = emb.toArrow()  # aggregate-then-broadcast side data (§4.2)
-    ids = np.asarray(tbl.column("vec_id").to_numpy(), dtype=np.int64)
-    mat = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
-    order = np.argsort(ids)
-    ids, mat = ids[order], mat[order]
-    bc = spark.sparkContext.broadcast((ids, mat))
-
-    def topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cand_ids, cand = bc.value
-        n = len(cand_ids)
-        # Row-blocked GEMM (the semdedup kernel's memory gate): a full
-        # Arrow batch against all N candidates materializes B×N
-        # float64 similarities — ~16 GB per task at N = 200k — so the
-        # block size caps the matrix at ~_KNN_BLOCK_ELEMS floats.
-        blk = max(1, _KNN_BLOCK_ELEMS // max(n, 1))
-        for pdf in batches:
-            for lo in range(0, len(pdf), blk):
-                sub = pdf.iloc[lo : lo + blk]
-                if not len(sub):
-                    continue
-                Q = np.stack(sub["embedding"].values).astype(np.float64)
-                S = Q @ cand.T  # blk×N cosines, BLAS bulk pass
-                qids = sub["vec_id"].to_numpy(dtype=np.int64)
-                # Self-exclusion via binary search on the sorted id
-                # axis — O(log n) per query, not an N-length mask.
-                pos = np.searchsorted(cand_ids, qids)
-                hit = (pos < n) & (cand_ids[np.minimum(pos, n - 1)] == qids)
-                S[np.flatnonzero(hit), pos[hit]] = -np.inf
-                # Exact top-5 under (cos DESC, id ASC) without a full
-                # N-sort per query: the vectorized 5th-largest value
-                # bounds the candidate head (every true top-5 member
-                # is ≥ it even under BLAS position jitter — _TIE_EPS
-                # slack, see _ord_dots), the head's dots are
-                # recomputed order-fixed, and rank + emitted cosine
-                # use ONLY the recomputed values — identical output to
-                # a full order-fixed sort at BLAS bulk speed.
-                # k = min(5, n): for a 1-2 row corpus np.partition(S,
-                # n-5) would raise kth-out-of-bounds, and padding the
-                # id column to 5 against shorter neighbor lists would
-                # yield ragged columns — clamp both to the corpus size.
-                k = min(5, n)
-                thresh = np.partition(S, n - k, axis=1)[:, n - k]
-                # Batched head recompute (r13 verdict: the per-row
-                # variant paid one broadcast_to + kernel dispatch per
-                # query row): gather ALL eps-slack head pairs of the
-                # block and fold them in ONE _ord_pair_dots call.
-                # isfinite drops the -inf self-slot, which would
-                # otherwise pass `-inf >= -inf` when the whole row is
-                # self-excluded (n == 1 corpus).
-                head = (
-                    S >= (thresh - _slack(thresh))[:, None]
-                ) & np.isfinite(S)
-                ri, ci = np.nonzero(head)  # row-major: ri ascending
-                ex_all = _ord_pair_dots(Q[ri], cand[ci])
-                starts = np.searchsorted(ri, np.arange(len(qids) + 1))
-                qs, ns, rs, cs = [], [], [], []
-                for i, qid in enumerate(qids):
-                    s0, s1 = starts[i], starts[i + 1]
-                    idx, ex = ci[s0:s1], ex_all[s0:s1]
-                    sel = np.lexsort((cand_ids[idx], -ex))[:k]
-                    top = idx[sel]
-                    qs.append(np.full(len(top), qid, dtype=np.int64))
-                    ns.append(cand_ids[top])
-                    rs.append(np.arange(1, len(top) + 1, dtype=np.int32))
-                    cs.append(ex[sel])
-                c = np.concatenate(cs)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(qs),
-                        "neighbor_id": np.concatenate(ns),
-                        "nn_rank": np.concatenate(rs),
-                        # np.round perturbs ulps at huge magnitude just
-                        # like DuckDB's round — same guard as round_sane
-                        "cosine": np.where(np.abs(c) < 1e9, np.round(c, 6), c),
-                    }
-                )
-
-    schema = (
-        "query_id bigint, neighbor_id bigint, nn_rank int, cosine double"
-    )
-    return emb.mapInPandas(topk, schema)
+    return _cosine_rows(best)
 
 
 def sim_search_ivf_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1317,17 +1109,7 @@ def sim_search_ivf_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         _dot(F.col("qe"), F.col("e")).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    ann = (
-        pairs.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "nn_rank",
-            round_sane("cos", 6).alias("cosine"),
-        )
-    )
+    ann = _cosine_rows(_top_k(pairs))
     # Self-evidencing recall, same contract as llm_sim_search_ann.
     return _exact_topk_evidence(ann, emb, F.col("vec_id") < 10)
 
@@ -1833,10 +1615,10 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # skewed cluster. Past the bound, compute the SAME per-row
         # first-qualifying-column scan in row blocks — each block
         # materializes only block×n similarities, so peak memory is
-        # capped at ~_SEMDEDUP_BLOCK_ELEMS floats regardless of
+        # capped at ~_GEMM_BLOCK_ELEMS floats regardless of
         # cluster size, and the output is bit-identical to the
         # one-shot kernel (_ord_dots is block-independent).
-        block = max(1, _SEMDEDUP_BLOCK_ELEMS // max(n, 1))
+        block = max(1, _GEMM_BLOCK_ELEMS // max(n, 1))
         qmin = np.full(n, np.nan)
         for lo in range(0, n, block):
             hi = min(lo + block, n)

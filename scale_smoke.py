@@ -1343,9 +1343,9 @@ def vectors_section(spark) -> dict:
     the sf0.1 corpus (25 k / 250 k synthesized vectors — the text
     kernels got this treatment in the x100 section; round-8 verdict
     task 5 extends it to vectors). 250 k crosses BOTH code-enforced
-    scale gates — llm_knn_self_join's _KNN_BROADCAST_MAX_ROWS (200 k →
-    exact tiled GEMM) and llm_dedup_embed's _DEDUP_EMBED_MAX_ROWS
-    (20 k → SRP band join), and exercises the ANN starved-query exact
+    scale gates — llm_knn_self_join's _KNN_TILE_ROWS (200 k → several
+    exact GEMM tiles) and llm_dedup_embed's _DEDUP_EMBED_MAX_ROWS
+    (20 k → exact tiled pair scan at its 0.45 threshold), and exercises the ANN starved-query exact
     fallback above the index envelope. Assertions: recall floors from
     the planted-duplicate arithmetic, ANN/IVF self-evidenced recall_ok,
     and step ratios — sub-quadratic (<35, the x100 bound) for every

@@ -303,62 +303,78 @@ def test_kll_sketch_quantile_tolerance(spark, duck, sf_dir):
             assert lo <= v <= hi, (flag, q, v, lo, hi)
 
 
+def _rows(df):
+    return sorted(tuple(map(str, r)) for r in df.collect())
+
+
 def test_knn_self_join_scale_guard(spark, sf_dir, monkeypatch):
-    """Above _KNN_BROADCAST_MAX_ROWS the kNN self-join must NOT collect
-    the whole corpus to the driver — it switches to the exact tiled
-    path (one bounded tile broadcast at a time). Force the guard and
-    check the fallback's recall@5 vs the single-broadcast path (exact
-    tiling ⇒ recall 1.0)."""
+    """Above _KNN_TILE_ROWS the kNN self-join must NOT collect the
+    whole corpus to the driver — it scans one bounded tile broadcast at
+    a time and merges a running best-5. Tiling is exact, so forced to
+    several tiles the output must equal the single-tile result row for
+    row, cosines included."""
+    from pymapreduce_spark.io import table_row_count
     from pymapreduce_spark.operators import llm_vector
     from pymapreduce_spark.registry import QUERIES
 
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in QUERIES["llm_knn_self_join"](spark, sf_dir).collect()
-    }
-    monkeypatch.setattr(llm_vector, "_KNN_BROADCAST_MAX_ROWS", 0)
-    approx_rows = QUERIES["llm_knn_self_join"](spark, sf_dir).collect()
-    approx = {(r.query_id, r.neighbor_id) for r in approx_rows}
-
-    n_queries = len({q for q, _ in exact})
-    assert len({q for q, _ in approx}) == n_queries  # every query answered
-    per_q: dict = {}
-    for q, _ in approx:
-        per_q[q] = per_q.get(q, 0) + 1
-    assert all(v == 5 for v in per_q.values())  # exactly k rows per query
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.9, f"LSH fallback recall@5 too low: {recall:.3f}"
+    one_tile = _rows(QUERIES["llm_knn_self_join"](spark, sf_dir))
+    n = table_row_count(sf_dir, "embeddings")
+    monkeypatch.setattr(llm_vector, "_KNN_TILE_ROWS", -(-n // 3))
+    assert _rows(QUERIES["llm_knn_self_join"](spark, sf_dir)) == one_tile
+    assert len(one_tile) == 5 * n
 
 
 def test_dedup_embed_scale_guard(spark, sf_dir, monkeypatch):
     """Above _DEDUP_EMBED_MAX_ROWS the near-dup pair search must never
     run the single-node O(N^2) pair join. At this op's 0.45 threshold
     the dispatcher picks the exact tiled pair scan (banding can't
-    amplify inside the random-cosine noise band), so the fallback must
-    recover the exact pair set completely — recall 1.0, zero false
-    positives."""
+    amplify inside the random-cosine noise band), so forced past the
+    gate AND over several tiles it must return the pair join's output
+    row for row, cosines included."""
+    from pymapreduce_spark.io import table_row_count
     from pymapreduce_spark.operators import llm_vector
     from pymapreduce_spark.registry import QUERIES
 
-    exact = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in QUERIES["llm_dedup_embed"](spark, sf_dir).collect()
-    }
+    exact = _rows(QUERIES["llm_dedup_embed"](spark, sf_dir))
+    n = table_row_count(sf_dir, "embeddings")
     monkeypatch.setattr(llm_vector, "_DEDUP_EMBED_MAX_ROWS", 0)
-    approx = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in QUERIES["llm_dedup_embed"](spark, sf_dir).collect()
-    }
-    assert set(approx) <= set(exact)  # no false positives
-    recall = len(approx) / max(len(exact), 1)
-    assert recall >= 0.9, f"LSH dedup recall too low: {recall:.3f}"
-    for k, v in approx.items():
-        assert abs(v - exact[k]) < 1e-5, (k, v, exact[k])
+    monkeypatch.setattr(llm_vector, "_KNN_TILE_ROWS", -(-n // 3))
+    assert _rows(QUERIES["llm_dedup_embed"](spark, sf_dir)) == exact
+    assert exact  # the fixture has pairs above 0.45
+
+
+def test_knn_self_join_construction_jobs(spark, sf_dir, monkeypatch):
+    """Building llm_knn_self_join runs only the tile scan's eager side
+    jobs. A single-tile corpus runs exactly one, the tile fetch, and
+    persists nothing: no cache, merge window or checkpoint. A forced 3-tile build runs,
+    per tile, one fetch and one checkpoint of the running best-5, whose
+    window shuffle runs as its own job under AQE: 3 jobs per tile."""
+    from pymapreduce_spark.io import table_row_count
+    from pymapreduce_spark.operators import llm_vector
+
+    sc = spark.sparkContext
+    llm_vector.load_embeddings(spark, sf_dir)  # warm the canonicalization memo
+
+    def build_jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            llm_vector.llm_knn_self_join(spark, sf_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    cached = sc._jsc.getPersistentRDDs().size()
+    assert build_jobs("knn-build-one-tile") == 1
+    assert sc._jsc.getPersistentRDDs().size() == cached  # nothing persisted
+    n = table_row_count(sf_dir, "embeddings")
+    monkeypatch.setattr(llm_vector, "_KNN_TILE_ROWS", -(-n // 3))
+    assert build_jobs("knn-build-three-tiles") == 3 * 3
 
 
 def test_semdedup_blocked_gemm_matches_oneshot(spark, sf_dir, monkeypatch):
     """A skewed cluster must not materialize an n×n similarity matrix:
-    past _SEMDEDUP_BLOCK_ELEMS the pair kernel switches to row-blocked
+    past _GEMM_BLOCK_ELEMS the pair kernel switches to row-blocked
     GEMMs. Force every fixture cluster over the bound and require the
     blocked path's output to be IDENTICAL to the one-shot GEMM."""
     from pymapreduce_spark.operators import llm_vector
@@ -368,7 +384,7 @@ def test_semdedup_blocked_gemm_matches_oneshot(spark, sf_dir, monkeypatch):
         tuple(r) for r in QUERIES["llm_semdedup"](spark, sf_dir).collect()
     )
     # block = max(1, 4 // n) = 1 for any real cluster → fully blocked
-    monkeypatch.setattr(llm_vector, "_SEMDEDUP_BLOCK_ELEMS", 4)
+    monkeypatch.setattr(llm_vector, "_GEMM_BLOCK_ELEMS", 4)
     blocked = sorted(
         tuple(r) for r in QUERIES["llm_semdedup"](spark, sf_dir).collect()
     )
@@ -475,24 +491,20 @@ def test_vocab_broadcast_gate(spark, sf_dir, monkeypatch):
 
 
 def test_knn_tiled_path_matches_exact(spark, sf_dir, monkeypatch):
-    """The above-broadcast-bound kNN path is EXACT tiling, not an
-    approximation: forced to 4 tiles on the fixture corpus it must
-    reproduce the registered op's broadcast-kernel result row for row
-    (same tie-break, same rounding)."""
+    """The tile scan is EXACT, not an approximation: forced to 4 tiles
+    AND to GEMM row blocks of 7 queries, the kNN self-join must
+    reproduce its single-tile, single-block result row for row (same
+    tie-break, same rounding) — neither tile nor block boundaries may
+    move a neighbor or a cosine."""
+    from pymapreduce_spark.io import table_row_count
     from pymapreduce_spark.operators import llm_vector as lv
 
-    exact = {
-        tuple(map(str, r))
-        for r in lv.llm_knn_self_join(spark, sf_dir).collect()
-    }
-    emb = lv.load_embeddings(spark, sf_dir).select("vec_id", "embedding")
-    n = emb.count()
-    monkeypatch.setattr(lv, "_KNN_TILE_ROWS", max(1, n // 4))
-    tiled = {
-        tuple(map(str, r))
-        for r in lv._knn_self_join_tiled(spark, emb, n, k=5).collect()
-    }
-    assert tiled == exact
+    exact = _rows(lv.llm_knn_self_join(spark, sf_dir))
+    n = table_row_count(sf_dir, "embeddings")
+    tile_rows = max(1, n // 4)
+    monkeypatch.setattr(lv, "_KNN_TILE_ROWS", tile_rows)
+    monkeypatch.setattr(lv, "_GEMM_BLOCK_ELEMS", 7 * tile_rows)
+    assert _rows(lv.llm_knn_self_join(spark, sf_dir)) == exact
 
 
 def test_dedup_embed_srp_precision_and_exact_dup_recall(spark, sf_dir):
@@ -554,40 +566,43 @@ def test_srp_params_engineering_envelope():
         assert low_bands > lv._SRP_MAX_BANDS, (n, low_bands)
 
 
-def test_tiled_paths_tolerate_empty_tiles(spark, sf_dir):
+def test_tiled_paths_tolerate_empty_tiles(spark, sf_dir, tmp_path, monkeypatch):
     """n_tiles derives from the parquet FOOTER count while tiles draw
     from the filtered/canonicalized set — a tile can be empty (heavy
-    dup-id collapse, NULL filters). A 20-row subset spread over 50
-    tiles guarantees ~30 empty ones: both tiled kernels must skip them
-    and still match their single-tile (exact) result."""
+    dup-id collapse, NULL filters). A 20-row corpus hashed over 20
+    tiles leaves several empty: both tile-scan operators must skip
+    them and still match their single-tile (exact) result."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from pymapreduce_spark.io import table_path
     from pymapreduce_spark.operators import llm_vector as lv
 
-    emb = (
-        lv.load_embeddings(spark, sf_dir)
-        .where(F.col("embedding").isNotNull() & (F.col("vec_id") < 20))
-        .select("vec_id", "embedding")
+    # 20 vectors holding some of the fixture's >= 0.45 pairs, so the
+    # near-dup scan has pairs to find
+    pairs = lv.llm_dedup_embed(spark, sf_dir).orderBy("vec_a", "vec_b")
+    ids = sorted({v for r in pairs.limit(4).collect() for v in r[:2]})
+    full = pq.read_table(table_path(sf_dir, "embeddings"))
+    ids += [
+        v for v in sorted(full.column("vec_id").to_pylist()) if v not in ids
+    ][: 20 - len(ids)]
+    small = full.filter(pc.is_in(full.column("vec_id"), pa.array(ids)))
+    pq.write_table(small, str(tmp_path / "embeddings.parquet"))
+    small_dir = str(tmp_path)
+    n_hit = (
+        spark.createDataFrame([(v,) for v in ids], "vec_id bigint")
+        .select(F.pmod(F.xxhash64("vec_id"), F.lit(20)).alias("t"))
+        .distinct()
+        .count()
     )
-    one_tile = {
-        tuple(map(str, r))
-        for r in lv._knn_self_join_tiled(spark, emb, n_rows=20, k=5).collect()
-    }
-    many_tiles = {
-        tuple(map(str, r))
-        for r in lv._knn_self_join_tiled(
-            spark, emb, n_rows=10_000_000, k=5
-        ).collect()
-    }
-    assert many_tiles == one_tile and len(one_tile) == 20 * 5
+    assert n_hit < 20  # some of the 20 tiles are empty
 
-    embd = emb.select("vec_id", lv._as_double("embedding").alias("e"))
-    one = {
-        (r.vec_a, r.vec_b)
-        for r in lv._dedup_embed_pairs_tiled(embd, 0.0, n_rows=20).collect()
-    }
-    many = {
-        (r.vec_a, r.vec_b)
-        for r in lv._dedup_embed_pairs_tiled(
-            embd, 0.0, n_rows=10_000_000
-        ).collect()
-    }
-    assert many == one and len(one) > 0
+    one_knn = _rows(lv.llm_knn_self_join(spark, small_dir))
+    one_dup = _rows(lv.llm_dedup_embed(spark, small_dir))
+    monkeypatch.setattr(lv, "_KNN_TILE_ROWS", 1)
+    monkeypatch.setattr(lv, "_DEDUP_EMBED_MAX_ROWS", 0)
+    assert _rows(lv.llm_knn_self_join(spark, small_dir)) == one_knn
+    assert len(one_knn) == 20 * 5
+    assert _rows(lv.llm_dedup_embed(spark, small_dir)) == one_dup
+    assert one_dup
