@@ -11,7 +11,7 @@ transitive closure over the identical edge set.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pymapreduce_spark.io import table_row_count
@@ -89,9 +89,10 @@ def connected_components(
         rounds += 1
         # Three propagation steps per materialized round: the dominant
         # cost at small-to-mid label-table sizes is the FIXED per-round
-        # overhead (checkpoint job + convergence job), so batching
-        # steps into one lazy plan before materializing cut wall-clock
-        # ~2× at sf0.1 (measured: 7 rounds/3.9 s → 3 rounds/1.8 s).
+        # job overhead, so batching steps into one lazy plan before
+        # materializing cut wall-clock ~2× at sf0.1 (measured with a
+        # separate convergence job per round: 7 rounds/3.9 s → 3
+        # rounds/1.8 s).
         stepped = labels
         for _prop in range(3):
             # min over (self ∪ neighborhood) in ONE aggregate: the label
@@ -115,21 +116,24 @@ def connected_components(
         parents = stepped.select(
             F.col("node").alias("p_node"), F.col("label").alias("p_label")
         )
+        # Labels only ever decrease, so Σ label is strictly monotone:
+        # an unchanged sum ⟺ a fixed point — convergence with no compare
+        # join, observed on the rows the checkpoint job writes anyway
+        # (no second job per round). Summed in DECIMAL(38,0): node ids
+        # span the full int64 range (hash-minted ids at ±Long.MAX — the
+        # extreme_ids axis), where a bigint Σ overflows ANSI; 38 digits
+        # holds 10¹⁹ ids × 10¹⁹ nodes exactly, and the sum is
+        # driver-side only.
+        obs = Observation()
         jumped = (
             stepped.join(parents, stepped.label == F.col("p_node"))
             .select("node", F.col("p_label").alias("label"))
+            .observe(
+                obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+            )
             .localCheckpoint(eager=True)
         )
-        # Labels only ever decrease, so Σ label is strictly monotone:
-        # an unchanged sum ⟺ a fixed point — convergence in one cheap
-        # aggregate over the just-checkpointed table, no compare join.
-        # Summed in DECIMAL(38,0): node ids span the full int64 range
-        # (hash-minted ids at ±Long.MAX — the extreme_ids axis), where
-        # a bigint Σ overflows ANSI; 38 digits holds 10¹⁹ ids × 10¹⁹
-        # nodes exactly, and the sum is driver-side only.
-        cur_sum = jumped.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]
+        cur_sum = obs.get["s"]
         labels = jumped
         if cur_sum == prev_sum:
             converged = True
@@ -521,15 +525,15 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("dst").alias("node"),
                     (F.col("dist") + 1).alias("dist"))
         )
+        obs = Observation()
         dist = (
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
+            .observe(obs, F.count("*").alias("n"), F.sum("dist").alias("s"))
             .localCheckpoint(eager=True)
         )
-        cur = dist.agg(
-            F.count("*").alias("n"), F.sum("dist").alias("s")
-        ).first()
+        cur = obs.get
         key = (cur["n"], cur["s"])
         if key == prev_sum:
             break

@@ -5,6 +5,8 @@ pushdown into the parquet scan, and top-k without a global sort."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import pymapreduce_spark  # noqa: F401
@@ -365,6 +367,59 @@ def test_bloom_prefilter_before_semi_join(spark, sf_dir):
     total = load_table(spark, sf_dir, "lineitem").count()
     kept = QUERIES["join_bloom"](spark, sf_dir).agg({"n_items": "sum"}).collect()[0][0]
     assert kept < 0.12 * total, (kept, total)
+
+
+def test_bloom_bitmap_literal_round_trips_every_word(spark):
+    """The one-call bitmap literal carries any 64-bit word exactly:
+    bit 63 alone (Long.MIN_VALUE), all bits (-1), none (0) and
+    Long.MAX_VALUE."""
+    from pymapreduce_spark.operators.scale import bigint_array_sql
+
+    words = [-(2**63), -1, 0, 2**63 - 1, 1]
+    got = spark.range(1).selectExpr(f"{bigint_array_sql(words)} AS a").first()["a"]
+    assert got == words
+
+
+def test_bloom_bitmap_is_a_folded_literal(spark, sf_dir):
+    """The bitmap reaches the optimized plan as ONE constant array
+    (1024 words) in each probe, not as a split of a string or an array
+    constructor evaluated per row."""
+    import re
+
+    df = QUERIES["join_bloom"](spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "split(" not in plan and "array(" not in plan, plan[:2000]
+    folded = re.findall(r"element_at\(\[(?:-?\d+,){1023}-?\d+\]", plan)
+    assert len(folded) >= 3, plan[:2000]
+
+
+def test_bloom_empty_dimension_matches_oracle(spark, sf_dir, tmp_path):
+    """No urgent 1997 order: the bitmap is all zeros, every lineitem row
+    fails the probe, and the result is the oracle's empty one."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from pymapreduce_spark.io import TABLES, table_path
+    from pymapreduce_spark.registry import ORACLES
+    from pymapreduce_spark.testing import compare_frames, make_duckdb
+
+    for name in TABLES:
+        if name != "orders":
+            os.symlink(table_path(sf_dir, name), table_path(str(tmp_path), name))
+    orders = pq.read_table(table_path(sf_dir, "orders"))
+    i = orders.schema.get_field_index("o_orderpriority")
+    prio = pc.replace_substring(orders["o_orderpriority"], "1-URGENT", "2-HIGH")
+    pq.write_table(
+        orders.set_column(i, "o_orderpriority", prio),
+        table_path(str(tmp_path), "orders"),
+    )
+    df = QUERIES["join_bloom"](spark, str(tmp_path))
+    assert df.count() == 0
+    duck = make_duckdb(str(tmp_path))
+    try:
+        compare_frames("join_bloom", df, duck, ORACLES["join_bloom"], min_rows=0)
+    finally:
+        duck.close()
 
 
 def test_sketch_quantiles_single_scan_one_exchange(spark, sf_dir):

@@ -35,22 +35,18 @@ def main() -> None:
     k = 3
     orders = load_table(spark, SF_DIR, "orders")
     dim = orders.where(
-        (F.col("o_orderpriority") == "1-URGENT")
-        & (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
+        "o_orderpriority = '1-URGENT'"
+        " AND o_orderdate >= CAST('1997-01-01' AS TIMESTAMP)"
+        " AND o_orderdate < CAST('1998-01-01' AS TIMESTAMP)"
     ).select("o_orderkey")
-    positions = [
-        F.pmod(F.xxhash64(F.col("o_orderkey"), F.lit(i)), F.lit(n_bits))
-        for i in range(k)
-    ]
+    positions = ", ".join(
+        f"pmod(xxhash64(o_orderkey, {i}), {n_bits})" for i in range(k)
+    )
     words = (
-        dim.select(F.explode(F.array(*positions)).alias("pos"))
-        .groupBy(F.floor(F.col("pos") / 64).cast("int").alias("word"))
-        .agg(
-            F.bit_or(
-                F.expr("shiftleft(1L, cast(pmod(pos, 64) as int))")
-            ).alias("bits")
-        )
+        dim.selectExpr(f"explode(array({positions})) AS pos")
+        .groupBy(F.expr("cast(floor(pos / 64) AS int)").alias("word"))
+        .agg(F.expr("bit_or(shiftleft(1L, cast(pmod(pos, 64) AS int)))")
+             .alias("bits"))
     )
     explain_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
     plan = words._jdf.queryExecution().explainString(
