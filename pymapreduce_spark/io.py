@@ -15,12 +15,16 @@ import contextlib
 import os
 import shutil
 import tempfile
+import threading
 import zlib
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pymapreduce_spark.session import ensure_runtime_configs
+
+T = TypeVar("T")
 
 #: All fixture tables (TESTDATA.md / FIXTURES.md).
 TABLES = (
@@ -43,7 +47,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: only split parquet at row-group boundaries — so every scan of the big
 #: tables is a single task no matter how many cores the executor has.
 #: Tables at or above _SPLIT_MIN_BYTES are re-laid-out once per sf into a
-#: multi-file copy under .artifacts/<sf>/split/ sized ~_SPLIT_TARGET_BYTES
+#: multi-file copy under .artifacts/<sf>-<hash>/split/ sized ~_SPLIT_TARGET_BYTES
 #: per file; all queries then scan in parallel. This is the local-mode
 #: mirror of what a 100 TB ingest does anyway (write splittable,
 #: right-sized files); at real scale the source layout already has many
@@ -65,13 +69,14 @@ _SPLIT_MAX_FILES = 16
 #: overhead.
 _WORK_MULTIPLIER = {"documents": 12, "embeddings": 8}
 _ARTIFACTS_DIR = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".artifacts")
+_MARKER = "_READY"
+_SOURCE = "_SOURCE"
 
-# DataFrame catalog: fixtures are immutable, so the analyzed relation
-# (file listing + parquet footer schema) is reused per session. Saves
-# ~0.1-0.3 s of re-listing/footer reads on EVERY query. Keyed by the
-# Spark applicationId (unique per context — unlike id(spark), which can
-# be reused after GC and would serve plans bound to a dead session).
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# The fixture-identity memo: (kind, source paths[, applicationId]) ->
+# (stamp, value). See fixture_memo.
+_MEMO: dict[tuple, tuple[str, object]] = {}
+_MEMO_LOCK = threading.Lock()
+_BUILD_LOCKS: dict[str, threading.Lock] = {}
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -79,15 +84,23 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def fixture_stamp(path: str) -> str:
-    """Identity stamp for a fixture file, used to key every derived-data
-    cache (split layout, partitioned copy, streaming replay, scratch
-    JSONL, semdedup probe memo). ``size:mtime_ns`` alone is spoofable by
+    """Identity stamp for a fixture file: the one key of every derived
+    artifact and memo in the engine. Nothing outside this module calls
+    it; derived data goes through :func:`derived_artifact` (split
+    layout, partitioned copy, streaming replay dir, scratch JSONL/CSV)
+    or :func:`fixture_memo` (loaded tables, bucketed catalog tables,
+    footer row counts, the embeddings canonicalization gate, the
+    semdedup probe), both keyed by the absolute source path plus this
+    stamp. ``size:mtime_ns`` alone is spoofable by
     an mtime-preserving restore (``cp -p`` / ``tar -x`` / LFS checkout)
     that happens to match the old size — so the stamp also folds in the
     inode and a CRC of the file's head+tail 64 KiB (the parquet footer
     lives in the tail, so schema/row-group changes always land there;
-    data edits almost always move the size). Raises OSError when the
-    path is unreadable — callers decide their own fallback."""
+    data edits almost always move the size). A directory table folds in
+    the size, mtime and inode of every file under it, since rewriting a
+    part file in place leaves the directory's own stat unchanged.
+    Raises OSError when the path is unreadable — callers decide their
+    own fallback."""
     st = os.stat(path)
     crc = 0
     if os.path.isfile(path):
@@ -96,7 +109,134 @@ def fixture_stamp(path: str) -> str:
             if st.st_size > 131072:
                 fh.seek(-65536, os.SEEK_END)
             crc = zlib.crc32(fh.read(65536), crc)
+    elif os.path.isdir(path):
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for f in sorted(files):
+                fs = os.stat(os.path.join(root, f))
+                entry = f"{root}/{f}:{fs.st_size}:{fs.st_mtime_ns}:{fs.st_ino}"
+                crc = zlib.crc32(entry.encode(), crc)
     return f"{st.st_size}:{st.st_mtime_ns}:i{st.st_ino}:c{crc:08x}"
+
+
+def _sources(sf_dir: str, tables) -> tuple[tuple[str, ...], str]:
+    """(absolute paths, combined stamp) of a fixture dir's tables."""
+    paths = tuple(os.path.abspath(table_path(sf_dir, t)) for t in tables)
+    return paths, "|".join(fixture_stamp(p) for p in paths)
+
+
+def fixture_memo(
+    kind: str,
+    sf_dir: str,
+    tables,
+    compute: Callable[[], T],
+    spark: SparkSession | None = None,
+) -> T:
+    """In-process memo of ``compute()`` for data derived from fixture
+    ``tables`` of ``sf_dir``. One entry per (kind, absolute source
+    paths), plus the applicationId when ``spark`` is given — pass it
+    when the value is bound to a Spark context (a DataFrame, catalog
+    tables), never for plain driver-side data. The entry holds the
+    sources' :func:`fixture_stamp`; a new stamp recomputes and replaces
+    the old entry, so a fixture rewritten in place is never served
+    stale and the memo stays bounded.
+
+    ``compute`` runs outside the lock: a concurrent warm-up never waits
+    behind another op's Spark job (two first callers may both compute;
+    the last store wins). A raising ``compute`` stores nothing. An
+    unreadable source skips the memo."""
+    try:
+        paths, stamp = _sources(sf_dir, tables)
+    except OSError:
+        return compute()
+    app = spark.sparkContext.applicationId if spark is not None else None
+    key = (kind, paths, app)
+    with _MEMO_LOCK:
+        hit = _MEMO.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    value = compute()
+    with _MEMO_LOCK:
+        _MEMO[key] = (stamp, value)
+    return value
+
+
+def artifact_path(sf_dir: str, *parts: str) -> str:
+    """On-disk home of data derived from ``sf_dir``:
+    ``.artifacts/<basename>-<hash of the absolute path>/<parts>``. The
+    hash keeps two fixture dirs that share a basename apart."""
+    src = os.path.abspath(sf_dir)
+    tag = f"{os.path.basename(src) or 'sf'}-{zlib.crc32(src.encode()):08x}"
+    root = os.path.join(_ARTIFACTS_DIR, tag)
+    if not os.path.isdir(root):
+        _new_root(root, src)
+    return os.path.join(root, *parts)
+
+
+def _new_root(root: str, src: str) -> None:
+    """Create an artifact root that records its source dir, and delete
+    the roots of source dirs that no longer exist: every temporary
+    fixture (each test run's copies) gets a root of its own, which
+    would otherwise outlive it."""
+    with contextlib.suppress(OSError):
+        for tag in os.listdir(_ARTIFACTS_DIR):
+            old = os.path.join(_ARTIFACTS_DIR, tag)
+            recorded = _read_marker(os.path.join(old, _SOURCE))
+            if recorded and not os.path.isdir(recorded):
+                shutil.rmtree(old, ignore_errors=True)
+    with contextlib.suppress(OSError):
+        os.makedirs(root, exist_ok=True)
+        _write_atomic(os.path.join(root, _SOURCE), src)
+
+
+def _read_marker(marker: str) -> str | None:
+    try:
+        with open(marker) as fh:
+            return fh.read()
+    except OSError:
+        return None
+
+
+def _write_atomic(path: str, text: str) -> None:
+    """Write via rename, so a concurrent reader never sees a partial
+    file."""
+    tmp = f"{path}.{os.getpid()}.{threading.get_ident()}.tmp"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
+def derived_artifact(
+    sf_dir: str,
+    name: str,
+    tables,
+    build: Callable[[str], None],
+    version: str = "",
+) -> str:
+    """Directory ``artifact_path(sf_dir, name)`` holding ``build(path)``'s
+    output for the current stamps of the source ``tables`` (plus
+    ``version``, for a layout change the sources cannot show). A marker
+    file in the directory records the stamp it was built for; any other
+    stamp rebuilds. Builders hold a per-path lock, and the marker is
+    written only after ``build`` returns, so no caller sees a half-built
+    directory as ready and a raising build leaves no marker. Raises
+    OSError when a source is unreadable or the directory unwritable."""
+    path = artifact_path(sf_dir, name)
+    marker = os.path.join(path, _MARKER)
+    stamp = "|".join([_sources(sf_dir, tables)[1], version])
+    if _read_marker(marker) == stamp:
+        return path
+    with _MEMO_LOCK:
+        lock = _BUILD_LOCKS.setdefault(path, threading.Lock())
+    with lock:
+        if _read_marker(marker) == stamp:
+            return path
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(marker)
+        os.makedirs(path, exist_ok=True)
+        build(path)
+        _write_atomic(marker, stamp)
+    return path
 
 
 def _fix_events(df: DataFrame) -> DataFrame:
@@ -140,42 +280,35 @@ def _split_layout(spark: SparkSession, sf_dir: str, name: str) -> str | None:
     or the cache directory is unusable."""
     raw = table_path(sf_dir, name)
     try:
-        size = os.path.getsize(raw)
+        eff_size = os.path.getsize(raw) * _WORK_MULTIPLIER.get(name, 1)
     except OSError:
         return None
-    eff_size = size * _WORK_MULTIPLIER.get(name, 1)
     if eff_size < _SPLIT_MIN_BYTES:
         return None
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join(_ARTIFACTS_DIR, sf_tag, "split", name)
-    marker = os.path.join(path, "_SPLIT_READY")
-    # The marker is keyed to the raw file's identity (fixture_stamp:
-    # size + mtime + inode + head/tail CRC) AND the target layout
-    # (n_files): a regenerated fixture at the same path OR a re-tuned
-    # split sizing invalidates the cached copy instead of silently
-    # serving stale data (the events ts re-encoding already forced the
-    # same versioning on the streaming replay dir).
     n_files = max(2, min(_SPLIT_MAX_FILES, eff_size // _SPLIT_TARGET_BYTES))
-    try:
-        stamp = f"{fixture_stamp(raw)}:n{n_files}"
-    except OSError:
-        return None
-    try:
-        with open(marker) as fh:
-            if fh.read().strip() == stamp:
-                return path
-    except OSError:
-        pass
-    try:
+
+    def build(path: str) -> None:
         df = spark.read.parquet(raw)
         if name == "events":
             df = _fix_events(df)  # cache the normalized timestamps
         df.repartition(n_files).write.mode("overwrite").parquet(path)
-        with open(marker, "w") as fh:
-            fh.write(stamp)
+
+    # n_files is part of the key: a re-tuned split sizing invalidates
+    # the copy just as a regenerated fixture does
+    try:
+        return derived_artifact(
+            sf_dir, os.path.join("split", name), (name,), build, f"n{n_files}"
+        )
     except Exception:  # pragma: no cover - read-only FS etc.
         return None
-    return path
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    split = _split_layout(spark, sf_dir, name)
+    df = spark.read.parquet(split or table_path(sf_dir, name))
+    if name == "events":
+        df = _fix_events(df)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -185,9 +318,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Catalyst gets real column types for pushdown/pruning. Only ``events``
     needs post-read normalization. Large single-row-group fixture files
     are served from the split-layout cache (see :data:`_SPLIT_MIN_BYTES`)
-    so scans parallelize.
+    so scans parallelize. The analyzed relation (file listing + footer
+    schema) is memoized per session and fixture stamp, saving
+    ~0.1-0.3 s of re-listing per query; a fixture rewritten in place
+    gets a fresh read instead of the stale file index.
     """
-    # Heal BEFORE the cache check: the self-heal contract is per-QUERY,
+    # Heal BEFORE the memo lookup: the self-heal contract is per-QUERY,
     # and a query whose every load_table is a cache hit must still get
     # it. Round-8 clock axis catch: with the heal on the miss path
     # only, a hostile session timezone set between queries survived
@@ -197,16 +333,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # single-query runs all passed, which is exactly the signature of
     # an ordering-dependent defect).
     ensure_runtime_configs(spark)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    split = _split_layout(spark, sf_dir, name)
-    df = spark.read.parquet(split or table_path(sf_dir, name))
-    if name == "events":
-        df = _fix_events(df)
-    _TABLE_CACHE[key] = df
-    return df
+    return fixture_memo(
+        "table",
+        sf_dir,
+        (name,),
+        lambda: _read_table(spark, sf_dir, name),
+        spark=spark,
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
@@ -238,9 +371,9 @@ def partitioned_table(
 ) -> DataFrame:
     """Hive-partitioned copy of a fixture table (directory per
     ``part_col`` value, computed by ``part_expr``), materialized once
-    under ``.artifacts/<sf>/part/`` and keyed to the raw file's identity
-    (:func:`fixture_stamp`) exactly like the split cache — a regenerated
-    fixture invalidates the copy instead of serving stale data.
+    per fixture stamp by :func:`derived_artifact` exactly like the split
+    cache — a regenerated fixture invalidates the copy instead of
+    serving stale data.
 
     This is the layout a 100 TB lake already has (date-partitioned
     directories); materializing it locally lets partition-pruning
@@ -249,41 +382,27 @@ def partitioned_table(
     Falls back to the unpartitioned table (with ``part_col`` appended)
     when the artifacts dir is unwritable — results stay identical, only
     the pruning physics is lost."""
-    raw = table_path(sf_dir, name)
     fallback = load_table(spark, sf_dir, name).withColumn(
         part_col, part_expr
     )
-    try:
-        src_stamp = fixture_stamp(raw)
-    except OSError:
-        return fallback
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join(
-        _ARTIFACTS_DIR, sf_tag, "part", f"{name}_by_{part_col}"
-    )
-    marker = os.path.join(path, "_PART_READY")
-    # Stamp includes a fingerprint of the partition EXPRESSION, not just
-    # the source file: a caller that redefines part_expr (say year ->
-    # year*100+month) under the same table/part_col name must invalidate
-    # the cached layout — the same staleness class the split cache's
-    # :n{n_files} component guards against.
+    # The key includes a fingerprint of the partition EXPRESSION, not
+    # just the source file: a caller that redefines part_expr (say year
+    # -> year*100+month) under the same table/part_col name must
+    # invalidate the cached layout.
     try:
         expr_fp = str(part_expr._jc)
     except Exception:
         expr_fp = str(part_expr)
-    stamp = f"{src_stamp}:e{zlib.crc32(expr_fp.encode()):08x}"
     try:
-        with open(marker) as fh:
-            if fh.read().strip() == stamp:
-                return read_back(spark, path, fallback.schema)
-    except OSError:
-        pass
-    try:
-        fallback.write.partitionBy(part_col).mode("overwrite").parquet(
-            path
+        path = derived_artifact(
+            sf_dir,
+            os.path.join("part", f"{name}_by_{part_col}"),
+            (name,),
+            lambda p: fallback.write.partitionBy(part_col)
+            .mode("overwrite")
+            .parquet(p),
+            f"e{zlib.crc32(expr_fp.encode()):08x}",
         )
-        with open(marker, "w") as fh:
-            fh.write(stamp)
     except Exception:  # pragma: no cover - read-only FS etc.
         return fallback
     # schema-explicit (read_back): an empty source writes a partitioned
@@ -310,8 +429,7 @@ def stable_scratch(sf_dir: str, name: str) -> str:
     runs (the interleaved A/B pattern holds exactly one result from
     each arm), and the footprint stays bounded at ≤2 epochs instead of
     an unmanaged mkdtemp per call."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    base = os.path.join(_ARTIFACTS_DIR, sf_tag, "scratch", name)
+    base = artifact_path(sf_dir, "scratch", name)
     try:
         os.makedirs(base, exist_ok=True)
         epochs = sorted(
@@ -348,17 +466,22 @@ def scratch_dir(prefix: str = "pmr_"):
 
 def table_row_count(sf_dir: str, name: str) -> int:
     """Exact row count of a fixture table from the parquet footer — no
-    Spark job. Used by operator scale guards (e.g. the kNN broadcast
-    bound) where only the corpus size matters, not the data."""
-    import pyarrow.parquet as pq
+    Spark job, and memoized per fixture stamp. Used by operator scale
+    guards (e.g. the kNN tile gate) where only the corpus size matters,
+    not the data."""
 
-    path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        # Real tables are DIRECTORIES of part files (possibly hive-
-        # partitioned); ParquetFile only opens a single file. The
-        # dataset API counts rows from footer metadata across the
-        # whole tree without reading data.
-        import pyarrow.dataset as pads
+    def count() -> int:
+        import pyarrow.parquet as pq
 
-        return pads.dataset(path, format="parquet").count_rows()
-    return pq.ParquetFile(path).metadata.num_rows
+        path = table_path(sf_dir, name)
+        if os.path.isdir(path):
+            # Real tables are DIRECTORIES of part files (possibly hive-
+            # partitioned); ParquetFile only opens a single file. The
+            # dataset API counts rows from footer metadata across the
+            # whole tree without reading data.
+            import pyarrow.dataset as pads
+
+            return pads.dataset(path, format="parquet").count_rows()
+        return pq.ParquetFile(path).metadata.num_rows
+
+    return fixture_memo("row_count", sf_dir, (name,), count)

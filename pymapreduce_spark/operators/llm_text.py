@@ -44,30 +44,6 @@ _COOC_MAX_DOC_VOCAB = 10_000
 #: back to whatever AQE picks from the aggregate's ACTUAL runtime size.
 _VOCAB_BROADCAST_MAX_DOCS = 2_000_000
 
-#: documents-table path -> (fixture_stamp, row count). The gate below
-#: runs at every plan build (llm_word_cooccurrence calls it twice), and
-#: a footer walk per call is repeated I/O for an immutable fixture
-#: property — same stamp-keyed memo pattern as _semdedup_probe.
-_VOCAB_COUNT_MEMO: dict[str, tuple[str, int]] = {}
-
-
-def _documents_count(sf_dir: str) -> int:
-    from pymapreduce_spark.io import fixture_stamp, table_path
-
-    path = table_path(sf_dir, "documents")
-    try:
-        stamp = fixture_stamp(path)
-    except OSError:
-        stamp = None
-    hit = _VOCAB_COUNT_MEMO.get(path)
-    if stamp is not None and hit is not None and hit[0] == stamp:
-        return hit[1]
-    n = table_row_count(sf_dir, "documents")
-    if stamp is not None:
-        _VOCAB_COUNT_MEMO[path] = (stamp, n)
-    return n
-
-
 def _vocab_broadcast(df: DataFrame, sf_dir: str) -> DataFrame:
     """Broadcast-hint a vocabulary-cardinality relation only when the
     corpus is provably small enough that its vocabulary must be too.
@@ -84,7 +60,7 @@ def _vocab_broadcast(df: DataFrame, sf_dir: str) -> DataFrame:
     from the aggregate output's measured shuffle size — broadcast when
     genuinely small, shuffle join when not.
     """
-    if _documents_count(sf_dir) <= _VOCAB_BROADCAST_MAX_DOCS:
+    if table_row_count(sf_dir, "documents") <= _VOCAB_BROADCAST_MAX_DOCS:
         return F.broadcast(df)
     return df
 

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pymapreduce_spark.functions.checked import round_sane
-from pymapreduce_spark.io import load_table, table_row_count
+from pymapreduce_spark.io import fixture_memo, load_table, table_row_count
 from pymapreduce_spark.registry import query
 
 
@@ -217,7 +217,7 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's defined semantics, not an optional cleanup). Every vector
     operator loads through this."""
     wf = load_table(spark, sf_dir, "embeddings").where(_well_formed())
-    if not _needs_canonicalization(spark, sf_dir, wf):
+    if not _needs_canonicalization(sf_dir, wf):
         return wf
     w = Window.partitionBy("vec_id").orderBy(
         F.asc_nulls_last("embedding"), F.asc_nulls_last("label")
@@ -229,31 +229,24 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) -> whether the embeddings table needs the
-#: per-vec_id canonicalization window. Purely an optimization memo: the
-#: window is a no-op on unique non-NULL ids, so skipping it never
-#: changes results — and the gate condition count(*) != count_distinct
-#: (vec_id) is TRUE whenever any id duplicates OR any id is NULL
-#: (count(*) counts NULL rows, count_distinct doesn't), the two cases
-#: where the window does real work. One column-pruned scan + global
-#: aggregate per session per dataset; a production store with
-#: ingest-enforced unique ids never pays the window at all.
-_CANON_MEMO: dict[tuple[str, str], bool] = {}
+def _needs_canonicalization(sf_dir: str, wf: DataFrame) -> bool:
+    """Whether the embeddings table needs the per-vec_id canonicalization
+    window. Skipping the window never changes results: it is a no-op on
+    unique non-NULL ids, and count(*) != count_distinct(vec_id) is TRUE
+    whenever any id duplicates OR any id is NULL (count(*) counts NULL
+    rows, count_distinct doesn't), the two cases where the window does
+    real work. One column-pruned scan + global aggregate per fixture
+    stamp; a production store with ingest-enforced unique ids never
+    pays the window at all."""
 
-
-def _needs_canonicalization(spark, sf_dir: str, wf: DataFrame) -> bool:
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    need = _CANON_MEMO.get(key)
-    if need is None:
+    def compute() -> bool:
         row = wf.agg(
             F.count("*").alias("n"),
             F.count_distinct("vec_id").alias("d"),
         ).first()
-        need = row["n"] != row["d"]
-        _CANON_MEMO[key] = need
-    return need
+        return row["n"] != row["d"]
+
+    return fixture_memo("canonicalization", sf_dir, ("embeddings",), compute)
 
 
 def _queries(emb: DataFrame, pred, *carry) -> DataFrame:
@@ -1382,30 +1375,11 @@ def llm_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: path → (io.fixture_stamp, (approx distinct-vector count, seed rows)):
-#: the semdedup collapse-gate probe and the 8-row seed collect each
-#: cost one Spark job, so they run ONCE per fixture version and
-#: repeated invocations (bench median-of-3, the differential suite)
-#: hit the memo — the same file-identity stamp the split/partition
-#: caches key on (size/mtime/inode/content-CRC, so an mtime-preserving
-#: restore of a same-size fixture still invalidates), and keeping only
-#: the LATEST entry per path bounds the memo across a long session.
-#: Only driver-side side data is memoized, never executor work.
-_SEMDEDUP_PROBE_MEMO: dict[str, tuple[str, tuple]] = {}
-
-
-def _semdedup_probe(spark, sf_dir: str, full: DataFrame) -> tuple:
-    from pymapreduce_spark.io import fixture_stamp, table_path
-
-    path = table_path(sf_dir, "embeddings")
-    try:
-        stamp = fixture_stamp(path)
-    except OSError:
-        stamp = None
-    if stamp is not None:
-        hit = _SEMDEDUP_PROBE_MEMO.get(path)
-        if hit is not None and hit[0] == stamp:
-            return hit[1]
+def _semdedup_probe(full: DataFrame) -> tuple:
+    """(approx distinct-vector count, seed rows): the semdedup
+    collapse-gate probe and the 8-row seed collect, one Spark job each.
+    Memoized per fixture stamp by the caller, so repeated invocations
+    (bench median-of-3, the differential suite) skip both jobs."""
     n = full.agg(F.approx_count_distinct("v").alias("d")).first()["d"]
     seeds = sorted(
         [
@@ -1413,8 +1387,6 @@ def _semdedup_probe(spark, sf_dir: str, full: DataFrame) -> tuple:
             for r in full.where(F.col("vec_id") < 8).collect()
         ]
     )
-    if stamp is not None:
-        _SEMDEDUP_PROBE_MEMO[path] = (stamp, (n, seeds))
     return n, seeds
 
 
@@ -1494,7 +1466,9 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groupBy(vec_id) shape paid an 8× row fan-out plus a full-table
     # shuffle for what is a per-row fold; the interleaved A/B that
     # motivated this fusion is recorded in README §scale.
-    n_uniq, seed_rows = _semdedup_probe(spark, sf_dir, full)
+    n_uniq, seed_rows = fixture_memo(
+        "semdedup_probe", sf_dir, ("embeddings",), lambda: _semdedup_probe(full)
+    )
     if not seed_rows:
         # No quantizer seeds (corpus has no vec_id < 8, e.g. the empty
         # fixture): the oracle's CROSS JOIN with an empty seed set

@@ -15,16 +15,14 @@ deployment leans on, demonstrated as oracle-checked queries.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pymapreduce_spark.functions.checked import cents, epoch_micros
-from pymapreduce_spark.io import load_table
+from pymapreduce_spark.io import artifact_path, fixture_memo, load_table
 from pymapreduce_spark.registry import query
-
-_ARTIFACTS = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".artifacts")
-_BUCKETED_READY: set[tuple[int, str]] = set()
 
 
 @query(
@@ -60,31 +58,34 @@ def agg_salted_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Create (once per session+sf) bucketed copies of orders/lineitem,
-    bucketed AND sorted by the join key, stored under .artifacts."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    t_orders = f"orders_bucketed_{sf_tag}"
-    t_lineitem = f"lineitem_bucketed_{sf_tag}"
-    key = (id(spark), sf_tag)
-    if key in _BUCKETED_READY:
+    """Create (once per session and fixture stamp) bucketed copies of
+    orders/lineitem, bucketed AND sorted by the join key, stored under
+    the fixture dir's artifact dir, whose name also names the tables."""
+    base = artifact_path(sf_dir)
+    tag = re.sub(r"\W", "_", os.path.basename(base))
+    t_orders = f"orders_bucketed_{tag}"
+    t_lineitem = f"lineitem_bucketed_{tag}"
+
+    def build() -> tuple[str, str]:
+        for tbl, src, col in (
+            (t_orders, "orders", "o_orderkey"),
+            (t_lineitem, "lineitem", "l_orderkey"),
+        ):
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            (
+                load_table(spark, sf_dir, src)
+                .write.mode("overwrite")
+                .format("parquet")
+                .option("path", os.path.join(base, tbl))
+                .bucketBy(8, col)
+                .sortBy(col)
+                .saveAsTable(tbl)
+            )
         return t_orders, t_lineitem
-    base = os.path.join(_ARTIFACTS, sf_tag)
-    for tbl, src, col in (
-        (t_orders, "orders", "o_orderkey"),
-        (t_lineitem, "lineitem", "l_orderkey"),
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (
-            load_table(spark, sf_dir, src)
-            .write.mode("overwrite")
-            .format("parquet")
-            .option("path", os.path.join(base, tbl))
-            .bucketBy(8, col)
-            .sortBy(col)
-            .saveAsTable(tbl)
-        )
-    _BUCKETED_READY.add(key)
-    return t_orders, t_lineitem
+
+    return fixture_memo(
+        "bucketed", sf_dir, ("orders", "lineitem"), build, spark=spark
+    )
 
 
 @query(

@@ -3,7 +3,8 @@
 CSV/JSONL/text scans have no fixture files, so each query derives its
 input deterministically from a parquet fixture (write → read back), which
 makes the oracle simply the originating table. Scratch files live under
-``<repo>/.artifacts/`` (gitignored) — never outside the repo.
+the fixture dir's artifact dir (``io.artifact_path``, gitignored) —
+never outside the repo.
 
 Scale notes: all reads go through the DataSource V2 file readers —
 splittable, schema-explicit (no inference job on 100 TB of JSON), and
@@ -18,15 +19,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pymapreduce_spark.io import load_table, read_back
+from pymapreduce_spark.io import (
+    artifact_path,
+    derived_artifact,
+    load_table,
+    read_back,
+)
 from pymapreduce_spark.registry import query
-
-_ARTIFACTS = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".artifacts")
 
 
 def _scratch(sf_dir: str, name: str) -> str:
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(_ARTIFACTS, sf_tag, name)
+    return artifact_path(sf_dir, name)
 
 
 @query(
@@ -384,36 +387,17 @@ def scan_jsonl_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of failing the job (the only sane posture for 100 TB of
     scraped JSON). Returns good/corrupt counts; asserted in tests and
     against the derived-count oracle."""
-    import os as _os
+    import json as _json
 
-    path = _scratch(sf_dir, "permissive_jsonl")
-    _os.makedirs(path, exist_ok=True)
-    fpath = _os.path.join(path, "data.jsonl")
-    # Stamp the scratch file with the source fixture's identity — a
+    # Derived from the documents fixture and keyed to its identity — a
     # fixture rebuilt in place (adversarial axes, regenerated testdata)
     # must regenerate the derived JSONL or the counts go stale against
     # the oracle's live count(*).
-    src = _os.path.join(sf_dir, "documents.parquet")
-    try:
-        from pymapreduce_spark.io import fixture_stamp
-
-        stamp = fixture_stamp(src)
-    except OSError:
-        stamp = "no-source"
-    marker = fpath + ".stamp"
-    fresh = False
-    try:
-        with open(marker) as fh:
-            fresh = fh.read().strip() == stamp
-    except OSError:
-        pass
-    if not (fresh and _os.path.exists(fpath)):
+    def build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "lang"
         ).limit(20).collect()
-        import json as _json
-
-        with open(fpath, "w") as fh:
+        with open(os.path.join(path, "data.jsonl"), "w") as fh:
             for r in docs:
                 # json.dumps, not an f-string: a NULL doc_id must render
                 # as JSON null, not Python's "None" (which silently
@@ -425,8 +409,11 @@ def scan_jsonl_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write("{broken json\n")
             fh.write('{"doc_id": "not_a_number", "lang": 7}\n')
             fh.write("[1,2,3\n")
-        with open(marker, "w") as fh:
-            fh.write(stamp)
+
+    fpath = os.path.join(
+        derived_artifact(sf_dir, "permissive_jsonl", ("documents",), build),
+        "data.jsonl",
+    )
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -925,26 +912,8 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics; single-line records only, which the writer guarantees
     (numeric-only rendering, no embedded newlines)."""
     import math as _math
-    import os as _os
 
-    path = _scratch(sf_dir, "malformed_csv")
-    _os.makedirs(path, exist_ok=True)
-    fpath = _os.path.join(path, "data.csv")
-    src = _os.path.join(sf_dir, "supplier.parquet")
-    try:
-        from pymapreduce_spark.io import fixture_stamp
-
-        stamp = fixture_stamp(src)
-    except OSError:
-        stamp = "no-source"
-    marker = fpath + ".stamp"
-    fresh = False
-    try:
-        with open(marker) as fh:
-            fresh = fh.read().strip() == stamp
-    except OSError:
-        pass
-    if not (fresh and _os.path.exists(fpath)):
+    def build(path: str) -> None:
         rows = (
             load_table(spark, sf_dir, "supplier")
             .select("s_suppkey", "s_nationkey", "s_acctbal")
@@ -959,7 +928,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 return ""  # no usable magnitude — NULL, never "nan"
             return repr(v)
 
-        with open(fpath, "w") as fh:
+        with open(os.path.join(path, "data.csv"), "w") as fh:
             for r in rows:
                 fh.write(
                     f"{cell(r.s_suppkey)},{cell(r.s_nationkey)},"
@@ -970,8 +939,11 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write("902,4,3.14,surplus,again\n")  # over-arity  → +314
             fh.write('903,"unterminated,6.50\n')  # bad quote; bal lost
             fh.write("904,5,6.50,extra\n")  # over-arity      → +650
-        with open(marker, "w") as fh:
-            fh.write(stamp)
+
+    fpath = os.path.join(
+        derived_artifact(sf_dir, "malformed_csv", ("supplier",), build),
+        "data.csv",
+    )
     ddl = "k bigint, nat bigint, bal double, _corrupt_record string"
     parsed = (
         spark.read.text(fpath)

@@ -20,18 +20,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pymapreduce_spark.io import TABLES, load_table
 from pymapreduce_spark.registry import query
 
-_REGISTERED: set[tuple[str, str]] = set()
-
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Publish all fixture tables as temp views (idempotent per
-    (session, sf_dir); re-registration is cheap but skipped anyway)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _REGISTERED:
-        return
+    """Publish all fixture tables of ``sf_dir`` as temp views. Runs on
+    every call: the view names are shared by every fixture dir, so a
+    "registered already" memo would leave them on the last dir
+    registered (A, then B, then A would query B)."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _REGISTERED.add(key)
 
 
 def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:

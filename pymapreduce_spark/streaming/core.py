@@ -26,16 +26,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pymapreduce_spark.io import (
+    derived_artifact,
     load_table,
     read_back,
-    table_path,
     table_row_count,
 )
 from pymapreduce_spark.registry import query
 
-_ARTIFACTS = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".artifacts"
-)
 _counter = itertools.count()
 
 #: Progress dicts of the most recently drained streaming query —
@@ -171,43 +168,22 @@ def stream_shuffle_width(spark: SparkSession):
 
 
 def replay_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per sf) the events replay directory: one parquet
-    file per day under day=YYYY-MM-DD/, timestamps already normalized."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join(_ARTIFACTS, sf_tag, "events_replay")
-    # v2: replay files written after the fixture moved ts to timestamp[us]
-    # (io._fix_events normalizes NTZ→LTZ before the replay copy is laid
-    # out). A v1 marker means the on-disk copy may carry NTZ timestamps,
-    # which withWatermark rejects — regenerate. v3: NULL event times are
-    # excluded from the replay (round-7 null-ts axis): the layout IS the
-    # event-time axis (one file per day, mod-time ordered), and a row
-    # with no event time has no day — it previously leaked into
+    """Materialize (once per fixture stamp) the events replay directory:
+    one parquet file per day under day=YYYY-MM-DD/, timestamps already
+    normalized."""
+    # The version names the replay layout, which the source stamp
+    # cannot show. v2: replay files written after the fixture moved ts
+    # to timestamp[us]. v3: NULL event times are excluded from the
+    # replay (round-7 null-ts axis): the layout IS the event-time axis
+    # (one file per day, mod-time ordered), and a row with no event time
+    # has no day — it previously leaked into
     # day=__HIVE_DEFAULT_PARTITION__ and replayed as a phantom LAST
-    # batch. Every stream op's oracle states the exclusion.
-    # v4: the engine's canonical ts type moved to TimestampNTZType
-    # (round-8 clock/timezone doctrine, io._fix_events) — replay copies
-    # written by earlier versions carry zoned timestamps; regenerate.
-    marker = os.path.join(path, "_REPLAY_READY_v4")
-    # The marker carries the SOURCE file's identity (io.fixture_stamp —
-    # size/mtime/inode/content-CRC): sf_tag is just a basename, so two
-    # different fixture dirs named `sf` would otherwise share one
-    # replay copy and the second would stream the first's events
-    # (caught by the combined-axis adversarial audit, whose rebuilt
-    # fixture silently replayed a prior rebuild's stream). The content
-    # CRC also defeats mtime-preserving restores (cp -p / tar -x).
-    from pymapreduce_spark.io import fixture_stamp
+    # batch. Every stream op's oracle states the exclusion. v4: the
+    # engine's canonical ts type moved to TimestampNTZType (round-8
+    # clock/timezone doctrine, io._fix_events) — replay copies written
+    # by earlier versions carry zoned timestamps; regenerate.
 
-    try:
-        stamp = fixture_stamp(table_path(sf_dir, "events"))
-    except OSError:
-        stamp = "nosource"
-    fresh = False
-    try:
-        with open(marker) as fh:
-            fresh = fh.read().strip() == stamp
-    except OSError:
-        pass
-    if not fresh:
+    def build(path: str) -> None:
         ev = (
             load_table(spark, sf_dir, "events")
             .where(F.col("ts").isNotNull())
@@ -228,9 +204,8 @@ def replay_dir(spark: SparkSession, sf_dir: str) -> str:
             full = os.path.join(path, d)
             for f in os.listdir(full):
                 os.utime(os.path.join(full, f), (base + i, base + i))
-        with open(marker, "w") as fh:
-            fh.write(stamp)
-    return path
+
+    return derived_artifact(sf_dir, "events_replay", ("events",), build, "v4")
 
 
 def _replay_schema(spark: SparkSession, sf_dir: str):
