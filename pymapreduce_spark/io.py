@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import re
 import shutil
 import tempfile
 import threading
@@ -71,12 +72,18 @@ _WORK_MULTIPLIER = {"documents": 12, "embeddings": 8}
 _ARTIFACTS_DIR = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".artifacts")
 _MARKER = "_READY"
 _SOURCE = "_SOURCE"
+#: The only root name artifact_path makes: ``<basename>-<8 hex>``.
+_ROOT_NAME = re.compile(r".+-[0-9a-f]{8}")
 
 # The fixture-identity memo: (kind, source paths[, applicationId]) ->
 # (stamp, value). See fixture_memo.
 _MEMO: dict[tuple, tuple[str, object]] = {}
 _MEMO_LOCK = threading.Lock()
 _BUILD_LOCKS: dict[str, threading.Lock] = {}
+# The last two stable_scratch epochs each thread got, by (scratch dir,
+# thread id). See stable_scratch.
+_SCRATCH_HELD: dict[tuple[str, int], tuple[str, ...]] = {}
+_SCRATCH_LOCK = threading.Lock()
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -177,13 +184,17 @@ def _new_root(root: str, src: str) -> None:
     """Create an artifact root that records its source dir, and delete
     the roots of source dirs that no longer exist: every temporary
     fixture (each test run's copies) gets a root of its own, which
-    would otherwise outlive it."""
+    would otherwise outlive it. Dirs of any other name (an older
+    layout) are deleted too; a root without ``_SOURCE`` yet is kept,
+    because a concurrent first caller may be creating it."""
     with contextlib.suppress(OSError):
         for tag in os.listdir(_ARTIFACTS_DIR):
             old = os.path.join(_ARTIFACTS_DIR, tag)
-            recorded = _read_marker(os.path.join(old, _SOURCE))
-            if recorded and not os.path.isdir(recorded):
-                shutil.rmtree(old, ignore_errors=True)
+            if _ROOT_NAME.fullmatch(tag):
+                recorded = _read_marker(os.path.join(old, _SOURCE))
+                if not recorded or os.path.isdir(recorded):
+                    continue
+            shutil.rmtree(old, ignore_errors=True)
     with contextlib.suppress(OSError):
         os.makedirs(root, exist_ok=True)
         _write_atomic(os.path.join(root, _SOURCE), src)
@@ -423,24 +434,35 @@ def stable_scratch(sf_dir: str, name: str) -> str:
     only the bounded-footprint property is lost.
 
     Versioned epochs: each invocation gets a fresh ``<name>/<epoch>``
-    subdirectory and older sibling epochs are deleted EXCEPT the most
-    recent one — so a DataFrame returned by the PREVIOUS invocation of
-    the same operator stays lazily readable while the new invocation
+    subdirectory, and sibling epochs are deleted EXCEPT the caller's
+    newest one and the two newest of every other thread of this
+    process — so a DataFrame returned by a thread's PREVIOUS invocation
+    of the same operator stays lazily readable while its new invocation
     runs (the interleaved A/B pattern holds exactly one result from
-    each arm), and the footprint stays bounded at ≤2 epochs instead of
-    an unmanaged mkdtemp per call."""
+    each arm), whichever threads call meanwhile, and the footprint
+    stays bounded at two epochs per calling thread instead of an
+    unmanaged mkdtemp per call."""
     base = artifact_path(sf_dir, "scratch", name)
     try:
-        os.makedirs(base, exist_ok=True)
-        epochs = sorted(
-            (e for e in os.listdir(base) if e.isdigit()), key=int
-        )
-        nxt = (int(epochs[-1]) + 1) if epochs else 0
-        # keep the newest prior epoch readable; drop everything older
-        for stale in epochs[:-1]:
-            shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
-        path = os.path.join(base, str(nxt))
-        os.makedirs(path, exist_ok=True)
+        with _SCRATCH_LOCK:
+            os.makedirs(base, exist_ok=True)
+            me = (base, threading.get_ident())
+            held = {
+                p
+                for key, paths in _SCRATCH_HELD.items()
+                if key[0] == base
+                for p in (paths[-1:] if key == me else paths)
+            }
+            epochs = sorted(
+                (int(e) for e in os.listdir(base) if e.isdigit())
+            )
+            for e in epochs:
+                old = os.path.join(base, str(e))
+                if old not in held:
+                    shutil.rmtree(old, ignore_errors=True)
+            path = os.path.join(base, str(epochs[-1] + 1 if epochs else 0))
+            os.makedirs(path, exist_ok=True)
+            _SCRATCH_HELD[me] = _SCRATCH_HELD.get(me, ())[-1:] + (path,)
     except OSError:
         return tempfile.mkdtemp(prefix=f"{name}_")
     return path

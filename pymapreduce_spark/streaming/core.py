@@ -18,12 +18,13 @@ stream length.
 
 from __future__ import annotations
 
-import contextlib
 import itertools
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from pymapreduce_spark.io import (
     derived_artifact,
@@ -34,17 +35,6 @@ from pymapreduce_spark.io import (
 from pymapreduce_spark.registry import query
 
 _counter = itertools.count()
-
-#: Progress dicts of the most recently drained streaming query —
-#: stateOperators carries numRowsTotal / memoryUsedBytes per stateful
-#: operator, which scale_smoke's state probe audits at 10×/100×.
-LAST_QUERY_PROGRESS: list = []
-#: Memory-sink temp view registered by the most recent drain() — lets an
-#: op whose drained RESULT is never read (state_audit reads the state
-#: store instead) drop the view so repeated bench/driver invocations
-#: don't accumulate full emission copies on the driver heap (r12 ADVICE
-#: #2).
-LAST_SINK_NAME: str | None = None
 
 #: Streaming stages cannot use AQE partition coalescing, so the static
 #: ``spark.sql.shuffle.partitions`` value IS the state-partition count
@@ -58,11 +48,23 @@ LAST_SINK_NAME: str | None = None
 #: partitioning). The width is derived from the replay's row count —
 #: one partition per ~25 k events, floor 4, capped at the session's
 #: configured shuffle width — so a 100× corpus derives the full
-#: configured width and nothing is tuned to local mode. Production
-#: overrides: SPARK_GRAFT_STREAM_PARTITIONS pins the width outright;
+#: configured width and nothing is tuned to local mode. The caller's
+#: session is narrowed only across ``start()`` (see :func:`_run`): the
+#: query keeps its own copy of the conf, so batch work after the start
+#: sees the session default again. Production overrides:
+#: SPARK_GRAFT_STREAM_PARTITIONS pins the width outright;
 #: SPARK_GRAFT_SHUFFLE_PARTITIONS raises the cap.
 _STREAM_ROWS_PER_PARTITION = 25_000
-_STREAM_PARTS_HINT: int | None = None
+
+_WIDTH_CONF = "spark.sql.shuffle.partitions"
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = (
+    "org.apache.spark.sql.execution.streaming."
+    "state.RocksDBStateStoreProvider"
+)
+#: Held while a query's start confs are set on the caller's session, so
+#: two concurrent starts never save each other's narrowed value.
+_START_LOCK = threading.Lock()
 
 #: Target events per micro-batch for drains whose RESULT is provably
 #: trigger-count-independent (r14, guide §2.2 "fewer, larger"): the
@@ -77,7 +79,6 @@ _STREAM_PARTS_HINT: int | None = None
 #: smoke's 100× corpus this derives ~31 files (≈1 replica span) per
 #: trigger, trigger count grows linearly with the stream length, and
 #: the state-flat checks hold (attested in the r14 streamstate run).
-#: SPARK_GRAFT_STREAM_MFPT pins the value outright.
 _STREAM_ROWS_PER_TRIGGER = 100_000
 
 
@@ -89,9 +90,6 @@ def derived_mfpt(spark: SparkSession, sf_dir: str) -> int:
     watermark, or update-mode emissions folded with a monotone
     aggregate): per-batch-emission contracts (stream_progress_audit,
     the per-batch drains) keep their pinned cadence."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_MFPT")
-    if env:
-        return max(1, int(env))
     try:
         # self-heal BEFORE touching replay_dir: callers evaluate this
         # in read_stream's argument list, so a first-ever replay
@@ -112,11 +110,11 @@ def derived_mfpt(spark: SparkSession, sf_dir: str) -> int:
         return 10
 
 
-def _set_stream_parts_hint(
-    spark: SparkSession, sf_dir: str, multi_trigger: bool
-) -> None:
-    """Derive the streaming shuffle width for this replay (see above);
-    consumed by the next :func:`stream_shuffle_width` scope.
+def _stream_width(sf_dir: str, multi_trigger: bool = True) -> int | None:
+    """The state width of a drain over this replay (see above), from
+    the replay's row count and whether the drain runs several triggers;
+    ``None`` keeps the session width. The session width caps it when
+    the query starts (:func:`_run` only narrows).
 
     Only MULTI-trigger drains (maxFilesPerTrigger set) narrow: the
     floor being amortized is per-trigger, so a single-data-trigger
@@ -124,47 +122,52 @@ def _set_stream_parts_hint(
     width for its one heavy stateful batch (measured r13: narrowing
     state_audit's single-trigger drain to 4 cost ~1-2 s of Python-fold
     parallelism at sf0.1 while winning nothing)."""
-    global _STREAM_PARTS_HINT
     try:
         env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
         if env:
-            _STREAM_PARTS_HINT = max(1, int(env))
-            return
+            return max(1, int(env))
         if not multi_trigger:
-            _STREAM_PARTS_HINT = None
-            return
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            return None
         n = table_row_count(sf_dir, "events")
-        _STREAM_PARTS_HINT = max(
-            4, min(cap, n // _STREAM_ROWS_PER_PARTITION)
-        )
+        return max(4, n // _STREAM_ROWS_PER_PARTITION)
     except Exception:  # pragma: no cover - footer unreadable etc.
-        _STREAM_PARTS_HINT = None
+        return None
 
 
-@contextlib.contextmanager
-def stream_shuffle_width(spark: SparkSession):
-    """Scope a streaming query start under the derived shuffle width,
-    restoring the session value afterwards. The width is captured by
-    the query AT START (checkpoint metadata pins numShufflePartitions
-    for the query's lifetime), so restoring after awaitTermination
-    never affects the stream — only subsequent batch queries, which
-    must see the session default again. Narrowing only: a hint wider
-    than the session value is ignored (the cap already applied)."""
-    key = "spark.sql.shuffle.partitions"
-    hint = _STREAM_PARTS_HINT
-    try:
-        old = spark.conf.get(key)
-    except Exception:  # pragma: no cover - conf unreadable
-        old = None
-    if hint is None or old is None or int(old) <= hint:
-        yield
-        return
-    spark.conf.set(key, str(hint))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+def _run(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    width: int | None = None,
+    provider: str | None = None,
+) -> StreamingQuery:
+    """The one place a streaming query starts: set the confs the query
+    takes at start on ``spark``, start it, restore them, then wait for
+    the query to finish.
+
+    ``start()`` copies the session conf into the query (its offset log
+    pins numShufflePartitions, and foreachBatch bodies run on the
+    copy), so the caller's session carries the narrowed width and the
+    state-store ``provider`` only while ``start()`` runs. Narrowing
+    only: a ``width`` wider than the session value is ignored. The
+    query stays on the caller's session, whose listeners see its
+    progress; a child session would hide it from them and drop the
+    caller's runtime confs."""
+    with _START_LOCK:
+        confs = {}
+        if width is not None and width < int(spark.conf.get(_WIDTH_CONF)):
+            confs[_WIDTH_CONF] = str(width)
+        if provider is not None:
+            confs[_PROVIDER_CONF] = provider
+        saved = {k: spark.conf.get(k) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            q = writer.start()
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+    q.awaitTermination()
+    return q
 
 
 def replay_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -237,9 +240,6 @@ def read_stream(spark: SparkSession, sf_dir: str, **options) -> DataFrame:
     # whatever session timezone the host left behind (round-8 clock
     # axis: buckets aligned to :45 under Asia/Kathmandu).
     ensure_runtime_configs(spark)
-    _set_stream_parts_hint(
-        spark, sf_dir, multi_trigger="maxFilesPerTrigger" in options
-    )
     path = replay_dir(spark, sf_dir)
     schema = _replay_schema(spark, sf_dir)
     reader = spark.readStream.schema(schema)
@@ -259,6 +259,8 @@ def drain(
     stream_df: DataFrame,
     output_mode: str = "complete",
     checkpoint: str | None = None,
+    width: int | None = None,
+    provider: str | None = None,
 ) -> DataFrame:
     """Run a finite stream to completion into a memory sink and return
     the resulting table as a batch DataFrame.
@@ -274,24 +276,13 @@ def drain(
     ``checkpoint``: explicit checkpointLocation — pass one when the
     caller reads the run's state back (spark.read.format("statestore")
     needs a durable checkpoint path; the default ephemeral one is
-    session-temp)."""
-    global LAST_QUERY_PROGRESS, LAST_SINK_NAME
-    spark_prev = stream_df.sparkSession
-    # Drop the PREVIOUS drain's memory-sink view before registering a
-    # new one (r13 ADVICE: the r12 fix was point-applied to state_audit
-    # only) — median-of-3 bench reruns otherwise stack full emission
-    # copies on the driver heap, one per drain, for the session's
-    # lifetime. Safe because every op drains at most once per call and
-    # callers consume the returned DataFrame before invoking another
-    # op; the view being dropped is never the one just returned.
-    if LAST_SINK_NAME is not None:
-        try:
-            spark_prev.catalog.dropTempView(LAST_SINK_NAME)
-        except Exception:  # pragma: no cover - already dropped
-            pass
-        LAST_SINK_NAME = None
+    session-temp). ``width`` and ``provider``: the state width and
+    state-store provider the query starts with (see :func:`_run`).
+
+    The sink's view is dropped before returning: the returned DataFrame
+    keeps the sink's rows alive, and nothing else in the session does."""
+    spark = stream_df.sparkSession
     name = f"stream_result_{next(_counter)}"
-    LAST_SINK_NAME = name
     w = (
         stream_df.writeStream.format("memory")
         .queryName(name)
@@ -300,15 +291,9 @@ def drain(
     )
     if checkpoint:
         w = w.option("checkpointLocation", checkpoint)
-    with stream_shuffle_width(stream_df.sparkSession):
-        q = w.start()
-        q.awaitTermination()
-    # Expose the finished run's progress (state-store metrics included)
-    # so diagnostics can audit the REGISTERED ops' state behavior
-    # without reconstructing their pipelines (round-9 verdict, task 4).
-    LAST_QUERY_PROGRESS = list(q.recentProgress or [])
-    spark = stream_df.sparkSession
+    _run(spark, w, width, provider)
     out = spark.table(name)
+    spark.catalog.dropTempView(name)
     zoned = [c for c, t in out.dtypes if t == "timestamp"]
     if zoned:
         out = out.withColumns(
@@ -345,7 +330,7 @@ def stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts").alias("min_ts"),
         F.max("ts").alias("max_ts"),
     )
-    return drain(agg, "complete")
+    return drain(agg, "complete", width=_stream_width(sf_dir))
 
 
 @query(
@@ -376,7 +361,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_events",
     )
-    return drain(out, "complete")
+    return drain(out, "complete", width=_stream_width(sf_dir))
 
 
 @query(
@@ -417,7 +402,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_events",
     )
-    return drain(out, "complete")
+    return drain(out, "complete", width=_stream_width(sf_dir))
 
 
 @query(
@@ -464,7 +449,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("session_window.end").alias("session_end"),
         "n_events",
     )
-    return drain(out, "complete")
+    return drain(out, "complete", width=_stream_width(sf_dir))
 
 
 @query(
@@ -516,7 +501,7 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("window.end").alias("window_end"),
         "n_events",
     )
-    emitted = drain(out, "append")
+    emitted = drain(out, "append", width=_stream_width(sf_dir))
     batch = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour"))
@@ -579,7 +564,11 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = doubled.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id", "ts", "event_type"]
     )
-    collected = drain(deduped.select("event_id", "event_type"), "append")
+    collected = drain(
+        deduped.select("event_id", "event_type"),
+        "append",
+        width=_stream_width(sf_dir),
+    )
     return collected.groupBy("event_type").agg(
         F.count("*").alias("n_unique")
     )
@@ -621,7 +610,7 @@ def stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("window_start"), "bm")
     )
-    drained = drain(per_bucket, "complete")
+    drained = drain(per_bucket, "complete", width=_stream_width(sf_dir))
     return drained.groupBy("window_start").agg(
         F.sum(F.expr("bitmap_count(bm)")).alias("n_users")
     )
@@ -652,7 +641,7 @@ def stream_join_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = enriched.groupBy("cohort_name", "event_type").agg(
         F.count("*").alias("n_events")
     )
-    return drain(agg, "complete")
+    return drain(agg, "complete", width=_stream_width(sf_dir))
 
 
 @query(
@@ -701,7 +690,7 @@ def stream_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (purchases.pts >= views.vts)
         & (purchases.pts < views.vts + F.expr("INTERVAL 10 MINUTES")),
     ).select(views.user_id, "view_id", "purchase_id")
-    pairs = drain(joined, "append")
+    pairs = drain(joined, "append", width=_stream_width(sf_dir))
     return pairs.groupBy("user_id").agg(F.count("*").alias("n_pairs"))
 
 
@@ -737,15 +726,12 @@ def stream_sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered = s.where(
         (F.col("event_type") == "purchase") & (F.col("value") > 200)
     ).select("event_id", "user_id", "value")
-    q = (
+    _run(
+        spark,
         filtered.writeStream.foreachBatch(write_batch)
         .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", sink_path + "_chk"
-        )
-        .start()
+        .option("checkpointLocation", sink_path + "_chk"),
     )
-    q.awaitTermination()
     # schema-explicit read-back: zero batches (empty source) leave no
     # part files — inference would crash on a legitimately quiet stream
     return read_back(spark, sink_path, filtered.schema)
@@ -814,7 +800,7 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    per_batch = drain(tracked, "update")
+    per_batch = drain(tracked, "update", width=_stream_width(sf_dir))
     # update-mode memory sink appends one row per (user, batch); the
     # final state per user is the row with the highest count (monotone).
     return per_batch.groupBy("user_id").agg(
@@ -1173,23 +1159,12 @@ def stream_stateful_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="eventTime",
         )
         # transformWithState requires the RocksDB state store provider
-        prov_key = "spark.sql.streaming.stateStore.providerClass"
-        try:
-            old = spark.conf.get(prov_key)
-        except Exception:
-            old = None
-        spark.conf.set(
-            prov_key,
-            "org.apache.spark.sql.execution.streaming."
-            "state.RocksDBStateStoreProvider",
+        return drain(
+            out,
+            "append",
+            width=_stream_width(sf_dir),
+            provider=_ROCKSDB,
         )
-        try:
-            return drain(out, "append")
-        finally:
-            if old is None:
-                spark.conf.unset(prov_key)
-            else:
-                spark.conf.set(prov_key, old)
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -1200,7 +1175,7 @@ def stream_stateful_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    return drain(out, "append")
+    return drain(out, "append", width=_stream_width(sf_dir))
 
 
 @query(
@@ -1302,17 +1277,14 @@ def stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
     chk = os.path.join(stable_scratch(sf_dir, "state_audit"), "chk")
-    drain(out, "append", checkpoint=chk)
-    # The audited drain's RESULT (the full timers emission) is never
-    # read — only the checkpoint's state store is. Drop the memory-sink
-    # view immediately so median-of-3 bench reruns don't stack emission
-    # copies on the driver heap (r12 ADVICE #2), and clear the stale
-    # name (r13 ADVICE) — drain() itself drops the previous sink on the
-    # next call, but this op should not hold its dead emission at all.
-    global LAST_SINK_NAME
-    if LAST_SINK_NAME:
-        spark.catalog.dropTempView(LAST_SINK_NAME)
-        LAST_SINK_NAME = None
+    # The drained RESULT (the full timers emission) is never read —
+    # only the checkpoint's state store is — so it is dropped here.
+    drain(
+        out,
+        "append",
+        checkpoint=chk,
+        width=_stream_width(sf_dir, multi_trigger=False),
+    )
     try:
         committed = any(
             f.isdigit() for f in os.listdir(os.path.join(chk, "commits"))
@@ -1405,12 +1377,7 @@ def stream_progress_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(path)
         .drop("day")
     )
-    q = (
-        s.writeStream.format("noop")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = _run(spark, s.writeStream.format("noop").trigger(availableNow=True))
     rows = [
         (i, int(p["numInputRows"]))
         for i, p in enumerate(
@@ -1461,7 +1428,9 @@ def stream_unified_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     fails the hash, not just an eyeball."""
     batch = _hourly_counts(load_table(spark, sf_dir, "events"))
     stream = drain(
-        _hourly_counts(read_stream(spark, sf_dir)), "complete"
+        _hourly_counts(read_stream(spark, sf_dir)),
+        "complete",
+        width=_stream_width(sf_dir, multi_trigger=False),
     )
     b = batch.select(
         F.col("hour").alias("b_hour"),
@@ -1573,17 +1542,17 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(tmp, state_dir)
 
     s = read_stream(spark, sf_dir, maxFilesPerTrigger=10)
-    # The per-batch merge groupBy pays the session shuffle width on
-    # EVERY trigger (and writes that many state files) — scope it under
-    # the derived streaming width like drain() does.
-    with stream_shuffle_width(spark):
-        q = (
-            s.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(base, "chk"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # The per-batch merge groupBy pays the query's shuffle width on
+    # EVERY trigger (and writes that many state files) — start it under
+    # the derived streaming width like drain() does; the foreachBatch
+    # body runs on the query's copy of the conf.
+    _run(
+        spark,
+        s.writeStream.foreachBatch(merge)
+        .option("checkpointLocation", os.path.join(base, "chk"))
+        .trigger(availableNow=True),
+        _stream_width(sf_dir),
+    )
     return read_back(spark, state_dir, _state_schema).select(
         "user_id",
         F.col("c.id").alias("last_event_id"),
@@ -1674,7 +1643,7 @@ def stream_session_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("session_window.end").alias("session_end"),
         "n_events",
     )
-    emitted = drain(out, "append")
+    emitted = drain(out, "append", width=_stream_width(sf_dir))
 
     from pyspark.sql import Window
 

@@ -17,11 +17,13 @@ import json
 import os
 import re
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
 
 from pymapreduce_spark.session import get_spark  # noqa: E402
 from pymapreduce_spark.io import load_table  # noqa: E402
@@ -662,6 +664,49 @@ def _count_statestore_hits(tail: str) -> tuple[int, list[str]]:
     return len(hits), hits[:40]
 
 
+class StreamRuns(StreamingQueryListener):
+    """Keeps every stream run's progress on the session it is added
+    to, by run id. A run's ``onQueryStarted`` arrives before its
+    ``start()`` returns, and the bus delivers its ``onQueryTerminated``
+    after its last progress event, so :meth:`progress_since` waits for
+    the latter."""
+
+    def __init__(self) -> None:
+        self.cv = threading.Condition()
+        self.started: list[str] = []
+        self.ended: set[str] = set()
+        self.progress: dict[str, list] = {}
+
+    def onQueryStarted(self, event) -> None:
+        with self.cv:
+            self.started.append(str(event.runId))
+
+    def onQueryProgress(self, event) -> None:
+        with self.cv:
+            self.progress.setdefault(str(event.progress.runId), []).append(
+                event.progress
+            )
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        with self.cv:
+            self.ended.add(str(event.runId))
+            self.cv.notify_all()
+
+    def progress_since(self, mark: int, timeout: float = 600) -> list:
+        """Progress of the runs started after the ``mark``-th run, once
+        every one of them has terminated."""
+        with self.cv:
+            runs = self.started[mark:]
+            if not self.cv.wait_for(
+                lambda: self.ended.issuperset(runs), timeout
+            ):
+                raise TimeoutError(f"stream runs {runs} did not terminate")
+            return [p for r in runs for p in self.progress.get(r, [])]
+
+
 def stream_state_section(spark) -> dict:
     """Optional section (--streamstate): numbers, not docstrings, for
     the bounded-state claims of the four STATEFUL streaming ops
@@ -669,8 +714,8 @@ def stream_state_section(spark) -> dict:
     entry point at base / 10× / 100× event-time span (constant per-day
     density — see _stream_xn_sfdir), and the state-store metrics come
     from StreamingQueryProgress.stateOperators of the op's own run
-    (drain() exposes the finished query's progress), so the audited
-    pipeline is exactly the shipped one.
+    (read by a listener on the session), so the audited pipeline is
+    exactly the shipped one.
 
     What "bounded" means differs by op, and the checks encode it:
 
@@ -710,11 +755,10 @@ def stream_state_section(spark) -> dict:
     exceptions in the driver log (the HDFS provider's maintenance
     thread races delta-file cleanup under fast micro-batches — known
     noise that can mask real corruption; RocksDB must be clean). The
-    progress buffer is raised from the default 100 entries so the
-    max-state checks cover EVERY trigger, not a trailing window.
+    listener sees EVERY trigger, so the max-state checks never read a
+    trailing window of the progress buffer.
     """
     from pymapreduce_spark.registry import QUERIES
-    from pymapreduce_spark.streaming import core as stream_core
     from pymapreduce_spark.streaming.core import replay_dir
 
     scales = {
@@ -725,10 +769,8 @@ def stream_state_section(spark) -> dict:
     for sf_dir, _f in scales.values():
         replay_dir(spark, sf_dir)  # one-off materialization, unmeasured
 
-    # Default numRecentProgressUpdates=100 caps q.recentProgress; at
-    # 100× with maxFilesPerTrigger=10 there are hundreds of triggers
-    # and a mid-run state spike would fall off the buffer (r10 advice).
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
+    runs = StreamRuns()
+    spark.streams.addListener(runs)
 
     OPS = ("stream_dedup", "stream_bitmap_distinct", "stream_stateful",
            "stream_session", "stream_session_watermarked",
@@ -754,19 +796,12 @@ def stream_state_section(spark) -> dict:
                     f"[streamstate/{provider_tag}] {op} @ {scale} ...",
                     file=sys.stderr, flush=True,
                 )
+                mark = len(runs.started)
                 t0 = time.perf_counter()
                 out_rows = QUERIES[op](spark, sf_dir).count()
                 wall = time.perf_counter() - t0
-                # drop the drained memory-sink tables: each leg's sink
-                # otherwise lives in the driver heap for the rest of
-                # the section (the x100 legs emit millions of rows —
-                # the accumulated sinks OOM'd an 8 GB heap in round 11
-                # and the lost py4j reply wedged awaitTermination)
-                for v in spark.catalog.listTables():
-                    if v.name.startswith("stream_result_"):
-                        spark.catalog.dropTempView(v.name)
                 rows, mem = [], []
-                for p in stream_core.LAST_QUERY_PROGRESS:
+                for p in runs.progress_since(mark):
                     for so in p.get("stateOperators") or []:
                         rows.append(so.get("numRowsTotal") or 0)
                         mem.append(
@@ -793,25 +828,23 @@ def stream_state_section(spark) -> dict:
         # progress reported — the reader's rows ARE the store, so a
         # mismatch means the reader surface lies about state. The op's
         # callable drains the sessionization itself (with its explicit
-        # checkpoint), so LAST_QUERY_PROGRESS right after the call is
-        # that drain's progress under THIS leg's provider.
+        # checkpoint), so the one run it starts is that drain, under
+        # THIS leg's provider.
         print(
             f"[streamstate/{provider_tag}] stream_state_audit @ base ...",
             file=sys.stderr, flush=True,
         )
+        mark = len(runs.started)
         reader_df = QUERIES["stream_state_audit"](spark, BASE_SF)
         final_rows = [
             so.get("numRowsTotal") or 0
-            for p in stream_core.LAST_QUERY_PROGRESS
+            for p in runs.progress_since(mark)
             for so in (p.get("stateOperators") or [])
         ]
         res["state_audit"] = {
             "reader_rows": reader_df.count(),
             "progress_final_state_rows": final_rows[-1] if final_rows else 0,
         }
-        for v in spark.catalog.listTables():
-            if v.name.startswith("stream_result_"):
-                spark.catalog.dropTempView(v.name)
         return res
 
     _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
@@ -835,6 +868,7 @@ def stream_state_section(spark) -> dict:
         legs[tag]["statestore_log_matches"] = (
             scan[1] if scan is not None else None
         )
+    spark.streams.removeListener(runs)
 
     def flat(res, op):
         b = res[op]["base"]["max_state_rows"]

@@ -214,12 +214,41 @@ def test_artifact_roots_of_deleted_fixtures_are_pruned(tiny_sf, tmp_path):
     gone_root = pio.artifact_path(str(gone))
     kept_root = pio.artifact_path(tiny_sf)
     assert os.path.isdir(gone_root) and os.path.isdir(kept_root)
+    # an older layout's root (no hash suffix), and a new-layout root
+    # whose first caller has not written _SOURCE yet
+    old_layout = os.path.join(pio._ARTIFACTS_DIR, "sf0.01", "events_replay")
+    os.makedirs(old_layout)
+    unstamped = os.path.join(pio._ARTIFACTS_DIR, "sf-0123abcd")
+    os.makedirs(unstamped)
     shutil.rmtree(gone)
     new = tmp_path / "new"
     new.mkdir()
     pio.artifact_path(str(new))
     assert not os.path.exists(gone_root)
+    assert not os.path.exists(os.path.dirname(old_layout))
     assert os.path.isdir(kept_root)
+    assert os.path.isdir(unstamped)
+
+
+def test_scratch_epochs_of_concurrent_callers_survive(tiny_sf):
+    """A stable_scratch call on one thread never deletes the epoch
+    another thread is still using, nor hands out the same epoch twice."""
+    lost: list = []
+
+    def caller() -> list:
+        mine = []
+        for _ in range(5):
+            path = pio.stable_scratch(tiny_sf, "probe")
+            with open(os.path.join(path, "owner"), "x") as fh:
+                fh.write(str(threading.get_ident()))
+            if mine and not os.path.exists(os.path.join(mine[-1], "owner")):
+                lost.append(mine[-1])
+            mine.append(path)
+        return mine
+
+    paths = [p for got in _run_threads(8, caller) for p in got]
+    assert lost == []
+    assert len(set(paths)) == len(paths) == 40
 
 
 def test_memo_concurrent_first_lookup_and_failures(tiny_sf):

@@ -394,9 +394,6 @@ def _drain_real(spark, tmp_path, ex, mfpt: int) -> set:
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
     res = drain(out, "append").collect()
-    for v in spark.catalog.listTables():
-        if v.name.startswith("stream_result_"):
-            spark.catalog.dropTempView(v.name)
 
     def us(x):
         # NTZ-normalized naive timestamps under the pinned-UTC session

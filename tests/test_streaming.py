@@ -4,7 +4,9 @@ and batch-equivalence spot checks (SURVEY §5.3)."""
 
 from __future__ import annotations
 
+import ast
 import os
+import threading
 import time
 
 import pytest
@@ -683,3 +685,144 @@ def test_fold_correct_when_key_spans_arrow_chunks(spark, duck, sf_dir):
         for r in duck.execute(ORACLES["stream_stateful_timers"]).fetchall()
     )
     assert got == want
+
+
+# --- one start site, no state carried between drains --------------------
+
+
+def _rows(df) -> list:
+    from pymapreduce_spark.testing import canon_cell
+
+    return sorted(tuple(canon_cell(x) for x in r) for r in df.collect())
+
+
+def _oracle_rows(duck, name: str) -> list:
+    from pymapreduce_spark.registry import ORACLES
+    from pymapreduce_spark.testing import canon_cell
+
+    return sorted(
+        tuple(canon_cell(x) for x in r)
+        for r in duck.execute(ORACLES[name]).fetchall()
+    )
+
+
+def _progress_of(spark, fn) -> tuple:
+    """``fn()``'s result and the progress of the streams it ran, read by
+    a listener on the session (scale_smoke's reader)."""
+    from scale_smoke import StreamRuns
+
+    runs = StreamRuns()
+    spark.streams.addListener(runs)
+    try:
+        mark = len(runs.started)
+        out = fn()
+        return out, runs.progress_since(mark, timeout=120)
+    finally:
+        spark.streams.removeListener(runs)
+
+
+def test_stream_width_does_not_leak_into_the_next_drain(spark, sf_dir):
+    """A width pinned for one op reaches that op's drain only: a later
+    drain that asks for no width runs at the session width."""
+    from pymapreduce_spark.streaming.core import (
+        _replay_schema,
+        drain,
+        replay_dir,
+    )
+
+    os.environ["SPARK_GRAFT_STREAM_PARTITIONS"] = "1"
+    try:
+        QUERIES["stream_stateful_timers"](spark, sf_dir).count()
+    finally:
+        del os.environ["SPARK_GRAFT_STREAM_PARTITIONS"]
+    s = spark.readStream.schema(_replay_schema(spark, sf_dir)).parquet(
+        replay_dir(spark, sf_dir)
+    )
+    _, progress = _progress_of(
+        spark,
+        lambda: drain(s.groupBy("event_type").count(), "complete").collect(),
+    )
+    widths = {
+        so["numShufflePartitions"]
+        for p in progress
+        for so in p["stateOperators"]
+    }
+    assert widths == {int(spark.conf.get("spark.sql.shuffle.partitions"))}
+
+
+def test_drain_leaves_no_sink_view(spark, duck, sf_dir):
+    df = QUERIES["stream_tumbling"](spark, sf_dir)
+    left = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith("stream_result_")
+    ]
+    assert left == []
+    assert _rows(df) == _oracle_rows(duck, "stream_tumbling")
+
+
+def test_state_audit_reader_matches_listener_progress(spark, sf_dir):
+    """The statestore reader's rows equal the audited drain's final
+    numRowsTotal, read from a listener (scale_smoke --streamstate's
+    reader check at base scale)."""
+    reader, progress = _progress_of(
+        spark, lambda: QUERIES["stream_state_audit"](spark, sf_dir)
+    )
+    state_rows = [
+        so["numRowsTotal"] for p in progress for so in p["stateOperators"]
+    ]
+    assert state_rows and reader.count() == state_rows[-1]
+
+
+def test_batch_and_stream_ops_run_concurrently_on_one_session(spark, sf_dir):
+    """Four threads on one session run batch ops, a narrowed
+    multi-trigger drain and a single-trigger drain at session width;
+    every result equals its serial result and the session width ends
+    where it began."""
+    ops = (
+        "q1_pricing_summary",
+        "api_wordcount",
+        "stream_stateful_timers",
+        "stream_state_audit",
+    )
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    serial = {op: _rows(QUERIES[op](spark, sf_dir)) for op in ops}
+    barrier = threading.Barrier(4)
+    got: list = []
+    errors: list = []
+
+    def client(i: int) -> None:
+        barrier.wait()
+        try:
+            for r in range(2):
+                for k in range(len(ops)):
+                    op = ops[(i + r + k) % len(ops)]
+                    got.append((op, _rows(QUERIES[op](spark, sf_dir))))
+        except BaseException as exc:  # noqa: BLE001 - reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(600)
+    assert not [t for t in threads if t.is_alive()]
+    assert not errors, errors
+    assert len(got) == 4 * 2 * len(ops)
+    assert [op for op, rows in got if rows != serial[op]] == []
+    assert spark.conf.get(key) == width
+
+
+def test_streaming_core_has_one_start_site_and_no_globals():
+    from pymapreduce_spark.streaming import core
+
+    with open(core.__file__, encoding="utf-8") as fh:
+        src = fh.read()
+    globals_ = [
+        n.lineno
+        for n in ast.walk(ast.parse(src))
+        if isinstance(n, ast.Global)
+    ]
+    assert globals_ == []
+    assert src.count(".start(") == 1
