@@ -21,7 +21,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pymapreduce_spark.functions.checked import cents, epoch_micros
-from pymapreduce_spark.io import artifact_path, fixture_memo, load_table
+from pymapreduce_spark.io import (
+    artifact_path,
+    derived_artifact,
+    fixture_memo,
+    load_table,
+)
 from pymapreduce_spark.registry import query
 
 
@@ -57,34 +62,54 @@ def agg_salted_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Create (once per session and fixture stamp) bucketed copies of
-    orders/lineitem, bucketed AND sorted by the join key, stored under
-    the fixture dir's artifact dir, whose name also names the tables."""
-    base = artifact_path(sf_dir)
-    tag = re.sub(r"\W", "_", os.path.basename(base))
-    t_orders = f"orders_bucketed_{tag}"
-    t_lineitem = f"lineitem_bucketed_{tag}"
+#: The bucketed copies join_bucketed reads: (source table, join key).
+_BUCKETED = (("orders", "o_orderkey"), ("lineitem", "l_orderkey"))
 
-    def build() -> tuple[str, str]:
-        for tbl, src, col in (
-            (t_orders, "orders", "o_orderkey"),
-            (t_lineitem, "lineitem", "l_orderkey"),
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
+    """Catalog tables over bucketed copies of orders/lineitem (8
+    buckets, bucketed AND sorted by the join key), each named after its
+    artifact dir.
+
+    Each copy's files are built once per fixture stamp, as a derived
+    artifact every process on the checkout shares. A session only
+    registers its tables over them (once per session and stamp): it
+    never rewrites the files, which another process may be reading.
+    The tables are external, so dropping one keeps its files."""
+    tag = re.sub(r"\W", "_", os.path.basename(artifact_path(sf_dir)))
+    names, paths = [], []
+    for src, col in _BUCKETED:
+        name = f"{src}_bucketed_{tag}"
+
+        def build(path: str) -> None:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
             (
                 load_table(spark, sf_dir, src)
                 .write.mode("overwrite")
                 .format("parquet")
-                .option("path", os.path.join(base, tbl))
+                .option("path", path)
                 .bucketBy(8, col)
                 .sortBy(col)
-                .saveAsTable(tbl)
+                .saveAsTable(name)
             )
-        return t_orders, t_lineitem
+
+        names.append(name)
+        paths.append(derived_artifact(sf_dir, name, (src,), build))
+
+    def register() -> tuple[str, ...]:
+        for (src, col), name, path in zip(_BUCKETED, names, paths):
+            columns = load_table(spark, sf_dir, src)._jdf.schema().toDDL()
+            location = path.replace("\\", "\\\\").replace("'", "\\'")
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            spark.sql(
+                f"CREATE TABLE {name} ({columns}) USING parquet "
+                f"CLUSTERED BY ({col}) SORTED BY ({col}) INTO 8 BUCKETS "
+                f"LOCATION '{location}'"
+            )
+        return tuple(names)
 
     return fixture_memo(
-        "bucketed", sf_dir, ("orders", "lineitem"), build, spark=spark
+        "bucketed", sf_dir, [src for src, _ in _BUCKETED], register, spark=spark
     )
 
 

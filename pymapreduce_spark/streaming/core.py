@@ -21,6 +21,7 @@ from __future__ import annotations
 import itertools
 import os
 import threading
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,6 +62,19 @@ _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 _ROCKSDB = (
     "org.apache.spark.sql.execution.streaming."
     "state.RocksDBStateStoreProvider"
+)
+_CHECKPOINT_CONF = "spark.sql.streaming.checkpointLocation"
+_FILE_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+#: Hadoop's local filesystem without libhadoop (NativeIO unavailable)
+#: starts a shell process for every ``readlink`` and ``chmod``. The
+#: default FileContext checkpoint manager reads the link status of the
+#: source and target of every rename (``getFileLinkStatus`` →
+#: ``FileUtil.readLink``), and a drain renames every offset, commit,
+#: state-delta and checksum file it writes; the FileSystem manager's
+#: rename is a plain ``File.renameTo``. It writes the same files.
+_FS_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
 )
 #: Held while a query's start confs are set on the caller's session, so
 #: two concurrent starts never save each other's narrowed value.
@@ -134,39 +148,83 @@ def _stream_width(sf_dir: str, multi_trigger: bool = True) -> int | None:
         return None
 
 
+def _checkpoint_is_local(spark: SparkSession, checkpoint: str | None) -> bool:
+    """Whether a query's checkpoint root is on the local filesystem: the
+    explicit ``checkpoint``, else the session's checkpointLocation, else
+    Spark's temp dir (a local path with no scheme); a path with no
+    scheme resolves against ``fs.defaultFS``, as Spark resolves it."""
+    root = checkpoint or spark.conf.get(_CHECKPOINT_CONF, None) or ""
+    scheme = urlparse(root).scheme
+    if not scheme:
+        hadoop = spark._jsparkSession.sessionState().newHadoopConf()
+        scheme = urlparse(hadoop.get("fs.defaultFS", "file:///")).scheme
+    return scheme == "file"
+
+
 def _run(
     spark: SparkSession,
     writer: DataStreamWriter,
     width: int | None = None,
     provider: str | None = None,
+    checkpoint: str | None = None,
 ) -> StreamingQuery:
-    """The one place a streaming query starts: set the confs the query
-    takes at start on ``spark``, start it, restore them, then wait for
-    the query to finish.
+    """The one place a streaming query starts and its checkpoint is set:
+    set the confs the query takes at start on ``spark``, start it,
+    restore them, then wait for the query to finish.
 
     ``start()`` copies the session conf into the query (its offset log
-    pins numShufflePartitions, and foreachBatch bodies run on the
-    copy), so the caller's session carries the narrowed width and the
+    pins numShufflePartitions, foreachBatch bodies run on the copy), so
+    the caller's session carries the narrowed ``width`` and the
     state-store ``provider`` only while ``start()`` runs. Narrowing
-    only: a ``width`` wider than the session value is ignored. The
-    query stays on the caller's session, whose listeners see its
+    only: a ``width`` wider than the session value is ignored.
+
+    ``checkpoint`` is the explicit checkpointLocation; ``None`` keeps
+    Spark's default root (the session's checkpointLocation, else a temp
+    dir). When that root is on the local filesystem and the session
+    names no checkpoint manager class of its own, the session carries
+    Spark's FileSystem-based manager (``_FS_FILE_MANAGER``) until the
+    query ends, then goes back to unset. Not just across ``start()``: a
+    file source builds its offset log from the READING session's conf
+    after ``start()`` returns, in the query's own thread (restored right
+    after ``start()``, a one-file-per-trigger drain kept 240 ``readlink``
+    starts from that log). A local rename is atomic and every engine
+    checkpoint has one writer (a temp dir or a per-thread
+    ``stable_scratch`` epoch), so the manager changes no file and no
+    result. A drain that starts while another is ending may still build
+    its source log under the default manager: slower, same files.
+
+    The query stays on the caller's session, whose listeners see its
     progress; a child session would hide it from them and drop the
     caller's runtime confs."""
-    with _START_LOCK:
-        confs = {}
-        if width is not None and width < int(spark.conf.get(_WIDTH_CONF)):
-            confs[_WIDTH_CONF] = str(width)
-        if provider is not None:
-            confs[_PROVIDER_CONF] = provider
-        saved = {k: spark.conf.get(k) for k in confs}
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        try:
-            q = writer.start()
-        finally:
-            for k, v in saved.items():
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    owns_manager = False
+    try:
+        with _START_LOCK:
+            confs = {}
+            if width is not None and width < int(spark.conf.get(_WIDTH_CONF)):
+                confs[_WIDTH_CONF] = str(width)
+            if provider is not None:
+                confs[_PROVIDER_CONF] = provider
+            saved = {k: spark.conf.get(k) for k in confs}
+            owns_manager = spark.conf.get(
+                _FILE_MANAGER_CONF, None
+            ) is None and _checkpoint_is_local(spark, checkpoint)
+            if owns_manager:
+                spark.conf.set(_FILE_MANAGER_CONF, _FS_FILE_MANAGER)
+            for k, v in confs.items():
                 spark.conf.set(k, v)
-    q.awaitTermination()
+            try:
+                q = writer.start()
+            finally:
+                for k, v in saved.items():
+                    spark.conf.set(k, v)
+        q.awaitTermination()
+    finally:
+        if owns_manager:
+            with _START_LOCK:
+                if spark.conf.get(_FILE_MANAGER_CONF, None) == _FS_FILE_MANAGER:
+                    spark.conf.unset(_FILE_MANAGER_CONF)
     return q
 
 
@@ -289,9 +347,7 @@ def drain(
         .outputMode(output_mode)
         .trigger(availableNow=True)
     )
-    if checkpoint:
-        w = w.option("checkpointLocation", checkpoint)
-    _run(spark, w, width, provider)
+    _run(spark, w, width, provider, checkpoint=checkpoint)
     out = spark.table(name)
     spark.catalog.dropTempView(name)
     zoned = [c for c, t in out.dtypes if t == "timestamp"]
@@ -728,9 +784,10 @@ def stream_sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "user_id", "value")
     _run(
         spark,
-        filtered.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", sink_path + "_chk"),
+        filtered.writeStream.foreachBatch(write_batch).trigger(
+            availableNow=True
+        ),
+        checkpoint=sink_path + "_chk",
     )
     # schema-explicit read-back: zero batches (empty source) leave no
     # part files — inference would crash on a legitimately quiet stream
@@ -1548,10 +1605,9 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # body runs on the query's copy of the conf.
     _run(
         spark,
-        s.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(base, "chk"))
-        .trigger(availableNow=True),
+        s.writeStream.foreachBatch(merge).trigger(availableNow=True),
         _stream_width(sf_dir),
+        checkpoint=os.path.join(base, "chk"),
     )
     return read_back(spark, state_dir, _state_schema).select(
         "user_id",

@@ -5,8 +5,13 @@ correctness-gate scale)."""
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
+import shutil
+import subprocess
 import sys
+import tempfile
 
 import pytest
 
@@ -35,3 +40,80 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+#: A JFR settings file that enables one event: every process the JVM
+#: starts, with the Java stack that started it.
+_PROCESS_START_JFC = """<?xml version="1.0" encoding="UTF-8"?>
+<configuration version="2.0">
+  <event name="jdk.ProcessStart">
+    <setting name="enabled">true</setting>
+    <setting name="stackTrace">true</setting>
+  </event>
+</configuration>
+"""
+
+
+@contextlib.contextmanager
+def jvm_process_starts(spark):
+    """Record the processes the session's JVM starts inside the block.
+
+    Yields a list that is filled when the block exits: one
+    ``(command, frames)`` pair per ``jdk.ProcessStart`` event, where
+    ``frames`` are the starting stack's ``Class.method`` names, innermost
+    first. A JFR recording with only that event enabled runs on the JVM
+    (``jcmd <pid> JFR.start``) for the length of the block and is read
+    back with ``jfr print --json``. Skips the test when ``jcmd`` or
+    ``jfr`` is missing or PySpark did not start the JVM (no pid)."""
+    proc = getattr(spark.sparkContext._gateway, "proc", None)
+    jcmd, jfr = shutil.which("jcmd"), shutil.which("jfr")
+    if proc is None or not jcmd or not jfr:
+        pytest.skip("needs jcmd, jfr and a JVM started by PySpark")
+    pid = str(proc.pid)
+    starts: list = []
+    with tempfile.TemporaryDirectory() as tmp:
+        settings = os.path.join(tmp, "process_start.jfc")
+        with open(settings, "w") as fh:
+            fh.write(_PROCESS_START_JFC)
+        recording = os.path.join(tmp, "process_start.jfr")
+        name = f"process_starts_{os.getpid()}_{id(starts)}"
+
+        def jcmd_run(*args: str) -> None:
+            out = subprocess.run(
+                [jcmd, pid, *args], capture_output=True, text=True, timeout=60
+            )
+            assert out.returncode == 0, out.stdout + out.stderr
+
+        jcmd_run("JFR.start", f"name={name}", f"settings={settings}")
+        try:
+            yield starts
+            jcmd_run("JFR.dump", f"name={name}", f"filename={recording}")
+        finally:
+            subprocess.run(
+                [jcmd, pid, "JFR.stop", f"name={name}"],
+                capture_output=True,
+                timeout=60,
+            )
+        printed = subprocess.run(
+            [
+                jfr, "print", "--json", "--stack-depth", "64",
+                "--events", "jdk.ProcessStart", recording,
+            ],
+            capture_output=True,
+            text=True,
+            check=True,
+            timeout=120,
+        ).stdout
+    for event in json.loads(printed)["recording"]["events"]:
+        values = event["values"]
+        frames = (values.get("stackTrace") or {}).get("frames") or []
+        starts.append(
+            (
+                values.get("command"),
+                [
+                    f"{f['method']['type']['name'].replace('/', '.')}"
+                    f".{f['method']['name']}"
+                    for f in frames
+                ],
+            )
+        )

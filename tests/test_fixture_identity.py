@@ -324,3 +324,48 @@ def test_keying_lives_in_io_only():
                     if _KEYING.search(line):
                         hits.append(f"{os.path.relpath(path, pkg)}:{i}: {line.strip()}")
     assert not hits, "\n".join(hits)
+
+
+def test_bucketed_files_survive_a_second_process(spark):
+    """Another process on the same checkout that asks for the bucketed
+    tables registers its own over the same files and never rewrites
+    them: the files this session reads keep their inodes and mtimes,
+    and join_bucketed still matches its oracle."""
+    import subprocess
+    from urllib.parse import unquote, urlparse
+
+    from pymapreduce_spark.operators.scale import _ensure_bucketed
+
+    def stats() -> dict:
+        out = {}
+        for t in _ensure_bucketed(spark, SF_DIR):
+            for uri in spark.table(t).inputFiles():
+                path = unquote(urlparse(uri).path)
+                st = os.stat(path)
+                out[path] = (st.st_ino, st.st_mtime_ns)
+        return out
+
+    before = stats()
+    code = (
+        "import sys\n"
+        "from pymapreduce_spark.operators.scale import _ensure_bucketed\n"
+        "from pymapreduce_spark.session import get_spark\n"
+        "_ensure_bucketed(get_spark(), sys.argv[1])\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    done = subprocess.run(
+        [sys.executable, "-c", code, SF_DIR],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    after = {}
+    for path in before:
+        st = os.stat(path)
+        after[path] = (st.st_ino, st.st_mtime_ns)
+    assert after == before
+    _check(spark, "join_bucketed", SF_DIR)

@@ -15,6 +15,16 @@ from pyspark.sql import functions as F
 import pymapreduce_spark  # noqa: F401
 from pymapreduce_spark.registry import QUERIES
 
+_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_FC_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
 
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Three files replayed in order. Spark's watermark advances at
@@ -777,8 +787,8 @@ def test_state_audit_reader_matches_listener_progress(spark, sf_dir):
 def test_batch_and_stream_ops_run_concurrently_on_one_session(spark, sf_dir):
     """Four threads on one session run batch ops, a narrowed
     multi-trigger drain and a single-trigger drain at session width;
-    every result equals its serial result and the session width ends
-    where it began."""
+    every result equals its serial result, and the session width and
+    checkpoint manager conf end where they began."""
     ops = (
         "q1_pricing_summary",
         "api_wordcount",
@@ -812,6 +822,7 @@ def test_batch_and_stream_ops_run_concurrently_on_one_session(spark, sf_dir):
     assert len(got) == 4 * 2 * len(ops)
     assert [op for op, rows in got if rows != serial[op]] == []
     assert spark.conf.get(key) == width
+    assert spark.conf.get(_MANAGER_CONF, None) is None
 
 
 def test_streaming_core_has_one_start_site_and_no_globals():
@@ -826,3 +837,149 @@ def test_streaming_core_has_one_start_site_and_no_globals():
     ]
     assert globals_ == []
     assert src.count(".start(") == 1
+
+
+# --- the checkpoint file manager a drain starts with ----------------------
+
+class _ConfRecordingWriter:
+    """A DataStreamWriter stand-in whose start() and awaitTermination()
+    record the session's checkpoint manager conf."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.options: dict = {}
+        self.seen: list = []
+
+    def option(self, key, value):
+        self.options[key] = value
+        return self
+
+    def _record(self):
+        self.seen.append(self.spark.conf.get(_MANAGER_CONF, None))
+
+    def start(self):
+        self._record()
+        return self
+
+    def awaitTermination(self):
+        self._record()
+
+
+def test_local_checkpoint_starts_on_the_filesystem_manager(spark, tmp_path):
+    """A query whose checkpoint root is local runs with the FileSystem
+    checkpoint manager; an hdfs root, or a manager the host named, is
+    left alone; the session conf ends as it began, unset included."""
+    from pymapreduce_spark.streaming.core import _run
+
+    def run(checkpoint=None):
+        w = _ConfRecordingWriter(spark)
+        _run(spark, w, checkpoint=checkpoint)
+        return w
+
+    local = str(tmp_path / "chk")
+    w = run(local)
+    assert w.seen == [_FS_MANAGER, _FS_MANAGER]
+    assert w.options == {"checkpointLocation": local}
+    for root in (None, f"file://{local}", "relative/chk"):
+        assert run(root).seen == [_FS_MANAGER, _FS_MANAGER], root
+    assert run("hdfs://namenode:8020/chk").seen == [None, None]
+    assert spark.conf.get(_MANAGER_CONF, None) is None
+
+    # the session's own checkpoint root and default filesystem count too
+    for key, value, root in (
+        ("spark.sql.streaming.checkpointLocation", "hdfs://nn:8020/c", None),
+        ("fs.defaultFS", "hdfs://nn:8020", "/tmp/chk"),
+    ):
+        spark.conf.set(key, value)
+        try:
+            assert run(root).seen == [None, None], key
+        finally:
+            spark.conf.unset(key)
+        assert run(root).seen == [_FS_MANAGER, _FS_MANAGER], key
+
+    spark.conf.set(_MANAGER_CONF, "org.example.HostManager")
+    try:
+        assert run(local).seen == ["org.example.HostManager"] * 2
+        assert spark.conf.get(_MANAGER_CONF) == "org.example.HostManager"
+    finally:
+        spark.conf.unset(_MANAGER_CONF)
+    assert spark.conf.get(_MANAGER_CONF, None) is None
+
+
+def _checkpoint_files(root: str) -> set:
+    """Every file under a checkpoint, relative, with uuids masked."""
+    import re
+
+    uuid = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+    return {
+        uuid.sub("<uuid>", os.path.relpath(os.path.join(d, f), root))
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
+def test_state_audit_checkpoint_files_match_the_default_manager(
+    spark, sf_dir, monkeypatch
+):
+    """stream_state_audit starts on the FileSystem manager and writes the
+    same checkpoint files, every Hadoop .crc and Spark checksum file
+    included, as a run the host starts on Spark's default FileContext
+    manager; both runs read back the same state."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from pymapreduce_spark.streaming import core
+
+    seen: list = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        seen.append(spark.conf.get(_MANAGER_CONF, None))
+        return start(self, *args, **kwargs)
+
+    roots: list = []
+    run = core._run
+
+    def recording_run(*args, **kwargs):
+        roots.append(kwargs.get("checkpoint"))
+        return run(*args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    monkeypatch.setattr(core, "_run", recording_run)
+    ours = _rows(QUERIES["stream_state_audit"](spark, sf_dir))
+    spark.conf.set(_MANAGER_CONF, _FC_MANAGER)
+    try:
+        default = _rows(QUERIES["stream_state_audit"](spark, sf_dir))
+    finally:
+        spark.conf.unset(_MANAGER_CONF)
+    assert seen == [_FS_MANAGER, _FC_MANAGER]
+    assert ours == default
+    files, default_files = (_checkpoint_files(r) for r in roots)
+    assert files == default_files
+    hadoop_crc = {f for f in files if os.path.basename(f).startswith(".")}
+    spark_checksums = {f for f in files if f.endswith(".delta.crc")}
+    assert hadoop_crc and spark_checksums
+
+
+def test_timers_drain_starts_no_readlink_process(spark, sf_dir):
+    """Hadoop's local filesystem without libhadoop starts a process for
+    every readlink and chmod. A warm stream_stateful_timers call renames
+    its checkpoint files without a readlink process and starts at most a
+    quarter of the processes a call on the default manager starts."""
+    from conftest import jvm_process_starts
+
+    op = QUERIES["stream_stateful_timers"]
+    op(spark, sf_dir).collect()
+    with jvm_process_starts(spark) as ours:
+        op(spark, sf_dir).collect()
+    spark.conf.set(_MANAGER_CONF, _FC_MANAGER)
+    try:
+        with jvm_process_starts(spark) as default:
+            op(spark, sf_dir).collect()
+    finally:
+        spark.conf.unset(_MANAGER_CONF)
+    readlinks = [
+        cmd for cmd, frames in ours
+        if "org.apache.hadoop.fs.FileUtil.readLink" in frames
+    ]
+    assert readlinks == []
+    assert 4 * len(ours) <= len(default), (len(ours), len(default))
