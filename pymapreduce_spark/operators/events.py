@@ -14,7 +14,7 @@ streaming session_window operators in §2-J).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pymapreduce_spark.functions.checked import epoch_micros, trunc_ntz
@@ -22,6 +22,142 @@ from pymapreduce_spark.io import load_table
 from pymapreduce_spark.registry import query
 
 _SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
+
+
+def _gap_session_id() -> Column:
+    """Per-user gap-session id: the running count of session starts in
+    (ts, event_id) order, where an event starts a session when it is
+    the user's first or follows the user's previous event by more than
+    ``_SESSION_GAP_US``. Exact integer µs; one window over the user
+    partitioning. The oracles spell the same lag flag and running sum
+    in SQL."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    mu = epoch_micros(F.col("ts"))
+    is_new = F.coalesce(
+        (mu - F.lag(mu).over(w)) > _SESSION_GAP_US, F.lit(True)
+    ).cast("bigint")
+    return F.sum(is_new).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+
+def _hourly_grid(ev: DataFrame, **aggs: Column) -> DataFrame:
+    """The dense hourly grid per event type: every hour from the first
+    event's hour to the last's, crossed with every distinct event type,
+    left-joined to the per-(hour, type) aggregates ``aggs`` (name →
+    aggregate; NULL in a cell with no events). Columns: event_type,
+    hour, then the aggregates in order.
+
+    The bounds are one aggregate row and the grid a distributed
+    ``sequence(lo, hi, 1 hour)`` explode, never a driver-side loop; the
+    handful of types and the per-hour aggregate are broadcast onto it
+    (without the hint on the types, the plan leans on AQE to rescue a
+    shuffled cartesian at scale).
+    The type match is a plain ``=``, as in the oracles' joins, so a
+    NULL event type gets grid rows but never an aggregate."""
+    bounds = ev.agg(
+        trunc_ntz("hour", F.min("ts")).alias("lo"),
+        trunc_ntz("hour", F.max("ts")).alias("hi"),
+    )
+    grid = bounds.select(
+        F.explode(F.sequence("lo", "hi", F.expr("interval 1 hour"))).alias(
+            "hour"
+        )
+    )
+    types = ev.select(F.col("event_type").alias("et")).distinct()
+    cells = ev.groupBy(
+        trunc_ntz("hour", F.col("ts")).alias("h"),
+        F.col("event_type").alias("et"),
+    ).agg(*(a.alias(name) for name, a in aggs.items()))
+    return (
+        grid.crossJoin(F.broadcast(types))
+        .join(
+            F.broadcast(cells),
+            (F.col("h") == F.col("hour")) & (cells.et == types.et),
+            "left",
+        )
+        .select(types.et.alias("event_type"), "hour", *aggs)
+    )
+
+
+def _asof_tagged(
+    spark: SparkSession, sf_dir: str, time: str, expr: Column | None = None
+) -> DataFrame:
+    """The tagged union the as-of joins carry over: each user's views,
+    one per (user, ``time``) with max(event_id) as survivor, as side 0,
+    and purchases as side 1. Columns: user_id, ``time`` (the column
+    ``ts``, or ``expr`` under that name), side, view_event_id (views
+    only), event_id (purchases only). NULL event times are excluded on
+    both sides (null-ts doctrine: an un-timestamped purchase has no
+    nearest view)."""
+    ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
+    t = F.col(time) if expr is None else expr.alias(time)
+    purchases = ev.where(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", t
+    )
+    views = (
+        ev.where(F.col("event_type") == "view")
+        .groupBy("user_id", t)
+        .agg(F.max("event_id").alias("view_event_id"))
+    )
+    no_id = F.lit(None).cast("long")
+    return views.select(
+        "user_id",
+        time,
+        F.lit(0).alias("side"),
+        "view_event_id",
+        no_id.alias("event_id"),
+    ).unionByName(
+        purchases.select(
+            "user_id",
+            time,
+            F.lit(1).alias("side"),
+            no_id.alias("view_event_id"),
+            "event_id",
+        )
+    )
+
+
+def _asof_carry(
+    time: str, order: Column, following: bool = False
+) -> tuple[Column, Column]:
+    """The carry over an :func:`_asof_tagged` union: (view_event_id,
+    view ``time``) of each row's nearest view on one side — the last
+    view at or before it in ``order``, or with ``following`` the first
+    view at or after it. Views sort before purchases at an equal time,
+    so an equal-time view matches (ASOF's ``>=``/``<=``). One window
+    per user, O(1) state per row."""
+    w = Window.partitionBy("user_id").orderBy(order, "side", "event_id")
+    if following:
+        w = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        pick = F.first
+    else:
+        w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        pick = F.last
+    view_time = F.when(F.col("side") == 0, F.col(time))
+    return (
+        pick("view_event_id", ignorenulls=True).over(w),
+        pick(view_time, ignorenulls=True).over(w),
+    )
+
+
+def _asof_match(
+    spark: SparkSession, sf_dir: str, order: Column, id_col: str, ts_col: str
+) -> DataFrame:
+    """Each purchase with the nearest view on one side in ``order``,
+    as (event_id, user_id, ts, ``id_col``, ``ts_col``)."""
+    view_id, view_ts = _asof_carry("ts", order)
+    carried = _asof_tagged(spark, sf_dir, "ts").select(
+        "user_id",
+        "ts",
+        "side",
+        "event_id",
+        view_id.alias(id_col),
+        view_ts.alias(ts_col),
+    )
+    return carried.where(F.col("side") == 1).select(
+        "event_id", "user_id", "ts", id_col, ts_col
+    )
 
 
 @query(
@@ -61,17 +197,9 @@ def llm_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL event times are excluded (README null-ts doctrine: a row
     without a time cannot join a time-gap session)."""
     ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    mu = epoch_micros(F.col("ts"))
-    is_new = (
-        F.coalesce(
-            (mu - F.lag(mu).over(w)) > _SESSION_GAP_US, F.lit(True)
-        )
-    ).cast("bigint")
     return (
-        ev.withColumn("mu", mu)
-        .withColumn("session_id", F.sum(is_new).over(run))
+        ev.withColumn("mu", epoch_micros(F.col("ts")))
+        .withColumn("session_id", _gap_session_id())
         .groupBy("user_id", "session_id")
         .agg(
             F.count("*").alias("n_events"),
@@ -172,51 +300,8 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL event times are excluded on both sides (null-ts doctrine: an
     un-timestamped purchase has no "latest view before it").
     """
-    ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    views = (
-        ev.where(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("view_event_id"))
-    )
-    tagged = views.select(
-        "user_id",
-        "ts",
-        F.lit(0).alias("side"),
-        "view_event_id",
-        F.lit(None).cast("long").alias("event_id"),
-    ).unionByName(
-        purchases.select(
-            "user_id",
-            "ts",
-            F.lit(1).alias("side"),
-            F.lit(None).cast("long").alias("view_event_id"),
-            "event_id",
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "side", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = tagged.select(
-        "user_id",
-        "ts",
-        "side",
-        "event_id",
-        F.last("view_event_id", ignorenulls=True).over(w).alias(
-            "matched_view_id"
-        ),
-        F.last(
-            F.when(F.col("side") == 0, F.col("ts")), ignorenulls=True
-        )
-        .over(w)
-        .alias("matched_view_ts"),
-    )
-    return carried.where(F.col("side") == 1).select(
-        "event_id", "user_id", "ts", "matched_view_id", "matched_view_ts"
+    return _asof_match(
+        spark, sf_dir, F.col("ts"), "matched_view_id", "matched_view_ts"
     )
 
 
@@ -245,49 +330,8 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     future view); ties at equal timestamps match, mirroring DuckDB's
     `<=` ASOF semantics. NULL event times are excluded on both sides
     (null-ts doctrine)."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    views = (
-        ev.where(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("view_event_id"))
-    )
-    tagged = views.select(
-        "user_id",
-        "ts",
-        F.lit(0).alias("side"),
-        "view_event_id",
-        F.lit(None).cast("long").alias("event_id"),
-    ).unionByName(
-        purchases.select(
-            "user_id",
-            "ts",
-            F.lit(1).alias("side"),
-            F.lit(None).cast("long").alias("view_event_id"),
-            "event_id",
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.desc("ts"), "side", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = tagged.select(
-        "user_id",
-        "ts",
-        "side",
-        "event_id",
-        F.last("view_event_id", ignorenulls=True).over(w).alias(
-            "next_view_id"
-        ),
-        F.last(F.when(F.col("side") == 0, F.col("ts")), ignorenulls=True)
-        .over(w)
-        .alias("next_view_ts"),
-    )
-    return carried.where(F.col("side") == 1).select(
-        "event_id", "user_id", "ts", "next_view_id", "next_view_ts"
+    return _asof_match(
+        spark, sf_dir, F.desc("ts"), "next_view_id", "next_view_ts"
     )
 
 
@@ -323,33 +367,10 @@ def ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one row), the grid itself from `sequence(lo, hi, 1 hour)` exploded
     — generated distributed, never a driver-side loop; the counts join
     is a broadcast of the small aggregated side onto the grid."""
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        trunc_ntz("hour", F.min("ts")).alias("lo"),
-        trunc_ntz("hour", F.max("ts")).alias("hi"),
-    )
-    grid = bounds.select(
-        F.explode(
-            F.sequence("lo", "hi", F.expr("interval 1 hour"))
-        ).alias("hour")
-    )
-    types = ev.select(F.col("event_type").alias("et")).distinct()
-    counts = ev.groupBy(
-        trunc_ntz("hour", F.col("ts")).alias("h"),
-        F.col("event_type").alias("et"),
-    ).agg(F.count("*").alias("n"))
-    return (
-        grid.crossJoin(F.broadcast(types))
-        .join(
-            F.broadcast(counts),
-            (F.col("h") == F.col("hour")) & (counts.et == types.et),
-            "left",
-        )
-        .select(
-            "hour",
-            types.et.alias("event_type"),
-            F.coalesce("n", F.lit(0)).alias("n_events"),
-        )
+    return _hourly_grid(
+        load_table(spark, sf_dir, "events"), n=F.count("*")
+    ).select(
+        "hour", "event_type", F.coalesce("n", F.lit(0)).alias("n_events")
     )
 
 
@@ -628,29 +649,9 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev + diff·(k/gap) over those exact integers — bit-identical IEEE
     doubles, emitted unrounded (rounding would reintroduce half-tie
     divergence)."""
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        trunc_ntz("hour", F.min("ts")).alias("lo"),
-        trunc_ntz("hour", F.max("ts")).alias("hi"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("interval 1 hour"))).alias(
-            "hour"
-        )
-    )
-    types = ev.select(F.col("event_type").alias("et")).distinct()
-    obs = ev.groupBy(
-        trunc_ntz("hour", F.col("ts")).alias("h"),
-        F.col("event_type").alias("et"),
-    ).agg(F.sum(F.round(F.col("value") * 100, 0).try_cast("long")).alias("cents"))
-    dense = (
-        grid.crossJoin(F.broadcast(types))
-        .join(
-            F.broadcast(obs),
-            (F.col("h") == F.col("hour")) & (obs.et == types.et),
-            "left",
-        )
-        .select(types.et.alias("event_type"), "hour", "cents")
+    dense = _hourly_grid(
+        load_table(spark, sf_dir, "events"),
+        cents=F.sum(F.round(F.col("value") * 100, 0).try_cast("long")),
     )
     back = (
         Window.partitionBy("event_type")
@@ -748,34 +749,9 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines threshold the identical number. One shuffle on the series
     key, one ordered window — the same panel layout as
     ts_interpolate_linear."""
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        trunc_ntz("hour", F.min("ts")).alias("lo"),
-        trunc_ntz("hour", F.max("ts")).alias("hi"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("interval 1 hour"))).alias(
-            "hour"
-        )
-    )
-    types = ev.select(F.col("event_type").alias("et")).distinct()
-    counts = ev.groupBy(
-        trunc_ntz("hour", F.col("ts")).alias("h"),
-        F.col("event_type").alias("et"),
-    ).agg(F.count("*").alias("cnt"))
-    dense = (
-        grid.crossJoin(F.broadcast(types))
-        .join(
-            F.broadcast(counts),
-            (F.col("h") == F.col("hour")) & (counts.et == types.et),
-            "left",
-        )
-        .select(
-            types.et.alias("event_type"),
-            "hour",
-            F.coalesce("cnt", F.lit(0)).alias("n"),
-        )
-    )
+    dense = _hourly_grid(
+        load_table(spark, sf_dir, "events"), cnt=F.count("*")
+    ).select("event_type", "hour", F.coalesce("cnt", F.lit(0)).alias("n"))
     w = (
         Window.partitionBy("event_type")
         .orderBy("hour")
@@ -1030,33 +1006,12 @@ def ts_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantities are exact integers, so the differential is
     rounding-free. At 100 TB the window partitions by series key —
     state is one 24-slot frame per key."""
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        trunc_ntz("hour", F.min("ts")).alias("lo"),
-        trunc_ntz("hour", F.max("ts")).alias("hi"),
-    )
-    grid = bounds.select(
-        F.explode(
-            F.sequence("lo", "hi", F.expr("interval 1 hour"))
-        ).alias("hour")
-    )
-    types = ev.select(F.col("event_type").alias("event_type")).distinct()
-    counts = ev.groupBy(
-        trunc_ntz("hour", F.col("ts")).alias("hour"),
+    dense = _hourly_grid(
+        load_table(spark, sf_dir, "events"), n=F.count("*")
+    ).select(
+        "hour",
         "event_type",
-    ).agg(F.count("*").alias("n"))
-    dense = (
-        # broadcast the handful of distinct event types — house style
-        # for the dense-grid builders (the two sibling grid ops above);
-        # without the hint the plan leans on AQE to rescue a shuffled
-        # cartesian at scale.
-        grid.crossJoin(F.broadcast(types))
-        .join(F.broadcast(counts), ["hour", "event_type"], "left")
-        .select(
-            "hour",
-            "event_type",
-            F.coalesce("n", F.lit(0)).cast("long").alias("n_events"),
-        )
+        F.coalesce("n", F.lit(0)).cast("long").alias("n_events"),
     )
     w = Window.partitionBy("event_type").orderBy("hour")
     forecast = F.lag("n_events", 24).over(w)
@@ -1135,50 +1090,17 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     row. The oracle spells the identical windows in SQL. All time math
     is exact integer microseconds. NULL event times are excluded on
     both sides (null-ts doctrine)."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    p = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", epoch_micros("ts").alias("mu")
-    )
-    v = (
-        ev.where(F.col("event_type") == "view")
-        .groupBy("user_id", epoch_micros("ts").alias("mu"))
-        .agg(F.max("event_id").alias("view_event_id"))
-    )
-    tagged = v.select(
-        "user_id",
-        "mu",
-        F.lit(0).alias("side"),
-        "view_event_id",
-        F.lit(None).cast("long").alias("event_id"),
-    ).unionByName(
-        p.select(
-            "user_id",
-            "mu",
-            F.lit(1).alias("side"),
-            F.lit(None).cast("long").alias("view_event_id"),
-            "event_id",
-        )
-    )
-    back = (
-        Window.partitionBy("user_id")
-        .orderBy("mu", "side", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    fwd = (
-        Window.partitionBy("user_id")
-        .orderBy("mu", "side", "event_id")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    view_mu = F.when(F.col("side") == 0, F.col("mu"))
-    carried = tagged.select(
+    prev_id, prev_mu = _asof_carry("mu", F.col("mu"))
+    next_id, next_mu = _asof_carry("mu", F.col("mu"), following=True)
+    carried = _asof_tagged(spark, sf_dir, "mu", epoch_micros("ts")).select(
         "user_id",
         "mu",
         "side",
         "event_id",
-        F.last("view_event_id", ignorenulls=True).over(back).alias("prev_id"),
-        F.last(view_mu, ignorenulls=True).over(back).alias("prev_mu"),
-        F.first("view_event_id", ignorenulls=True).over(fwd).alias("next_id"),
-        F.first(view_mu, ignorenulls=True).over(fwd).alias("next_mu"),
+        prev_id.alias("prev_id"),
+        prev_mu.alias("prev_mu"),
+        next_id.alias("next_id"),
+        next_mu.alias("next_mu"),
     )
     mu = F.col("mu")
     nearest = (
@@ -1293,18 +1215,12 @@ def ts_sessionized_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     and both aggregations share the user partitioning), all exact
     integers. NULL event times are excluded (null-ts doctrine)."""
     ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    mu = epoch_micros(F.col("ts"))
-    is_new = (
-        F.coalesce((mu - F.lag(mu).over(w)) > _SESSION_GAP_US, F.lit(True))
-    ).cast("bigint")
     rev = F.when(
         F.col("event_type") == "purchase",
         F.round(F.col("value") * 100).try_cast("long"),
     ).otherwise(F.lit(0))
     per_session = (
-        ev.withColumn("session_id", F.sum(is_new).over(run))
+        ev.withColumn("session_id", _gap_session_id())
         .groupBy("user_id", "session_id")
         .agg(F.sum(rev).alias("rev_cents"))
     )
@@ -1674,14 +1590,8 @@ def agg_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; the rate divides exact integers. NULL event times are
     excluded (null-ts doctrine; the oracle already said so)."""
     ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    mu = epoch_micros(F.col("ts"))
-    is_new = (
-        F.coalesce((mu - F.lag(mu).over(w)) > _SESSION_GAP_US, F.lit(True))
-    ).cast("bigint")
     per = (
-        ev.withColumn("sid", F.sum(is_new).over(run))
+        ev.withColumn("sid", _gap_session_id())
         .groupBy("user_id", "sid")
         .agg(F.count("*").alias("n"))
     )

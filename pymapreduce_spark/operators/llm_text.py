@@ -93,6 +93,22 @@ def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: 3-word shingle set as ONE higher-order expression over a hoisted
 #: ``words`` column. Indices are clamped (greatest/least) so sub-3-word
 #: documents yield a single degenerate shingle instead of throwing.
+#: Distinct 3-word shingles of a ``words`` array, exactly as the oracles
+#: spell them: a sub-3-word doc gets an EMPTY set (the oracles'
+#: range(1, len-1) is empty) — without the guard sequence(1, -1)
+#: DESCENDS and element_at(words, 2) throws on a 1-element array
+#: (caught by the degenerate-input audit). Not _SHINGLES_EXPR, which
+#: clamps short docs to one padded shingle for MinHash.
+_STRICT_SHINGLES_EXPR = """
+CASE WHEN size(words) < 3 THEN array()
+     ELSE array_distinct(
+        transform(sequence(1, size(words) - 2), i ->
+            concat_ws(' ', element_at(words, i),
+                           element_at(words, i + 1),
+                           element_at(words, i + 2))))
+END
+"""
+
 _SHINGLES_EXPR = """
 array_distinct(
     transform(sequence(1, greatest(size(words) - 2, 1)), i ->
@@ -799,6 +815,29 @@ def llm_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _md5_lang_id(text: str):
+    """The md5-bucket language-ID stub as a pandas-UDF column over
+    ``text``: the first hex digit's code point mod 5 picks one of the
+    fixture's five languages, which the oracles replay in SQL. NULL text
+    → NULL prediction (the oracles' md5(NULL) chain is NULL all the way
+    through), never .encode on None."""
+    import hashlib
+
+    langs = ["de", "en", "es", "fr", "zh"]
+
+    @F.pandas_udf("string")
+    def lang_id(texts: pd.Series) -> pd.Series:
+        return texts.map(
+            lambda t: None
+            if t is None
+            else langs[
+                ord(hashlib.md5(t.encode("utf-8")).hexdigest()[0]) % 5
+            ]
+        )
+
+    return lang_id(text)
+
+
 @query(
     "llm_lang_id",
     oracle="""
@@ -820,27 +859,11 @@ def llm_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     real classifier (fasttext/langdetect) changes only the function
     body: the Arrow batching, schema, and downstream filter contract
     (llm_lang_filter) stay identical."""
-    import hashlib
-
-    langs = ["de", "en", "es", "fr", "zh"]
-
-    @F.pandas_udf("string")
-    def lang_id(texts: pd.Series) -> pd.Series:
-        # NULL text → NULL prediction (the oracle's md5(NULL) chain
-        # is NULL all the way through), never .encode on None
-        return texts.map(
-            lambda t: None
-            if t is None
-            else langs[
-                ord(hashlib.md5(t.encode("utf-8")).hexdigest()[0]) % 5
-            ]
-        )
-
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.col("lang").alias("lang_given"),
-        lang_id("text").alias("lang_pred"),
+        _md5_lang_id("text").alias("lang_pred"),
     )
 
 
@@ -881,25 +904,11 @@ def llm_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # Hoist the words array: referencing split(text) inside the lambda
     # would re-split the text for EVERY shingle element (measured ~10×
-    # slower at sf0.1). Sub-3-word docs get EMPTY shingle sets (the
-    # oracle's range(1, len-1) is empty) — without the guard
-    # sequence(1, -1) DESCENDS and element_at(words, 2) throws on a
-    # 1-element array (caught by the degenerate-input audit).
-    shingles = F.expr(
-        """
-        CASE WHEN size(words) < 3 THEN array()
-             ELSE array_distinct(
-                transform(sequence(1, size(words) - 2), i ->
-                    concat_ws(' ', element_at(words, i),
-                                   element_at(words, i + 1),
-                                   element_at(words, i + 2))))
-        END
-        """
-    )
+    # slower at sf0.1).
     s = docs.withColumn("words", F.split("text", " ")).select(
         "doc_id",
         F.substring("text", 1, 30).alias("block"),
-        shingles.alias("sh"),
+        F.expr(_STRICT_SHINGLES_EXPR).alias("sh"),
     )
     a = s.select(
         F.col("doc_id").alias("doc_a"),
@@ -3153,25 +3162,10 @@ def llm_lang_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real LID model changes only the prediction column while this
     evaluation query — one map projection plus one grouped count —
     stays identical."""
-    import hashlib
-
-    langs = ["de", "en", "es", "fr", "zh"]
-
-    @F.pandas_udf("string")
-    def lang_id(texts: pd.Series) -> pd.Series:
-        # NULL text → NULL prediction, mirroring llm_lang_id
-        return texts.map(
-            lambda t: None
-            if t is None
-            else langs[
-                ord(hashlib.md5(t.encode("utf-8")).hexdigest()[0]) % 5
-            ]
-        )
-
     docs = load_table(spark, sf_dir, "documents")
     pred = docs.select(
         F.col("lang").alias("lang_given"),
-        lang_id("text").alias("lang_pred"),
+        _md5_lang_id("text").alias("lang_pred"),
     )
     return pred.groupBy("lang_given", "lang_pred").agg(
         F.count("*").alias("n_docs")
@@ -3455,20 +3449,11 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL = first_doc is three-valued false in both engines, so a
     NULL-id document is never credited as the first occurrence."""
     docs = load_table(spark, sf_dir, "documents")
-    shingles = F.expr(
-        """
-        CASE WHEN size(words) < 3 THEN array()
-             ELSE array_distinct(
-                transform(sequence(1, size(words) - 2), i ->
-                    concat_ws(' ', element_at(words, i),
-                                   element_at(words, i + 1),
-                                   element_at(words, i + 2))))
-        END
-        """
-    )
     e = (
         docs.withColumn("words", F.split("text", " "))
-        .select("doc_id", F.explode(shingles).alias("g"))
+        .select(
+            "doc_id", F.explode(F.expr(_STRICT_SHINGLES_EXPR)).alias("g")
+        )
     )
     w = Window.partitionBy("g")
     novel = (

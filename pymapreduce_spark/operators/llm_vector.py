@@ -335,6 +335,28 @@ def _exact_topk_evidence(
     ).withColumn("in_exact_topk", F.coalesce("in_exact_topk", F.lit(False)))
 
 
+#: The detail frame of the ANN and IVF searches (``*_rich``).
+_RICH_SCHEMA = (
+    "query_id bigint, neighbor_id bigint, nn_rank int,"
+    " cosine double, in_exact_topk boolean"
+)
+
+
+def _recall_summary(detail: DataFrame) -> DataFrame:
+    """Per query of a ``*_rich`` detail frame: (n_results, recall_ok),
+    where recall_ok = at least 4 of the results are exact top-5
+    neighbors (``in_exact_topk``)."""
+    return detail.groupBy("query_id").agg(
+        F.count("*").alias("n_results"),
+        (
+            # >= least(4, k): a tiny corpus returns k = n-1 < 5
+            # results, all exact (brute-force / all-cells probe)
+            F.sum(F.col("in_exact_topk").cast("int"))
+            >= F.least(F.lit(4), F.count("*"))
+        ).alias("recall_ok"),
+    )
+
+
 def sim_search_ann_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Detail frame for llm_sim_search_ann: the ANN neighbor rows
     (query_id, neighbor_id, nn_rank, cosine, in_exact_topk) — what a
@@ -347,11 +369,7 @@ def sim_search_ann_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vector dimension from data); an empty index has no neighbors.
     n_corpus = table_row_count(sf_dir, "embeddings")
     if n_corpus == 0:
-        return spark.createDataFrame(
-            [],
-            "query_id bigint, neighbor_id bigint, nn_rank int,"
-            " cosine double, in_exact_topk boolean",
-        )
+        return spark.createDataFrame([], _RICH_SCHEMA)
     emb = load_embeddings(spark, sf_dir).select(
         "vec_id",
         _as_double(F.col("embedding")).alias("e"),
@@ -436,16 +454,7 @@ def llm_sim_search_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     config that degrades recall below 0.8/query — or returns short
     result lists — fails the driver's value hash instead of hiding in a
     rows-only pass. Measured: 5/5 exact at every fixture SF."""
-    detail = sim_search_ann_rich(spark, sf_dir)
-    return detail.groupBy("query_id").agg(
-        F.count("*").alias("n_results"),
-        (
-            # >= least(4, k): a tiny corpus returns k = n-1 < 5
-            # results, all exact (brute-force / all-cells probe)
-            F.sum(F.col("in_exact_topk").cast("int"))
-            >= F.least(F.lit(4), F.count("*"))
-        ).alias("recall_ok"),
-    )
+    return _recall_summary(sim_search_ann_rich(spark, sf_dir))
 
 
 @query(
@@ -1050,11 +1059,7 @@ def sim_search_ivf_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-vector index has no neighbor pairs to return.
     n_corpus = table_row_count(sf_dir, "embeddings")
     if n_corpus <= 1:
-        return spark.createDataFrame(
-            [],
-            "query_id bigint, neighbor_id bigint, nn_rank int,"
-            " cosine double, in_exact_topk boolean",
-        )
+        return spark.createDataFrame([], _RICH_SCHEMA)
     emb = load_embeddings(spark, sf_dir).select(
         "vec_id",
         "embedding",
@@ -1128,16 +1133,7 @@ def llm_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.8/query, or returns short result lists, fails the driver's value
     hash rather than hiding in a rows-only pass. Measured: 5/5 exact at
     every fixture SF (nprobe=12/16 on random vectors)."""
-    detail = sim_search_ivf_rich(spark, sf_dir)
-    return detail.groupBy("query_id").agg(
-        F.count("*").alias("n_results"),
-        (
-            # >= least(4, k): a tiny corpus returns k = n-1 < 5
-            # results, all exact (brute-force / all-cells probe)
-            F.sum(F.col("in_exact_topk").cast("int"))
-            >= F.least(F.lit(4), F.count("*"))
-        ).alias("recall_ok"),
-    )
+    return _recall_summary(sim_search_ivf_rich(spark, sf_dir))
 
 
 @query(

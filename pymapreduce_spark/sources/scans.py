@@ -2,9 +2,10 @@
 
 CSV/JSONL/text scans have no fixture files, so each query derives its
 input deterministically from a parquet fixture (write → read back), which
-makes the oracle simply the originating table. Scratch files live under
-the fixture dir's artifact dir (``io.artifact_path``, gitignored) —
-never outside the repo.
+makes the oracle simply the originating table. Scratch files live in
+``io.stable_scratch`` epochs under the fixture dir's artifact dir
+(gitignored), never outside the repo: a second call keeps the files
+its caller's previous result still reads lazily.
 
 Scale notes: all reads go through the DataSource V2 file readers —
 splittable, schema-explicit (no inference job on 100 TB of JSON), and
@@ -20,16 +21,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pymapreduce_spark.io import (
-    artifact_path,
     derived_artifact,
     load_table,
     read_back,
+    stable_scratch,
 )
 from pymapreduce_spark.registry import query
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    return artifact_path(sf_dir, name)
 
 
 @query(
@@ -70,7 +67,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism matters, and require it when fields may carry
     newlines; this op carries dimension-table data, where correctness
     wins."""
-    path = _scratch(sf_dir, "nation_csv")
+    path = stable_scratch(sf_dir, "nation_csv")
     nation = load_table(spark, sf_dir, "nation")
     (
         nation.write.mode("overwrite")
@@ -98,7 +95,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines ingest with explicit schema (schema-on-read, no
     inference pass). Input derived from the documents fixture."""
-    path = _scratch(sf_dir, "documents_jsonl")
+    path = stable_scratch(sf_dir, "documents_jsonl")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
@@ -125,7 +122,7 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     represent NULL — a NULL text round-trips as the empty line, made
     explicit with coalesce on BOTH sides so the lossy conversion is a
     documented contract, not an engine accident."""
-    path = _scratch(sf_dir, "documents_text")
+    path = stable_scratch(sf_dir, "documents_text")
     docs = load_table(spark, sf_dir, "documents").select(
         F.coalesce("text", F.lit("")).alias("text")
     )
@@ -145,7 +142,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned columnar write + read-back. partitionBy(l_returnflag)
     lays out one directory per flag → downstream reads of a single flag
     prune to one partition (static partition pruning at scale)."""
-    path = _scratch(sf_dir, "lineitem_by_flag")
+    path = stable_scratch(sf_dir, "lineitem_by_flag")
     li = load_table(spark, sf_dir, "lineitem")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
     back = read_back(spark, path, li.schema)
@@ -203,7 +200,7 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV sink + read-back: write supplier partitioned by nation, read
     with explicit schema, aggregate — the round trip must be lossless
     (doubles survive via Spark's shortest-roundtrip CSV formatting)."""
-    path = _scratch(sf_dir, "supplier_csv")
+    path = stable_scratch(sf_dir, "supplier_csv")
     supplier = load_table(spark, sf_dir, "supplier")
     (
         supplier.write.mode("overwrite")
@@ -251,7 +248,7 @@ def sink_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection, then aggregate — the lossless JSON round trip."""
     from pymapreduce_spark.functions.checked import cents
 
-    path = _scratch(sf_dir, "purchases_jsonl")
+    path = stable_scratch(sf_dir, "purchases_jsonl")
     ev = load_table(spark, sf_dir, "events")
     (
         ev.where(F.col("event_type") == "purchase")
@@ -359,7 +356,7 @@ def sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         updates.select("o_orderkey"), "o_orderkey", "left_anti"
     )
     merged = kept.unionByName(changed)
-    path = _scratch(sf_dir, "orders_upserted")
+    path = stable_scratch(sf_dir, "orders_upserted")
     merged.write.mode("overwrite").parquet(path)
     back = read_back(spark, path, merged.schema)
     return back.groupBy("o_orderstatus").agg(
@@ -451,7 +448,7 @@ def sink_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes. ORC self-describes (types survive the round trip exactly —
     no schema redeclaration like CSV) and its stripe statistics give the
     same predicate-pushdown behavior as parquet row groups at scale."""
-    path = _scratch(sf_dir, "orders_orc")
+    path = stable_scratch(sf_dir, "orders_orc")
     orders = load_table(spark, sf_dir, "orders")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").orc(path)
     back = read_back(spark, path, orders.schema, fmt="orc")
@@ -490,8 +487,6 @@ def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeSchema on every read is footer-cost — evolve the table
     metadata instead; this op documents the read-side behavior that
     makes old files keep working."""
-    from pymapreduce_spark.io import stable_scratch
-
     orders = load_table(spark, sf_dir, "orders")
     base = stable_scratch(sf_dir, "evolve")
     v1 = orders.where(F.col("o_orderkey") % 2 == 0).select(
@@ -535,8 +530,6 @@ def scan_jsonl_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     export → nested parse → flatten round trip is lossless. Schema-
     explicit nested reads also skip Spark's two-pass inference scan,
     which is the at-scale requirement."""
-    from pymapreduce_spark.io import stable_scratch
-
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_id") < 2000
     )
@@ -783,7 +776,6 @@ def sink_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     read back schema-explicitly, and the per-nation fingerprint must
     equal the originating table's."""
     import glob
-    import shutil
 
     from pyspark.sql.datasource import (
         DataSource,
@@ -793,9 +785,7 @@ def sink_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pymapreduce_spark.functions.checked import cents
 
-    path = _scratch(sf_dir, "supplier_pyds_sink")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
+    path = stable_scratch(sf_dir, "supplier_pyds_sink")
 
     class _Writer(DataSourceWriter):
         def __init__(self, options):

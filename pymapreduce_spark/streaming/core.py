@@ -33,6 +33,7 @@ from pymapreduce_spark.io import (
     read_back,
     table_row_count,
 )
+from pymapreduce_spark.operators.events import _SESSION_GAP_US, _gap_session_id
 from pymapreduce_spark.registry import query
 
 _counter = itertools.count()
@@ -58,11 +59,6 @@ _counter = itertools.count()
 _STREAM_ROWS_PER_PARTITION = 25_000
 
 _WIDTH_CONF = "spark.sql.shuffle.partitions"
-_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-_ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming."
-    "state.RocksDBStateStoreProvider"
-)
 _CHECKPOINT_CONF = "spark.sql.streaming.checkpointLocation"
 _FILE_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 #: Hadoop's local filesystem without libhadoop (NativeIO unavailable)
@@ -165,7 +161,6 @@ def _run(
     spark: SparkSession,
     writer: DataStreamWriter,
     width: int | None = None,
-    provider: str | None = None,
     checkpoint: str | None = None,
 ) -> StreamingQuery:
     """The one place a streaming query starts and its checkpoint is set:
@@ -174,9 +169,10 @@ def _run(
 
     ``start()`` copies the session conf into the query (its offset log
     pins numShufflePartitions, foreachBatch bodies run on the copy), so
-    the caller's session carries the narrowed ``width`` and the
-    state-store ``provider`` only while ``start()`` runs. Narrowing
-    only: a ``width`` wider than the session value is ignored.
+    the caller's session carries the narrowed ``width`` only while
+    ``start()`` runs. Narrowing only: a ``width`` wider than the
+    session value is ignored. The state-store provider is the
+    session's own.
 
     ``checkpoint`` is the explicit checkpointLocation; ``None`` keeps
     Spark's default root (the session's checkpointLocation, else a temp
@@ -201,24 +197,20 @@ def _run(
     owns_manager = False
     try:
         with _START_LOCK:
-            confs = {}
-            if width is not None and width < int(spark.conf.get(_WIDTH_CONF)):
-                confs[_WIDTH_CONF] = str(width)
-            if provider is not None:
-                confs[_PROVIDER_CONF] = provider
-            saved = {k: spark.conf.get(k) for k in confs}
+            saved = None if width is None else spark.conf.get(_WIDTH_CONF)
+            narrow = saved is not None and width < int(saved)
             owns_manager = spark.conf.get(
                 _FILE_MANAGER_CONF, None
             ) is None and _checkpoint_is_local(spark, checkpoint)
             if owns_manager:
                 spark.conf.set(_FILE_MANAGER_CONF, _FS_FILE_MANAGER)
-            for k, v in confs.items():
-                spark.conf.set(k, v)
+            if narrow:
+                spark.conf.set(_WIDTH_CONF, str(width))
             try:
                 q = writer.start()
             finally:
-                for k, v in saved.items():
-                    spark.conf.set(k, v)
+                if narrow:
+                    spark.conf.set(_WIDTH_CONF, saved)
         q.awaitTermination()
     finally:
         if owns_manager:
@@ -318,7 +310,6 @@ def drain(
     output_mode: str = "complete",
     checkpoint: str | None = None,
     width: int | None = None,
-    provider: str | None = None,
 ) -> DataFrame:
     """Run a finite stream to completion into a memory sink and return
     the resulting table as a batch DataFrame.
@@ -334,8 +325,8 @@ def drain(
     ``checkpoint``: explicit checkpointLocation — pass one when the
     caller reads the run's state back (spark.read.format("statestore")
     needs a durable checkpoint path; the default ephemeral one is
-    session-temp). ``width`` and ``provider``: the state width and
-    state-store provider the query starts with (see :func:`_run`).
+    session-temp). ``width``: the state width the query starts with
+    (see :func:`_run`).
 
     The sink's view is dropped before returning: the returned DataFrame
     keeps the sink's rows alive, and nothing else in the session does."""
@@ -347,7 +338,7 @@ def drain(
         .outputMode(output_mode)
         .trigger(availableNow=True)
     )
-    _run(spark, w, width, provider, checkpoint=checkpoint)
+    _run(spark, w, width, checkpoint=checkpoint)
     out = spark.table(name)
     spark.catalog.dropTempView(name)
     zoned = [c for c, t in out.dtypes if t == "timestamp"]
@@ -866,16 +857,11 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: 30-minute inactivity gap shared by the timer-based sessionization's
-#: two implementation paths (transformWithState / EventTimeTimeout).
-_SESSION_GAP_US = 30 * 60 * 1_000_000
-
-
 def _session_due_ms(last_us: int, gap_us: int = _SESSION_GAP_US) -> int:
     """Timer expiry for a session whose last event is at ``last_us``:
     ceil to ms so the timer NEVER fires before the true µs-precision
     due time (floor could emit a session whose end is <1 ms past the
-    watermark). Both paths and the oracle use this exact arithmetic.
+    watermark). The timer and the oracle use this exact arithmetic.
     ``gap_us`` is overridable so the streaming property-differential
     harness (r11 verdict #7) can sweep the gap parameter; the
     registered ops always use the module default."""
@@ -993,9 +979,9 @@ def _session_fold_events(
 
 
 def _make_session_timeout_track(gap_us: int = _SESSION_GAP_US):
-    """Build a legacy-surface (``applyInPandasWithState`` +
-    EventTimeTimeout) timer-based session-timeout track function for an
-    arbitrary inactivity gap. The registered ops use the module-default
+    """Build the timer-based session-timeout track function
+    (``applyInPandasWithState`` + EventTimeTimeout) for an arbitrary
+    inactivity gap. The registered ops use the module-default
     instance ``_session_timeout_track`` (30 min); the streaming
     property-differential harness (r11 verdict #7) sweeps ``gap_us``
     randomly — the closure carries the gap by VALUE, so it survives
@@ -1024,11 +1010,10 @@ def _make_session_timeout_track(gap_us: int = _SESSION_GAP_US):
         # replay never produces one (no born-late events), but a
         # generic feed can. KNOWN DIVERGENCE on the clamped branch
         # (round-11 ADVICE #2): when due <= wm the clamp arms at wm+1,
-        # so this legacy surface emits only once the watermark advances
-        # PAST wm+1 — later than the TWS twin and the oracle's strict
-        # `wm > due` boundary. On a feed whose watermark never advances
-        # again, a born-late trailing session is under-emitted relative
-        # to the oracle. Pinned by
+        # so this surface emits only once the watermark advances PAST
+        # wm+1 — later than the oracle's strict `wm > due` boundary. On
+        # a feed whose watermark never advances again, a born-late
+        # trailing session is under-emitted relative to the oracle. Pinned by
         # tests/test_streaming.py::test_legacy_clamp_branch_divergence.
         wm = state.getCurrentWatermarkMs()
         state.setTimeoutTimestamp(max(_session_due_ms(last, gap_us), wm + 1))
@@ -1036,63 +1021,33 @@ def _make_session_timeout_track(gap_us: int = _SESSION_GAP_US):
     return track
 
 
-#: The registered ops' instance (30-minute gap): semantics shared with
-#: _SessionTimeoutProcessor and pinned equivalent by
-#: tests/test_streaming.py::test_tws_processor_matches_legacy_track.
+#: The registered ops' instance (30-minute gap).
 _session_timeout_track = _make_session_timeout_track()
 
 
-class _SessionTimeoutProcessor:
-    """``transformWithStateInPandas`` StatefulProcessor twin of
-    _session_timeout_track — Spark 4.x's arbitrary-stateful surface
-    with named state variables and explicit event-time TIMERS. The
-    class is handle-agnostic pure Python (mixed with StatefulProcessor
-    at use-site) so its session logic is unit-testable with a fake
-    handle in the protobuf-less container (see the gate note in
-    stream_stateful_timers)."""
+def _timed_sessions(spark: SparkSession, sf_dir: str, **options) -> DataFrame:
+    """The timer-based session-timeout stream over the replay (reader
+    ``options`` as for :func:`read_stream`): a 2-hour event-time
+    watermark, then :data:`_session_timeout_track` per user on
+    ``applyInPandasWithState`` with EventTimeTimeout, appending each
+    closed session. State per user is (start_us, last_us, n)."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState(
-            "sess", "start_us long, last_us long, n long"
+    s = read_stream(spark, sf_dir, **options).where(F.col("ts").isNotNull())
+    return (
+        s.withWatermark("ts", "2 hours")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _session_timeout_track,
+            outputStructType=(
+                "user_id bigint, session_start timestamp, "
+                "session_end timestamp, n_events bigint"
+            ),
+            stateStructType="start_us bigint, last_us bigint, n bigint",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-
-    def handleInputRows(self, key, rows, timerValues):
-        (user_id,) = key
-        cur = self._state.get() if self._state.exists() else None
-        start, last, n = cur if cur is not None else (None, None, 0)
-        closed: list = []
-        mus = _concat_sorted(rows)  # global per-key µs sort (see helper)
-        if mus is not None:
-            start, last, n = _session_fold_events(
-                mus, start, last, n, closed
-            )
-        if closed:
-            yield _session_emit_pdf(user_id, closed)
-        self._state.update((int(start), int(last), int(n)))
-        # exactly one armed timer per key: a stale (earlier) timer
-        # would fire while the session is still live
-        for t_ms in list(self._handle.listTimers()):
-            self._handle.deleteTimer(t_ms)
-        self._handle.registerTimer(_session_due_ms(last))
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        (user_id,) = key
-        cur = self._state.get() if self._state.exists() else None
-        if cur is None:
-            return
-        start, last, n = cur
-        # emit iff the watermark is STRICTLY past the due time — the
-        # same boundary the legacy EventTimeTimeout surface implements,
-        # so both paths agree with the single oracle
-        if timerValues.getCurrentWatermarkInMs() > _session_due_ms(last):
-            self._state.clear()
-            yield _session_emit_pdf(user_id, [(start, last, n)])
-        else:  # fired early/stale: re-arm at the true due time
-            self._handle.registerTimer(_session_due_ms(last))
-
-    def close(self) -> None:
-        pass
+    )
 
 
 @query(
@@ -1163,20 +1118,11 @@ def stream_stateful_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic. State is O(1) per ACTIVE user and timers are one per
     active user — the bounded shape the streamstate smoke measures.
 
-    TWO implementation paths, same pinned semantics
-    (tests/test_streaming.py::test_tws_processor_matches_legacy_track):
-
-    - ``transformWithStateInPandas`` + _SessionTimeoutProcessor — the
-      Spark 4.x API a new 100 TB pipeline would start with (named
-      state variables, explicit timers, TTL, RocksDB-backed). Its
-      PYTHON runtime requires ``google.protobuf`` (the state-server
-      protocol), which this container lacks and cannot install — the
-      path is taken whenever protobuf imports, and the processor's
-      session logic is unit-tested with a fake handle either way.
-    - ``applyInPandasWithState`` + EventTimeTimeout — the legacy
-      surface's timer mechanism (setTimeoutTimestamp / hasTimedOut),
-      protobuf-free; the executable path here and the one the driver
-      attests.
+    One state machine (:func:`_timed_sessions`):
+    ``applyInPandasWithState`` with EventTimeTimeout, whose timer is
+    setTimeoutTimestamp / hasTimedOut. Spark's event-time watermark is
+    ms-floored from µs, so the timer is armed at ceil-to-ms of the due
+    time, and a timeout fires only on a STRICTLY greater watermark.
 
     Trigger cadence is DERIVED (r14, see ``derived_mfpt``): the
     emitted session set depends only on the gap splits (batch-
@@ -1186,51 +1132,8 @@ def stream_stateful_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing the oracle sees while amortizing the per-key state
     roundtrip that dominates this op's cost.
     """
-    s = read_stream(
+    out = _timed_sessions(
         spark, sf_dir, maxFilesPerTrigger=derived_mfpt(spark, sf_dir)
-    ).where(F.col("ts").isNotNull())
-    wm = s.withWatermark("ts", "2 hours")
-    out_schema = (
-        "user_id bigint, session_start timestamp, "
-        "session_end timestamp, n_events bigint"
-    )
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        _has_tws_runtime = True
-    except ImportError:
-        _has_tws_runtime = False
-
-    if _has_tws_runtime:
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-        )
-
-        class _Proc(_SessionTimeoutProcessor, StatefulProcessor):
-            pass
-
-        out = wm.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_Proc(),
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-        # transformWithState requires the RocksDB state store provider
-        return drain(
-            out,
-            "append",
-            width=_stream_width(sf_dir),
-            provider=_ROCKSDB,
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out = wm.groupBy("user_id").applyInPandasWithState(
-        _session_timeout_track,
-        outputStructType=out_schema,
-        stateStructType="start_us bigint, last_us bigint, n bigint",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
     return drain(out, "append", width=_stream_width(sf_dir))
 
@@ -1286,8 +1189,8 @@ def stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB production stream actually uses to inspect in-flight state
     without touching the running query.
 
-    The audited query is stream_stateful_timers' executable surface
-    (``applyInPandasWithState`` + EventTimeTimeout) drained over the
+    The audited query is stream_stateful_timers' stream
+    (:func:`_timed_sessions`) drained over the
     same replay with an EXPLICIT checkpoint (statestore reads the
     checkpoint's state/ tree; stable_scratch epochs keep exactly one
     prior checkpoint around). What survives in the store is each
@@ -1299,7 +1202,7 @@ def stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip bit-exact through the store.
 
     The state's clamp-dependent ``timeoutTimestamp`` field is
-    deliberately NOT exposed (the legacy surface's wm+1 clamp makes it
+    deliberately NOT exposed (the timer's wm+1 clamp makes it
     feed-dependent — see _session_timeout_track); the groupState
     fields are clamp-independent. At 100 TB: the reader plans one task
     per state-store shard (metadata-recorded numPartitions), no
@@ -1315,24 +1218,9 @@ def stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     attestation is stream_stateful_timers' job, not this op's. Measured
     r12: 7.36 s at mfpt=10 → ~3.5 s single-trigger, pure scheduler
     floor (README's drain cost split)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from pymapreduce_spark.io import stable_scratch
 
-    s = read_stream(spark, sf_dir).where(
-        F.col("ts").isNotNull()
-    )
-    wm = s.withWatermark("ts", "2 hours")
-    out = wm.groupBy("user_id").applyInPandasWithState(
-        _session_timeout_track,
-        outputStructType=(
-            "user_id bigint, session_start timestamp, "
-            "session_end timestamp, n_events bigint"
-        ),
-        stateStructType="start_us bigint, last_us bigint, n bigint",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    out = _timed_sessions(spark, sf_dir)
     chk = os.path.join(stable_scratch(sf_dir, "state_audit"), "chk")
     # The drained RESULT (the full timers emission) is never read —
     # only the checkpoint's state store is — so it is dropped here.
@@ -1701,22 +1589,12 @@ def stream_session_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emitted = drain(out, "append", width=_stream_width(sf_dir))
 
-    from pyspark.sql import Window
-
-    from pymapreduce_spark.functions.checked import epoch_micros
-
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts").isNotNull()
         & (F.col("ts") >= F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"))
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    mu = epoch_micros(F.col("ts"))
-    is_new = F.coalesce(
-        (mu - F.lag(mu).over(w)) > 30 * 60 * 1_000_000, F.lit(True)
-    ).cast("bigint")
     twin = (
-        ev.withColumn("sid", F.sum(is_new).over(run))
+        ev.withColumn("sid", _gap_session_id())
         .groupBy("user_id", "sid")
         .agg(
             F.min("ts").alias("session_start"),

@@ -646,8 +646,13 @@ def _count_statestore_hits(tail: str) -> tuple[int, list[str]]:
             # IllegalStateException) still count.
             ctx = "\n".join(window)
             benign = (
+                # the coordinator's periodic snapshot-lag WARN ("...
+                # Snapshot Lag Report for queryRunId=... - Number of
+                # state stores falling behind: N") reports upload
+                # cadence, not a fault
+                "StateStoreCoordinator Snapshot Lag " in line
                 # the explicitly-ignored maintenance header itself...
-                "Ignoring error while performing maintenance" in line
+                or "Ignoring error while performing maintenance" in line
                 # ...or its FNF payload on the gone temp checkpoint
                 or (
                     "FileNotFoundException" in line

@@ -1950,8 +1950,9 @@ def test_extreme_ids_fixture_matches_oracle(spark, tmp_path_factory):
 
 def test_statestore_stderr_classifier():
     """Round-11 ADVICE #4: the streamstate smoke's stderr scan must be
-    LEVEL-anchored — benign INFO lines that merely mention an error, or
-    class names containing 'Error', must not count; real WARN/ERROR
+    LEVEL-anchored — benign INFO lines that merely mention an error,
+    class names containing 'Error', or the coordinator's snapshot-lag
+    WARN report must not count; real WARN/ERROR
     headers and JVM exception headers (even 2-3 lines below the
     provider tag) must."""
     from scale_smoke import _count_statestore_hits
@@ -1973,6 +1974,11 @@ def test_statestore_stderr_classifier():
         "25/08/16 10:00:05 WARN HDFSBackedStateStoreProvider: "
         "java.io.FileNotFoundException: /tmp/temporary-abc "
         "FileNotFoundException on gone dir",
+        # the coordinator's periodic snapshot-lag report
+        "25/08/16 10:00:06 WARN StateStoreCoordinator: "
+        "StateStoreCoordinator Snapshot Lag Report for "
+        "queryRunId=0b9e2f4c-1d2a-4c1e-9a57-1f0e3c2d4b6a - "
+        "Number of state stores falling behind: 4",
     ])
     n, lines = _count_statestore_hits(benign)
     assert n == 0, lines

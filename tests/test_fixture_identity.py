@@ -251,6 +251,37 @@ def test_scratch_epochs_of_concurrent_callers_survive(tiny_sf):
     assert len(set(paths)) == len(paths) == 40
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "scan_csv",
+        "scan_jsonl",
+        "scan_text",
+        "sink_parquet",
+        "sink_csv",
+        "sink_jsonl",
+        "sink_upsert",
+        "sink_orc",
+        "sink_python_ds",
+        "scan_merge_schema",
+        "scan_jsonl_nested",
+    ],
+)
+def test_held_result_of_a_write_then_read_op_survives_a_second_call(
+    spark, name
+):
+    """An op that writes files and returns a lazy read of them: calling
+    it again must not delete or overwrite the files the caller's first
+    result still reads."""
+    first = QUERIES[name](spark, SF_DIR)
+    QUERIES[name](spark, SF_DIR)
+    duck = make_duckdb(SF_DIR)
+    try:
+        compare_frames(name, first, duck, ORACLES[name])
+    finally:
+        duck.close()
+
+
 def test_memo_concurrent_first_lookup_and_failures(tiny_sf):
     def compute():
         time.sleep(0.05)

@@ -109,10 +109,11 @@ def test_bucketed_join_has_no_join_side_shuffle(spark, sf_dir):
 def test_partitioned_sink_enables_partition_pruning(spark, sf_dir):
     """Reading one l_returnflag from the partitionBy'd sink must prune
     to that partition directory (PartitionFilters, not a data filter)."""
-    QUERIES["sink_parquet"](spark, sf_dir).collect()  # materialize sink
-    from pymapreduce_spark.sources.scans import _scratch
+    from urllib.parse import unquote, urlparse
 
-    path = _scratch(sf_dir, "lineitem_by_flag")
+    sink = QUERIES["sink_parquet"](spark, sf_dir)  # materializes the sink
+    part = unquote(urlparse(sink.inputFiles()[0]).path)
+    path = os.path.dirname(os.path.dirname(part))  # above l_returnflag=X/
     df = spark.read.parquet(path).where("l_returnflag = 'A'")
     plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
@@ -286,6 +287,27 @@ def test_forward_fill_is_single_exchange_no_join(spark, sf_dir):
     (the naive formulation is a self as-of join)."""
     plan = plan_of("ts_forward_fill", spark, sf_dir)
     assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "name", ["join_asof", "join_asof_forward", "join_asof_nearest"]
+)
+def test_asof_join_is_two_keyed_exchanges_no_join(name, spark, sf_dir):
+    """An as-of join is a union carried by one window, not a join: one
+    exchange for the per-(user, time) view aggregate and one for the
+    carry window on user_id."""
+    import re
+
+    plan = plan_of(name, spark, sf_dir)
+    assert plan.count("Exchange") == 2, plan
+    keys = sorted(
+        re.sub(r"#\d+L?", "", k).split(", ")
+        for k in re.findall(r"Exchange hashpartitioning\((.*), \d+\)", plan)
+    )
+    assert len(keys) == 2, plan
+    assert keys[0] == ["user_id"], plan
+    assert len(keys[1]) == 2 and keys[1][0] == "user_id", plan
     assert "Join" not in plan, plan
 
 

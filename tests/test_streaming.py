@@ -358,167 +358,22 @@ def test_registered_stream_python_ds_replay(spark, tmp_path):
     )
 
 
-def test_tws_processor_matches_legacy_track():
-    """stream_stateful_timers ships two implementation paths — the
-    transformWithStateInPandas processor (requires google.protobuf,
-    absent in this container) and the applyInPandasWithState
-    EventTimeTimeout form (the executable, driver-attested path). This
-    pins their session logic EQUIVALENT with fake handles/state, so
-    the protobuf-gated path is covered by construction: same gap
-    splits, same emitted frames, same timer arithmetic, same
-    strictly-greater watermark boundary."""
-    import pandas as pd
-
-    from pymapreduce_spark.streaming.core import (
-        _SESSION_GAP_US,
-        _SessionTimeoutProcessor,
-        _session_due_ms,
-        _session_timeout_track,
-    )
-
-    def batch(ts_us, ids):
-        return pd.DataFrame(
-            {
-                "ts": pd.to_datetime(pd.Series(ts_us), unit="us"),
-                "event_id": ids,
-            }
-        )
-
-    base = 1_600_000_000_000_000  # some µs epoch
-    gap = _SESSION_GAP_US
-    # batch 1: two events 10 min apart; batch 2: a gap split then one
-    # more event in the new session (non-ms-aligned µs on purpose)
-    b1 = batch([base + 1, base + 600_000_000 + 3], [7, 9])
-    b2 = batch(
-        [base + 600_000_000 + 3 + gap + 5, base + 600_000_000 + 3 + gap + 10],
-        [11, 12],
-    )
-
-    # --- TWS processor with fakes ---
-    class FakeValueState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-        def clear(self):
-            self.v = None
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-            self.timers = []
-
-        def getValueState(self, name, schema):
-            return self.state
-
-        def listTimers(self):
-            return iter(list(self.timers))
-
-        def deleteTimer(self, t):
-            self.timers.remove(t)
-
-        def registerTimer(self, t):
-            self.timers.append(t)
-
-    class FakeTimerValues:
-        def __init__(self, wm_ms):
-            self._wm = wm_ms
-
-        def getCurrentWatermarkInMs(self):
-            return self._wm
-
-    class FakeExpiredTimerInfo:
-        def __init__(self, t_ms):
-            self._t = t_ms
-
-        def getExpiryTimeInMs(self):
-            return self._t
-
-    proc = _SessionTimeoutProcessor()
-    handle = FakeHandle()
-    proc.init(handle)
-    tws_out = []
-    tws_out += list(proc.handleInputRows((42,), iter([b1]), None))
-    tws_out += list(proc.handleInputRows((42,), iter([b2]), None))
-    assert len(handle.timers) == 1  # exactly one armed timer
-    due = handle.timers[0]
-    # a timer at/below the due boundary must NOT emit (re-arms instead)
-    assert not list(
-        proc.handleExpiredTimer(
-            (42,), FakeTimerValues(due), FakeExpiredTimerInfo(due)
-        )
-    )
-    tws_out += list(
-        proc.handleExpiredTimer(
-            (42,), FakeTimerValues(due + 1), FakeExpiredTimerInfo(due)
-        )
-    )
-    assert handle.state.v is None  # state evicted on firing
-
-    # --- legacy EventTimeTimeout form with a fake GroupState ---
-    class FakeGroupState:
-        def __init__(self):
-            self.v = None
-            self.hasTimedOut = False
-            self.timeout = None
-            self.wm = 0
-
-        @property
-        def exists(self):
-            return self.v is not None
-
-        @property
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-        def remove(self):
-            self.v = None
-
-        def setTimeoutTimestamp(self, t):
-            self.timeout = t
-
-        def getCurrentWatermarkMs(self):
-            return self.wm
-
-    st = FakeGroupState()
-    legacy_out = []
-    legacy_out += list(_session_timeout_track((42,), iter([b1]), st))
-    legacy_out += list(_session_timeout_track((42,), iter([b2]), st))
-    assert st.timeout == due  # same timer arithmetic
-    st.hasTimedOut = True
-    legacy_out += list(_session_timeout_track((42,), iter([]), st))
-    assert st.v is None
-
-    # identical emissions: the batch-2 gap split + the timed-out tail
-    assert len(tws_out) == len(legacy_out) == 2
-    for a, b in zip(tws_out, legacy_out):
-        pd.testing.assert_frame_equal(a, b)
-    # and the due-time math is the pinned ceil-to-ms
-    last_us = int(b2["ts"].iloc[-1].value // 1000)
-    assert due == _session_due_ms(last_us)
-    assert due == -((-(last_us + _SESSION_GAP_US)) // 1000)
-
-
 def test_legacy_clamp_branch_divergence():
-    """Round-11 ADVICE #2: exercise the legacy path's defensive clamp
-    (``setTimeoutTimestamp(max(due, wm+1))``) — the branch where the
-    batch's session due-time is already at/below the current watermark
-    (a born-late event). The TWS twin registers the raw due time and
-    fires as soon as ``wm > due``; the legacy surface can only arm at
-    ``wm+1``, so it under-emits until the watermark advances PAST
-    ``wm+1``. This pins the divergence as designed-and-documented
-    (streaming/core.py clamp comment) rather than silent."""
+    """The session-timeout state machine (_session_timeout_track) with a
+    fake GroupState, on both timer branches.
+
+    Unclamped: a gap split across two batches emits the closed session;
+    the timer is armed at the pinned ceil-to-ms due time; the timed-out
+    call emits the trailing session once and evicts its state.
+
+    Clamped (round-11 ADVICE #2): when the batch's session due time is
+    already at/below the current watermark (a born-late event), the
+    timer can only arm at ``wm+1``, so the session is emitted only once
+    the watermark advances PAST ``wm+1`` — later than the oracle's
+    strict ``wm > due`` boundary. This pins the divergence as
+    designed-and-documented (streaming/core.py clamp comment) rather
+    than silent."""
+    import numpy as np
     import pandas as pd
 
     from pymapreduce_spark.streaming.core import (
@@ -555,13 +410,50 @@ def test_legacy_clamp_branch_divergence():
         def getCurrentWatermarkMs(self):
             return self.wm
 
-    base = 1_600_000_000_000_000
-    b = pd.DataFrame(
-        {
-            "ts": pd.to_datetime(pd.Series([base + 1]), unit="us"),
-            "event_id": [1],
-        }
-    )
+    def batch(ts_us):
+        return pd.DataFrame(
+            {
+                "ts": pd.to_datetime(pd.Series(ts_us), unit="us"),
+                "event_id": range(len(ts_us)),
+            }
+        )
+
+    def session(start_us, last_us, n):
+        def us(v):
+            return np.array([v], dtype="int64").view("datetime64[us]")
+
+        return pd.DataFrame(
+            {
+                "user_id": np.array([42], dtype="int64"),
+                "session_start": us(start_us),
+                "session_end": us(last_us + _SESSION_GAP_US),
+                "n_events": np.array([n], dtype="int64"),
+            }
+        )
+
+    base = 1_600_000_000_000_000  # some µs epoch
+    gap = _SESSION_GAP_US
+    # batch 1: two events 10 min apart; batch 2: a gap split then one
+    # more event in the new session (non-ms-aligned µs on purpose)
+    first_last = base + 600_000_000 + 3
+    second = [first_last + gap + 5, first_last + gap + 10]
+    st = FakeGroupState(0)
+    b1 = batch([base + 1, first_last])
+    assert list(_session_timeout_track((42,), iter([b1]), st)) == []
+    out = list(_session_timeout_track((42,), iter([batch(second)]), st))
+    assert len(out) == 1
+    pd.testing.assert_frame_equal(out[0], session(base + 1, first_last, 2))
+    assert st.v == (second[0], second[1], 2)
+    # the pinned ceil-to-ms due time of the trailing session
+    assert st.timeout == _session_due_ms(second[1])
+    assert st.timeout == -((-(second[1] + gap)) // 1000)
+    st.hasTimedOut = True
+    out = list(_session_timeout_track((42,), iter([]), st))
+    assert len(out) == 1
+    pd.testing.assert_frame_equal(out[0], session(second[0], second[1], 2))
+    assert st.v is None  # state evicted on firing
+
+    b = batch([base + 1])
     due = _session_due_ms(base + 1)
     # watermark already an hour past the session's due time at update
     wm = due + 3_600_000
@@ -572,9 +464,9 @@ def test_legacy_clamp_branch_divergence():
     # this is exactly the boundary shift the docstring documents
     assert st.timeout == wm + 1
     assert st.timeout > due
-    # oracle / TWS boundary would have emitted at any wm' > due; the
-    # legacy path stays silent until Spark fires the wm+1 timeout
-    # (i.e. under-emits if the watermark never advances past wm+1)
+    # the oracle's boundary would have emitted at any wm' > due; the
+    # track stays silent until Spark fires the wm+1 timeout (i.e.
+    # under-emits if the watermark never advances past wm+1)
 
 
 def test_session_fold_out_of_order_in_gap():
