@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pymapreduce_spark.io import table_row_count
-from pymapreduce_spark.operators.llm_vector import _wf
+from pymapreduce_spark.operators.llm_vector import _wf, llm_knn_self_join
 from pymapreduce_spark.registry import query
 
 
@@ -25,6 +25,26 @@ def _edge_partitions(sf_dir: str, per_partition: int = 250_000) -> int:
     floor 1 — the fixture graphs run single-partition (scheduler floor
     dominates), a 10⁹-edge graph runs 4000-way."""
     return max(1, table_row_count(sf_dir, "embeddings") // per_partition)
+
+
+def _knn_edges(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """The k-NN similarity graph as directed ``(src, dst)`` edges: each
+    vector points at its k nearest cosine neighbors (ties → lower id),
+    from the exact tile-scan kernel ``llm_knn_self_join``."""
+    return (
+        llm_knn_self_join(spark, sf_dir)
+        .where(F.col("nn_rank") <= k)
+        .select(
+            F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
+        )
+    )
+
+
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """``edges(src, dst)`` plus every edge reversed (UNION ALL)."""
+    return edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
 
 
 def connected_components(
@@ -63,9 +83,7 @@ def connected_components(
     # Checkpoint the symmetric edge set FIRST and derive the label table
     # from the checkpointed edges — the edge build (here: a kNN kernel)
     # would otherwise be evaluated once per eager checkpoint.
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = _symmetric(edges)
     # Iteration parallelism should track EDGE volume, not the session's
     # shuffle width: a small graph iterated at 32-way parallelism pays
     # ~6 rounds × 32 near-empty tasks of pure scheduler floor (measured
@@ -193,15 +211,8 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked differential for an iterative algorithm (closure is
     O(Σ size²), fine at oracle scale; the Spark side is O(E·log n) and
     is the 100 TB path)."""
-    from pymapreduce_spark.operators.llm_vector import llm_knn_self_join
-
-    nn1 = (
-        llm_knn_self_join(spark, sf_dir)
-        .where(F.col("nn_rank") == 1)
-        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
-    )
     comp = connected_components(
-        nn1, num_partitions=_edge_partitions(sf_dir)
+        _knn_edges(spark, sf_dir, 1), num_partitions=_edge_partitions(sf_dir)
     )
     return comp.groupBy("component").agg(F.count("*").alias("n_nodes"))
 
@@ -266,7 +277,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``nodes`` table makes growth linear (5 × (join+agg+join)) and the
     whole unroll runs as a single job instead of 1 + 5 checkpoint jobs
     (interleaved A/B at sf0.1, iteration half only, identical output:
-    median 1.35 s → 1.03 s — tools/probe_pagerank_ab.py; it also drops
+    median 1.35 s → 1.03 s — OPTIMIZATION_r14.md; it also drops
     five per-step cached RDD copies of the rank table, which at scale
     is executor memory, guide §5). An unbounded/data-dependent
     iteration count would need the
@@ -274,14 +285,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop genuinely must materialize per round. True degree-weighted
     PageRank swaps the constant 17 for 17·S/outdeg with a precomputed
     out-degree table."""
-    from pymapreduce_spark.operators.llm_vector import llm_knn_self_join
-
     nn1 = (
-        llm_knn_self_join(spark, sf_dir)
-        .where(F.col("nn_rank") == 1)
-        .select(
-            F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
-        )
+        _knn_edges(spark, sf_dir, 1)
         .repartition(_edge_partitions(sf_dir))
         .localCheckpoint(eager=True)
     )
@@ -332,13 +337,7 @@ def graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two partial-aggregable groupBys over the edge list; the edge build
     itself is the blocked kNN kernel (`llm_knn_self_join`), so the 100 TB
     path inherits its broadcast-block structure."""
-    from pymapreduce_spark.operators.llm_vector import llm_knn_self_join
-
-    nn1 = (
-        llm_knn_self_join(spark, sf_dir)
-        .where(F.col("nn_rank") == 1)
-        .select(F.col("neighbor_id").alias("node"))
-    )
+    nn1 = _knn_edges(spark, sf_dir, 1).select(F.col("dst").alias("node"))
     return (
         nn1.groupBy("node")
         .agg(F.count("*").alias("in_degree"))
@@ -403,16 +402,10 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction — general graphs would pre-split high-degree nodes.
     Wedge count Σ deg·(deg−1)/2 is an exact integer fold; the only
     double is the final 3·Δ/wedges ratio, sealed by round(4)."""
-    from pymapreduce_spark.operators.llm_vector import llm_knn_self_join
-
-    nn = (
-        llm_knn_self_join(spark, sf_dir)
-        .where(F.col("nn_rank") <= 3)
-        .select("query_id", "neighbor_id")
-    )
+    nn = _knn_edges(spark, sf_dir, 3)
     und = nn.select(
-        F.least("query_id", "neighbor_id").alias("a"),
-        F.greatest("query_id", "neighbor_id").alias("b"),
+        F.least("src", "dst").alias("a"),
+        F.greatest("src", "dst").alias("b"),
     ).distinct().localCheckpoint(eager=True)
 
     e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
@@ -496,18 +489,8 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint lineage cuts, and convergence trick as
     connected_components, at edge-scaled parallelism. The oracle
     recomputes distances with a bounded recursive CTE."""
-    from pymapreduce_spark.operators.llm_vector import llm_knn_self_join
-
-    nn1 = (
-        llm_knn_self_join(spark, sf_dir)
-        .where(F.col("nn_rank") == 1)
-        .select(F.col("query_id").alias("src"),
-                F.col("neighbor_id").alias("dst"))
-    )
     sym = (
-        nn1.union(
-            nn1.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+        _symmetric(_knn_edges(spark, sf_dir, 1))
         .repartition(_edge_partitions(sf_dir))
         .localCheckpoint(eager=True)
     )
@@ -593,18 +576,8 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     never materializing neighbor sets as arrays (the formulation that
     dies on hub nodes). The union term is inclusion–exclusion from
     exact integer degrees."""
-    from pymapreduce_spark.operators.llm_vector import llm_knn_self_join
-
-    nn1 = (
-        llm_knn_self_join(spark, sf_dir)
-        .where(F.col("nn_rank") <= 3)
-        .select(F.col("query_id").alias("src"),
-                F.col("neighbor_id").alias("dst"))
-    )
     edges = (
-        nn1.union(
-            nn1.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+        _symmetric(_knn_edges(spark, sf_dir, 3))
         .distinct()
         .repartition(_edge_partitions(sf_dir))
         .localCheckpoint(eager=True)

@@ -161,20 +161,6 @@ def cluster_near_duplicates(
     unique replica corpus went 507 s → seconds; see README scale
     section)."""
     min_jaccard = 1.0 - max_jaccard_dist
-    n_bands = n_hashes // band_rows
-    sig = F.expr(
-        f"""
-        transform(sequence(0, {n_hashes - 1}), i ->
-            array_min(transform(sh,
-                s -> substr(md5(concat(s, '#', cast(i AS string))), 1, 16))))
-        """
-    )
-    band_keys = F.expr(
-        f"""
-        transform(sequence(0, {n_bands - 1}), b ->
-            concat_ws('|', slice(sig, b * {band_rows} + 1, {band_rows})))
-        """
-    )
     # Null-safe fingerprint: md5(NULL) is NULL, and both the reps
     # groupBy→membership join and the rep_labels join below are plain
     # equi-joins that DROP NULL keys — a NULL-text doc would silently
@@ -192,9 +178,7 @@ def cluster_near_duplicates(
         reps.withColumn("words", F.split("text", " "))
         .select("doc_id", F.expr(_SHINGLES_EXPR).alias("sh"))
     )
-    bands = sh.withColumn("sig", sig).select(
-        "doc_id", F.posexplode(band_keys).alias("band_idx", "band_key")
-    )
+    bands = _minhash_bands(sh, n_hashes, band_rows)
     cands = (
         bands.alias("a")
         .join(
@@ -401,19 +385,35 @@ def llm_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def minhash_signature_expr(n_hashes: int = 16):
-    """Internal building block: the 16-slot MinHash signature as ONE
-    array column (array<string> of 16-hex-char hashes) — what LSH
-    banding consumes. Pure Catalyst higher-order expression, no shuffle.
-    md5 (not xxhash64) so the same permutation family is computable by
-    any engine; swap for xxhash64 when cross-engine parity isn't needed."""
+def minhash_signature_expr(elements: str, n_hashes: int = 16):
+    """The n-slot MinHash signature of the string array ``elements`` (a
+    SQL expression) as ONE array column (array<string> of 16-hex-char
+    hashes): slot i is the min over the elements of
+    ``md5(element || '#' || i)``, a salted-md5 permutation family. The
+    engine's one MinHash builder — what LSH banding consumes. Pure
+    Catalyst higher-order expression, no shuffle. md5 (not xxhash64) so
+    the same permutation family is computable by any engine; swap for
+    xxhash64 when cross-engine parity isn't needed."""
     return F.expr(
         f"""
         transform(sequence(0, {n_hashes - 1}), i ->
-            array_min(transform(array_distinct(split(text, ' ')),
-                w -> substr(md5(concat(w, '#', cast(i AS string))), 1, 16))))
+            array_min(transform({elements},
+                s -> substr(md5(concat(s, '#', cast(i AS string))), 1, 16))))
         """
     )
+
+
+def _minhash_bands(sh: DataFrame, n_hashes: int, band_rows: int) -> DataFrame:
+    """LSH band keys of each document's shingle set ``sh(doc_id, sh)``:
+    one (doc_id, band_idx, band_key) row per band, the key being the
+    band's ``band_rows`` signature slots joined by '|'."""
+    band_keys = F.expr(
+        f"transform(sequence(0, {n_hashes // band_rows - 1}), b ->"
+        f" concat_ws('|', slice(sig, b * {band_rows} + 1, {band_rows})))"
+    )
+    return sh.withColumn(
+        "sig", minhash_signature_expr("sh", n_hashes)
+    ).select("doc_id", F.posexplode(band_keys).alias("band_idx", "band_key"))
 
 
 @query(
@@ -458,7 +458,9 @@ def llm_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return docs.select(
         "doc_id",
-        F.posexplode(minhash_signature_expr(16)).alias("sig_idx", "sig_hash"),
+        F.posexplode(
+            minhash_signature_expr("array_distinct(split(text, ' '))")
+        ).alias("sig_idx", "sig_hash"),
     )
 
 
@@ -2958,29 +2960,17 @@ def llm_lsh_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     bill Σ c·(c−1)/2 — the report that decides band/row parameters
     BEFORE running fuzzy dedup at scale (one hot bucket of 10⁵ docs is
     5×10⁹ candidate pairs; this table is where that shows up as one
-    number instead of a dead cluster). Uses cluster_near_duplicates'
-    exact salted-md5 signature and banding expressions, so the
-    diagnosis describes precisely the join llm_dedup_fuzzy will run."""
+    number instead of a dead cluster). Bands through
+    cluster_near_duplicates' own :func:`_minhash_bands` at its defaults,
+    so the diagnosis describes precisely the join llm_dedup_fuzzy will
+    run."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
-    )
-    sig = F.expr(
-        """
-        transform(sequence(0, 15), i ->
-            array_min(transform(sh,
-                s -> substr(md5(concat(s, '#', cast(i AS string))), 1, 16))))
-        """
-    )
-    band_keys = F.expr(
-        "transform(sequence(0, 7), b ->"
-        " concat_ws('|', slice(sig, b * 2 + 1, 2)))"
     )
     sh = docs.withColumn("words", F.split("text", " ")).select(
         "doc_id", F.expr(_SHINGLES_EXPR).alias("sh")
     )
-    bands = sh.withColumn("sig", sig).select(
-        "doc_id", F.posexplode(band_keys).alias("band_idx", "band_key")
-    )
+    bands = _minhash_bands(sh, n_hashes=16, band_rows=2)
     buckets = bands.groupBy("band_idx", "band_key").agg(
         F.count("*").alias("c")
     )

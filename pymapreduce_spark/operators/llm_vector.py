@@ -12,11 +12,9 @@ cosine ≡ dot product throughout.
   correctness baseline; its cost is O(|queries|·N).
 - Scale paths: query-side ANN is BRP-LSH / IVF cell probing (bounded
   candidates per query, recall@k ≥ 0.9 vs exact asserted in
-  tests/test_llm.py); corpus-wide near-dup candidates come from
-  signed-random-projection band joins (AND-OR amplified sign bits —
-  Spark ML's BRP-LSH has no AND step, so single-projection buckets
-  degenerate on unit vectors); corpus-wide exact kNN tiles the O(N²)
-  GEMM with ≤100 MB broadcasts per tile.
+  tests/test_llm.py); corpus-wide exact kNN and near-dup pairs share
+  one tile scan that tiles the O(N²) GEMM with ≤100 MB broadcasts per
+  tile.
 - Dot products are computed in double (`zip_with` → `aggregate`, same
   left-to-right fold as DuckDB's list_dot_product) so both engines see
   bit-identical cosines.
@@ -51,51 +49,9 @@ def _dot(a, b):
     )
 
 
-def _ord_dots(Q, C):
-    """All Q-row × C-row dot products with a POSITION-INDEPENDENT,
-    block-independent summation order: ``einsum(optimize=False)``
-    accumulates the contraction index per output element in a fixed
-    pattern, so identical input vectors yield bit-identical dots no
-    matter where they sit in the matrices or how the caller blocks
-    them.
-
-    BLAS ``Q @ C.T`` does NOT have that property (r13 find, inherited
-    tests/test_adversarial_input combined-fixture failure): its blocked
-    micro-kernels give identical logical inputs last-ulp-DIFFERENT
-    results by output position (measured: dot(copy, copy) =
-    …370421763 at columns 0–12 but …370421766 at column 498 of the
-    same GEMM), and the kernel choice shifts with runtime CPU dispatch
-    — so under the adversarial exact-copy tie groups the id tie-break
-    never engages for the jittered members and the 1-NN edge set
-    diverges from DuckDB's uniform sequential fold (green at r12
-    judging, red after a host change, deterministic within each). Every
-    value that a cross-engine-compared ranking or threshold DECIDES ON
-    or EMITS must therefore come from this family, never bare BLAS.
-
-    Cost vs dgemm: ~1.6–19× slower at kernel shapes (memory-bound
-    single pass; measured 80 ms vs 4 ms at 2000×2000×64, 3.8× at the
-    250 k tile shape) — cheap enough for small heads and boundary
-    patches, too slow as the bulk kernel (an all-einsum semdedup blew
-    the vectors smoke's x100 step bound, 100.9 vs <35). The hot
-    kernels therefore run HYBRID: BLAS for the full matrix, this
-    helper to recompute the tiny slice whose comparison outcome could
-    depend on jitter (candidates within ``_TIE_EPS`` of a top-k cutoff
-    or a threshold/rounding boundary) plus every emitted value. The
-    slack works because per-element |BLAS − fold| is a few ulps
-    (~1e-13 relative) while _TIE_EPS = 1e-9, and order statistics are
-    1-Lipschitz in sup norm — the true top-k is always inside the
-    eps-expanded head. The head recompute uses :func:`_ord_pair_dots`
-    (the exact DuckDB-order fold, stronger than einsum — see there);
-    this einsum form remains only where a position-uniform BULK pass
-    is needed with no cross-engine value emission (SRP sign bits)."""
-    import numpy as np
-
-    return np.einsum("bd,nd->bn", Q, C, optimize=False)
-
-
 #: Slack margin for hybrid BLAS+fold comparisons — dwarfs the few-ulp
 #: GEMM position jitter, still selective enough that slack heads stay
-#: tiny on real similarity distributions (see _ord_dots).
+#: tiny on real similarity distributions (see _ord_pair_dots).
 _TIE_EPS = 1e-9
 
 
@@ -114,13 +70,37 @@ def _ord_pair_dots(A, B):
     ``list_dot_product`` and Spark's ``F.aggregate`` fold (:func:`_dot`),
     not merely position-uniform. The fold runs column-by-column
     (``out += P[:, j]``), so every row accumulates left-to-right from
-    0.0 exactly like both engines, in d vectorized passes — O(pairs·d)
-    like einsum, no per-row Python.
+    0.0 exactly like both engines, in d vectorized passes — O(pairs·d),
+    no per-row Python.
 
-    Why exact and not einsum (r13 verdict gate-breaker): emitted
-    cosines with |v| ≥ 1e9 skip ``round_sane``'s rounding, so the raw
-    double must be BIT-equal to DuckDB's fold — and einsum's fixed
-    accumulation is position-uniform but NOT fold-equal at huge
+    BLAS only selects; this fold decides. BLAS ``Q @ C.T`` is not
+    position-independent (r13 find, inherited
+    tests/test_adversarial_input combined-fixture failure): its blocked
+    micro-kernels give identical logical inputs last-ulp-DIFFERENT
+    results by output position (measured: dot(copy, copy) =
+    …370421763 at columns 0–12 but …370421766 at column 498 of the
+    same GEMM), and the kernel choice shifts with runtime CPU dispatch
+    — so under the adversarial exact-copy tie groups the id tie-break
+    never engages for the jittered members and the 1-NN edge set
+    diverges from DuckDB's uniform sequential fold. Every value that a
+    cross-engine-compared ranking or threshold DECIDES ON or EMITS
+    must therefore come from this fold, never bare BLAS.
+
+    An order-fixed pass is too slow as the bulk kernel (an
+    all-einsum semdedup blew the vectors smoke's x100 step bound, 100.9
+    vs <35), so the hot kernels run HYBRID: BLAS for the full matrix,
+    this fold for the tiny slice whose comparison outcome could depend
+    on jitter (candidates within ``_slack`` of a top-k cutoff or a
+    threshold/rounding boundary) plus every emitted value. The slack
+    works because per-element |BLAS − fold| is a few ulps (~1e-13
+    relative) while _TIE_EPS = 1e-9, and order statistics are
+    1-Lipschitz in sup norm — the true top-k is always inside the
+    eps-expanded head.
+
+    Why the exact fold and not einsum's fixed accumulation (r13 verdict
+    gate-breaker): emitted cosines with |v| ≥ 1e9 skip ``round_sane``'s
+    rounding, so the raw double must be BIT-equal to DuckDB's fold —
+    and einsum is position-uniform but NOT fold-equal at huge
     magnitude (measured: 228/300 random 1e30-scale trials differ from
     DuckDB, 0/300 for this fold). Using the true fold for every
     recomputed head value also makes rank order identical to the
@@ -533,187 +513,36 @@ def llm_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs above a threshold
     (canonicalized a < b). Threshold 0.45 exercises the operator on the
     fixture's cosine distribution (max ≈ 0.51); production near-dup
-    uses ≥ 0.95, where the LSH candidate path prunes even harder.
+    uses ≥ 0.95.
 
-    The exact all-pairs form is the oracle-checkable baseline and is
-    gated IN CODE to small corpora: above ``_DEDUP_EMBED_MAX_ROWS`` the
-    operator switches to :func:`_dedup_embed_lsh`, which dispatches on
-    the threshold. At THIS threshold (0.45 — inside the random-cosine
-    noise band, where no sub-quadratic candidate generator can
-    amplify) the dispatcher always picks the exact tiled pair scan, so
-    the shipped >gate path keeps recall 1.0 (pinned by
-    tests/test_llm.py's past-the-gate planted-duplicate check). At
-    production near-dup thresholds (≥ ~0.95) it instead bands via
-    signed random projections with ≥99 % engineered at-threshold
-    recall, candidate volume linear in N by construction. (A
-    FORCE-banded experiment at 0.45 measured recall 0.27 with 0 false
-    positives — the information-theoretic loss that motivates the
-    exact-tiled dispatch; that configuration is unreachable through
-    the registered operator.)"""
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", _as_double("embedding").alias("e")
+    One exact path at every corpus size: :func:`_tile_scan` with
+    :func:`_near_dup_block` — one map-side pass per ≤ 100 MB corpus
+    tile, no shuffle, no pair join. With several tiles each tile's pairs
+    are checkpointed and unioned (a tile's pairs never meet another
+    tile's: each pair surfaces once, from the tile holding vec_b).
+    Rounding happens once, after the scan.
+
+    No candidate generator replaces the scan: 0.45 sits inside the
+    random-cosine noise band, where sign-bit banding cannot amplify (a
+    ≥ 99 %-recall signed-random-projection band join would need more
+    than 800 bands of ≥ 12 bits at any corpus size, and a force-banded
+    run measured recall 0.27), so recall 1.0 costs the O(N²·d) GEMM,
+    which the tile scan spreads over tasks × tiles."""
+    emb = load_embeddings(spark, sf_dir).select("vec_id", "embedding")
+
+    def checkpoint_union(pairs, part):
+        part = part.localCheckpoint(eager=True)
+        return part if pairs is None else pairs.unionByName(part)
+
+    pairs = _tile_scan(
+        emb,
+        table_row_count(sf_dir, "embeddings"),
+        partial(_near_dup_block, threshold=0.45),
+        "vec_a bigint, vec_b bigint, cos double",
+        checkpoint_union,
     )
-    n_rows = table_row_count(sf_dir, "embeddings")
-    if n_rows > _DEDUP_EMBED_MAX_ROWS:
-        return _dedup_embed_lsh(emb, threshold=0.45, n_rows=n_rows)
-    a = emb.select(F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("vec_b"), F.col("e").alias("eb"))
-    return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cos", _dot(F.col("ea"), F.col("eb")))
-        .where(F.col("cos") >= 0.45)
-        .select(
-            "vec_a", "vec_b", round_sane("cos", 6).alias("cosine")
-        )
-    )
-
-
-#: Above this corpus size the exact O(N²) pair join is off-limits and
-#: :func:`_dedup_embed_lsh` takes over (20 k rows ≈ 2×10⁸ candidate
-#: pairs — the most the demo form should ever chew).
-_DEDUP_EMBED_MAX_ROWS = 20_000
-
-
-#: Largest OR-amplification width the banded near-dup path may use:
-#: candidate-generation cost is linear in n_bands, and past this width
-#: the exact tiled pair scan is cheaper than hashing anyway.
-_SRP_MAX_BANDS = 128
-
-
-def _srp_params(threshold: float, n_rows: int) -> tuple[int, int]:
-    """(bits_per_band, n_bands) for signed-random-projection banding.
-
-    bits = max(12, ⌈log2 N⌉) keeps EXPECTED random collisions per band
-    at Σ|bucket|² ≈ N²/2^bits ≤ N — candidate volume linear in N by
-    construction at any corpus size. n_bands is solved for ≥99 % recall
-    of a pair sitting exactly AT the threshold (per-hyperplane sign
-    agreement p = 1 − acos(t)/π, band survival 1 − (1 − p^bits)^bands);
-    closer pairs recall strictly higher, exact duplicates always
-    collide. The solution exceeds _SRP_MAX_BANDS when the threshold is
-    too low for banding to amplify (p barely above the random 0.5) —
-    the dispatcher falls back to the exact tiled scan there."""
-    import math
-
-    bits = max(12, math.ceil(math.log2(max(n_rows, 2))))
-    p_bit = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
-    p_band = p_bit**bits
-    if p_band >= 1.0:
-        return bits, 1
-    if p_band <= 0.0:
-        return bits, _SRP_MAX_BANDS + 1
-    return bits, max(
-        1, math.ceil(math.log(0.01) / math.log(1.0 - p_band))
-    )
-
-
-def _dedup_embed_lsh(
-    emb: DataFrame, threshold: float, n_rows: int | None = None
-) -> DataFrame:
-    """Near-dup pairs at scale — the >``_DEDUP_EMBED_MAX_ROWS`` path.
-
-    Two regimes, dispatched on what the threshold makes possible:
-
-    - **Banded (sub-quadratic)** when ``_srp_params`` solves ≥99 %
-      at-threshold recall within ``_SRP_MAX_BANDS``: signed-random-
-      projection AND-OR banding (seed 42) — two vectors are candidates
-      iff ALL sign bits of some band agree — and every candidate is
-      exact-verified with the true dot product, so precision is exact
-      and recall is the engineered banding probability. This is the
-      production regime (thresholds ≥ ~0.95 at N = 10⁹ — at bits = 30
-      the ≥99 % band solution fits the _SRP_MAX_BANDS cap only from
-      ~0.946 up (0.946 → 127 bands, 0.93 → 210 > 128, which dispatches
-      to the exact tiled scan instead); ≥ ~0.9 at 10⁶ —
-      tests/test_llm.py pins the envelope at 0.95 across sizes).
-    - **Exact tiled pair scan (recall 1.0)** otherwise: a low
-      threshold sits inside the random-cosine noise band, where NO
-      sub-quadratic candidate generator can amplify (the sign-
-      agreement gap over random pairs vanishes), so the honest scale
-      path is the distributed O(N²·d) GEMM — :func:`_tile_scan` with
-      :func:`_near_dup_block`: corpus tiles of ≤ _KNN_TILE_ROWS
-      broadcast one at a time, every vector streams against the tile,
-      pairs emitted once via the a < b orientation.
-      BLAS absorbs the quadratic term the way a 1000-executor cluster
-      would (tasks × tiles), with every single working set bounded.
-
-    Both replace a BucketedRandomProjectionLSH ``approxSimilarityJoin``
-    that was degenerate on this geometry: one scalar projection per
-    hash table over unit vectors (std 1/√d) collapses into ~4 occupied
-    buckets per table at bucketLength 0.5, so the bucket join
-    enumerated ~N² candidate PAIRS — the quadratic product the scale
-    path exists to avoid, paid in shuffle rows rather than BLAS flops.
-    Spark ML's BRP-LSH has no AND-amplification (one projection per
-    table), so tight buckets need the custom band key; the shape is
-    the MinHash band join llm_dedup_fuzzy already runs, with sign bits
-    instead of min-hashes."""
-    import numpy as np
-
-    if n_rows is None:
-        n_rows = emb.count()
-    if n_rows < 2:
-        return emb.sparkSession.createDataFrame(
-            [], "vec_a bigint, vec_b bigint, cosine double"
-        )
-    bits, n_bands = _srp_params(threshold, n_rows)
-    if n_bands > _SRP_MAX_BANDS:
-
-        def checkpoint_union(pairs, part):
-            part = part.localCheckpoint(eager=True)
-            return part if pairs is None else pairs.unionByName(part)
-
-        return _tile_scan(
-            emb.withColumnRenamed("e", "embedding"),
-            n_rows,
-            partial(_near_dup_block, threshold=threshold),
-            "vec_a bigint, vec_b bigint, cos double",
-            checkpoint_union,
-        ).select("vec_a", "vec_b", round_sane("cos", 6).alias("cosine"))
-    rng = np.random.RandomState(42)
-    planes = rng.standard_normal((n_bands * bits, EMBED_DIM)).astype(
-        np.float64
-    )
-
-    def band_keys(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # >0 vs ≤0 sign bits packed per band into one int64 key; the
-        # band index rides in the key's high bits so ONE equi-join
-        # column covers all bands.
-        weights = (1 << np.arange(bits, dtype=np.int64))
-        for pdf in batches:
-            V = np.stack(pdf["e"].values).astype(np.float64)
-            S = _ord_dots(V, planes) > 0.0
-            sigs = S.reshape(len(pdf), n_bands, bits) @ weights
-            keys = sigs + (np.arange(n_bands, dtype=np.int64) << 48)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(
-                        pdf["vec_id"].to_numpy(dtype=np.int64), n_bands
-                    ),
-                    "band_key": keys.reshape(-1),
-                }
-            )
-
-    # NULL embeddings have no sign pattern and can never cross the
-    # threshold — excluded before the numpy hasher (np.stack).
-    keyed = (
-        emb.where(F.col("e").isNotNull())
-        .select("vec_id", "e")
-        .mapInPandas(band_keys, "vec_id bigint, band_key bigint")
-    )
-    a = keyed.select(F.col("vec_id").alias("vec_a"), "band_key")
-    b = keyed.select(F.col("vec_id").alias("vec_b"), "band_key")
-    cand = (
-        a.join(b, "band_key")
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"))
-    eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("e").alias("eb"))
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .withColumn("cos", _dot(F.col("ea"), F.col("eb")))
-        .where(F.col("cos") >= threshold)
-        .select("vec_a", "vec_b", round_sane("cos", 6).alias("cosine"))
+    return pairs.select(
+        "vec_a", "vec_b", round_sane("cos", 6).alias("cosine")
     )
 
 
@@ -831,8 +660,8 @@ _KNN_TILE_ROWS = 200_000
 def _tile_scan(
     emb: DataFrame, n_rows: int, block, schema: str, merge
 ) -> DataFrame:
-    """The one exact similarity kernel, shared by the kNN self-join and
-    the tiled near-dup pair scan.
+    """The one exact similarity kernel, shared by llm_knn_self_join and
+    llm_dedup_embed.
 
     ``emb`` holds (vec_id, embedding). The corpus splits into
     ⌈n_rows / _KNN_TILE_ROWS⌉ id-hash tiles. Each non-empty tile is
@@ -842,7 +671,7 @@ def _tile_scan(
     ``S = Q·candᵀ`` goes to ``block(qids, Q, cand_ids, cand, S)``, which
     returns rows of ``schema``. BLAS only selects: every value a block
     ranks by or emits is recomputed with the DuckDB-order fold
-    :func:`_ord_pair_dots` (see :func:`_ord_dots` for why).
+    :func:`_ord_pair_dots` (see there for why).
 
     One tile returns the lazy ``mapInPandas`` result: one fetch, no
     persist, no checkpoint. With several tiles the corpus is cached
@@ -1587,13 +1416,14 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materializes only block×n similarities, so peak memory is
         # capped at ~_GEMM_BLOCK_ELEMS floats regardless of
         # cluster size, and the output is bit-identical to the
-        # one-shot kernel (_ord_dots is block-independent).
+        # one-shot kernel (every verdict near the boundary comes from
+        # the per-pair _ord_pair_dots, which no blocking can change).
         block = max(1, _GEMM_BLOCK_ELEMS // max(n, 1))
         qmin = np.full(n, np.nan)
         for lo in range(0, n, block):
             hi = min(lo + block, n)
             sim = m[lo:hi] @ m.T  # BLAS bulk pass
-            # hybrid boundary patch (see _ord_dots): only entries
+            # hybrid boundary patch (see _ord_pair_dots): only entries
             # within ~1e-6 of the 0.45 verdict can have their
             # round-to-6-then-compare outcome flipped by BLAS position
             # jitter — recompute exactly those order-fixed, so the

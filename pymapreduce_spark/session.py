@@ -71,10 +71,6 @@ EXCLUDED_OPTIMIZER_RULES: tuple[str, ...] = (
 
 #: Configs that must be set before the JVM session exists.
 BUILD_CONFS: dict[str, str] = {
-    # Local-mode default; on a real cluster leave unset and let AQE coalesce.
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
-    ),
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     # Python workers re-read zip import caches only when the archive

@@ -1381,14 +1381,14 @@ def vectors_section(spark) -> dict:
     """Optional section (--vectors): the vector kernels at 10× and 100×
     the sf0.1 corpus (25 k / 250 k synthesized vectors — the text
     kernels got this treatment in the x100 section; round-8 verdict
-    task 5 extends it to vectors). 250 k crosses BOTH code-enforced
-    scale gates — llm_knn_self_join's _KNN_TILE_ROWS (200 k → several
-    exact GEMM tiles) and llm_dedup_embed's _DEDUP_EMBED_MAX_ROWS
-    (20 k → exact tiled pair scan at its 0.45 threshold), and exercises the ANN starved-query exact
-    fallback above the index envelope. Assertions: recall floors from
-    the planted-duplicate arithmetic, ANN/IVF self-evidenced recall_ok,
-    and step ratios — sub-quadratic (<35, the x100 bound) for every
-    index/band path; the exact kNN is O(N²) BY CONTRACT, so its bound
+    task 5 extends it to vectors). 250 k crosses the one code-enforced
+    scale gate, _KNN_TILE_ROWS (200 k → several exact GEMM tiles for
+    both tile-scan ops, llm_knn_self_join and llm_dedup_embed), and
+    exercises the ANN starved-query exact fallback above the index
+    envelope. Assertions: recall floors from the planted-duplicate
+    arithmetic, ANN/IVF self-evidenced recall_ok, and step ratios —
+    sub-quadratic (<35, the x100 bound) for every index path; the
+    exact kNN and near-dup scans are O(N²) BY CONTRACT, so their bound
     is the quadratic step (~100×, asserted < 300 to absorb VM noise)."""
     from pymapreduce_spark.registry import QUERIES
 
@@ -1459,45 +1459,24 @@ def vectors_section(spark) -> dict:
         r["dedup_embed"] = {
             "wall_s": round(time.perf_counter() - t0, 2),
             "n_pairs": dagg["n"],
-            # the registered op's 0.45 threshold dispatches to the
-            # EXACT tiled pair scan at this size (recall 1.0) — every
-            # planted pair must surface
+            # the exact tile scan has recall 1.0 — every planted pair
+            # must surface
             "planted_found": bool(dagg["n_exact"] >= planted),
         }
 
-        # the banded (sub-quadratic) regime at the production 0.95
-        # threshold — the path a web-scale near-dup pass actually runs
-        from pymapreduce_spark.operators import llm_vector as lv
-
-        emb = lv.load_embeddings(spark, sf_v).select(
-            "vec_id", lv._as_double("embedding").alias("e")
-        )
-        t0 = time.perf_counter()
-        bd = lv._dedup_embed_lsh(emb, 0.95, n_rows=n)
-        bagg = bd.agg(
-            F.count("*").alias("n"),
-            F.sum((F.col("cosine") >= 0.9999).cast("long")).alias("n_exact"),
-        ).first()
-        r["dedup_banded"] = {
-            "wall_s": round(time.perf_counter() - t0, 2),
-            "n_pairs": bagg["n"],
-            # exact duplicates collide in every SRP band — never missed
-            "planted_found": bool(bagg["n_exact"] >= planted),
-        }
         res[tag] = r
 
     checks: dict = {}
     for kern in (
-        "ann", "ivf", "semdedup", "dedup_banded", "dedup_embed",
-        "knn_self_join",
+        "ann", "ivf", "semdedup", "dedup_embed", "knn_self_join",
     ):
         step = res["x100"][kern]["wall_s"] / max(
             res["x10"][kern]["wall_s"], 0.01
         )
         res.setdefault("steps", {})[kern] = round(step, 2)
-        # knn_self_join and the 0.45 dedup are exact O(N²) BY CONTRACT/
-        # DISPATCH (quadratic step ≈ 100, bound 300 absorbs VM noise);
-        # every index/band path must stay sub-quadratic (< 35).
+        # knn_self_join and dedup_embed are exact O(N²) BY CONTRACT
+        # (quadratic step ≈ 100, bound 300 absorbs VM noise); every
+        # index path must stay sub-quadratic (< 35).
         bound = 300 if kern in ("knn_self_join", "dedup_embed") else 35
         checks[f"vec_{kern}_step_ok"] = step < bound
     for tag in scales:
@@ -1509,9 +1488,7 @@ def vectors_section(spark) -> dict:
             res[tag]["ivf"]["recall_frac"] >= 0.9
             and res[tag]["ivf"]["all_full"]
         )
-        for kern in (
-            "knn_self_join", "semdedup", "dedup_embed", "dedup_banded"
-        ):
+        for kern in ("knn_self_join", "semdedup", "dedup_embed"):
             checks[f"vec_{kern}_planted_{tag}"] = res[tag][kern][
                 "planted_found"
             ]

@@ -324,52 +324,62 @@ def test_knn_self_join_scale_guard(spark, sf_dir, monkeypatch):
     assert len(one_tile) == 5 * n
 
 
-def test_dedup_embed_scale_guard(spark, sf_dir, monkeypatch):
-    """Above _DEDUP_EMBED_MAX_ROWS the near-dup pair search must never
-    run the single-node O(N^2) pair join. At this op's 0.45 threshold
-    the dispatcher picks the exact tiled pair scan (banding can't
-    amplify inside the random-cosine noise band), so forced past the
-    gate AND over several tiles it must return the pair join's output
-    row for row, cosines included."""
+def test_dedup_embed_scale_guard(spark, duck, sf_dir, monkeypatch):
+    """llm_dedup_embed runs one exact path at every size, the tile
+    scan: as one tile and forced over three, it must equal the DuckDB
+    oracle row for row, cosines included."""
     from pymapreduce_spark.io import table_row_count
     from pymapreduce_spark.operators import llm_vector
-    from pymapreduce_spark.registry import QUERIES
+    from pymapreduce_spark.registry import ORACLES
+    from pymapreduce_spark.testing import compare_frames
 
-    exact = _rows(QUERIES["llm_dedup_embed"](spark, sf_dir))
+    oracle = ORACLES["llm_dedup_embed"]
+    compare_frames("one tile", llm_vector.llm_dedup_embed(spark, sf_dir),
+                   duck, oracle)
     n = table_row_count(sf_dir, "embeddings")
-    monkeypatch.setattr(llm_vector, "_DEDUP_EMBED_MAX_ROWS", 0)
     monkeypatch.setattr(llm_vector, "_KNN_TILE_ROWS", -(-n // 3))
-    assert _rows(QUERIES["llm_dedup_embed"](spark, sf_dir)) == exact
-    assert exact  # the fixture has pairs above 0.45
+    compare_frames("three tiles", llm_vector.llm_dedup_embed(spark, sf_dir),
+                   duck, oracle)
 
 
 def test_knn_self_join_construction_jobs(spark, sf_dir, monkeypatch):
-    """Building llm_knn_self_join runs only the tile scan's eager side
-    jobs. A single-tile corpus runs exactly one, the tile fetch, and
-    persists nothing: no cache, merge window or checkpoint. A forced 3-tile build runs,
-    per tile, one fetch and one checkpoint of the running best-5, whose
-    window shuffle runs as its own job under AQE: 3 jobs per tile."""
+    """Building either tile-scan op (llm_knn_self_join, llm_dedup_embed)
+    runs only the tile scan's eager side jobs, and neither plan holds a
+    BroadcastNestedLoopJoin. A single-tile corpus runs exactly one job,
+    the tile fetch, and persists nothing: no cache, merge or checkpoint.
+    A forced 3-tile build runs, per tile, one fetch and one checkpoint
+    of the merged output. The kNN merge's best-5 window shuffle runs as
+    its own job under AQE, so the kNN build runs 3 jobs per tile; the
+    near-dup pairs merge without a shuffle, 2 jobs per tile."""
     from pymapreduce_spark.io import table_row_count
     from pymapreduce_spark.operators import llm_vector
 
     sc = spark.sparkContext
     llm_vector.load_embeddings(spark, sf_dir)  # warm the canonicalization memo
+    n = table_row_count(sf_dir, "embeddings")
 
-    def build_jobs(group):
+    def build_jobs(op, group):
         sc.setJobGroup(group, group)
         try:
-            llm_vector.llm_knn_self_join(spark, sf_dir)
+            df = op(spark, sf_dir)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastNestedLoopJoin" not in plan, (group, plan)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    cached = sc._jsc.getPersistentRDDs().size()
-    assert build_jobs("knn-build-one-tile") == 1
-    assert sc._jsc.getPersistentRDDs().size() == cached  # nothing persisted
-    n = table_row_count(sf_dir, "embeddings")
-    monkeypatch.setattr(llm_vector, "_KNN_TILE_ROWS", -(-n // 3))
-    assert build_jobs("knn-build-three-tiles") == 3 * 3
+    for op, jobs_per_tile in (
+        (llm_vector.llm_knn_self_join, 3),
+        (llm_vector.llm_dedup_embed, 2),
+    ):
+        name = op.__name__
+        cached = sc._jsc.getPersistentRDDs().size()
+        assert build_jobs(op, f"{name}-one-tile") == 1
+        assert sc._jsc.getPersistentRDDs().size() == cached  # nothing persisted
+        with monkeypatch.context() as m:
+            m.setattr(llm_vector, "_KNN_TILE_ROWS", -(-n // 3))
+            assert build_jobs(op, f"{name}-three-tiles") == 3 * jobs_per_tile
 
 
 def test_semdedup_blocked_gemm_matches_oneshot(spark, sf_dir, monkeypatch):
@@ -507,77 +517,22 @@ def test_knn_tiled_path_matches_exact(spark, sf_dir, monkeypatch):
     assert _rows(lv.llm_knn_self_join(spark, sf_dir)) == exact
 
 
-def test_dedup_embed_srp_precision_and_exact_dup_recall(spark, sf_dir):
-    """The SRP band-join near-dup path (production thresholds): every
-    reported pair must be a true >= threshold pair (exact verify —
-    zero false positives), and an exact duplicate must ALWAYS be found
-    (identical sign bits in every band). 0.95 solves to the banded
-    regime; the fixture's marginal 0.45 dispatches to the exact tiled
-    scan instead (covered by test_dedup_embed_scale_guard)."""
-    from pymapreduce_spark.operators import llm_vector as lv
-
-    bits, n_bands = lv._srp_params(0.95, 501)
-    assert n_bands <= lv._SRP_MAX_BANDS, "0.95 must solve to banding"
-    bits, n_bands = lv._srp_params(0.45, 501)
-    assert n_bands > lv._SRP_MAX_BANDS, "0.45 must dispatch to tiled"
-
-    base = lv.load_embeddings(spark, sf_dir).select(
-        "vec_id", lv._as_double("embedding").alias("e")
-    )
-    # plant an exact copy of the lowest-id vector under a fresh high id
-    first = base.orderBy("vec_id").limit(1)
-    planted = first.select(
-        (F.col("vec_id") + 10_000_000).alias("vec_id"), "e"
-    )
-    emb = base.unionByName(planted)
-    n = emb.count()
-
-    got = lv._dedup_embed_lsh(emb, 0.95, n_rows=n).collect()
-    pairs = {(r.vec_a, r.vec_b) for r in got}
-    # exact-dup guarantee (banded path: copies collide in every band)
-    lo = first.collect()[0].vec_id
-    assert (lo, lo + 10_000_000) in pairs
-    # zero false positives: re-verify every reported cosine exactly
-    for r in got:
-        assert r.cosine >= 0.95, r
-
-
-def test_srp_params_engineering_envelope():
-    """The SRP banding parameter solver's contract, checked across the
-    corpus sizes that matter (10^4..10^9): production thresholds
-    (>= 0.95) must solve INSIDE the band cap (sub-quadratic path
-    available at web scale), expected random collisions stay linear in
-    N by construction (N^2 / 2^bits <= N), and noise-band thresholds
-    dispatch out to the exact scan."""
-    from pymapreduce_spark.operators import llm_vector as lv
-
-    for n in (10_000, 250_000, 10_000_000, 1_000_000_000):
-        bits, bands = lv._srp_params(0.95, n)
-        assert bands <= lv._SRP_MAX_BANDS, (n, bands)
-        # linear candidate volume: 2^bits >= N
-        assert 2**bits >= n, (n, bits)
-        # at-threshold recall >= 99% by the solved band count
-        import math
-
-        p = (1.0 - math.acos(0.95) / math.pi) ** bits
-        assert 1.0 - (1.0 - p) ** bands >= 0.99, (n, bits, bands)
-        # the noise band dispatches to exact
-        _, low_bands = lv._srp_params(0.45, n)
-        assert low_bands > lv._SRP_MAX_BANDS, (n, low_bands)
-
-
 def test_tiled_paths_tolerate_empty_tiles(spark, sf_dir, tmp_path, monkeypatch):
     """n_tiles derives from the parquet FOOTER count while tiles draw
     from the filtered/canonicalized set — a tile can be empty (heavy
     dup-id collapse, NULL filters). A 20-row corpus hashed over 20
     tiles leaves several empty: both tile-scan operators must skip
-    them and still match their single-tile (exact) result."""
+    them, and as one tile and as 20 each must equal its DuckDB
+    oracle."""
+    import duckdb
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from pymapreduce_spark.io import table_path
     from pymapreduce_spark.operators import llm_vector as lv
+    from pymapreduce_spark.registry import ORACLES
+    from pymapreduce_spark.testing import compare_frames
 
     # 20 vectors holding some of the fixture's >= 0.45 pairs, so the
     # near-dup scan has pairs to find
@@ -598,11 +553,20 @@ def test_tiled_paths_tolerate_empty_tiles(spark, sf_dir, tmp_path, monkeypatch):
     )
     assert n_hit < 20  # some of the 20 tiles are empty
 
-    one_knn = _rows(lv.llm_knn_self_join(spark, small_dir))
-    one_dup = _rows(lv.llm_dedup_embed(spark, small_dir))
-    monkeypatch.setattr(lv, "_KNN_TILE_ROWS", 1)
-    monkeypatch.setattr(lv, "_DEDUP_EMBED_MAX_ROWS", 0)
-    assert _rows(lv.llm_knn_self_join(spark, small_dir)) == one_knn
-    assert len(one_knn) == 20 * 5
-    assert _rows(lv.llm_dedup_embed(spark, small_dir)) == one_dup
-    assert one_dup
+    duck = duckdb.connect()
+    duck.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'embeddings.parquet'}')"
+    )
+
+    def check(tag):
+        for name in ("llm_knn_self_join", "llm_dedup_embed"):
+            compare_frames(f"{name} {tag}", QUERIES[name](spark, small_dir),
+                           duck, ORACLES[name])
+
+    try:
+        check("one tile")
+        monkeypatch.setattr(lv, "_KNN_TILE_ROWS", 1)
+        check("20 tiles")
+    finally:
+        duck.close()
