@@ -74,6 +74,9 @@ _MARKER = "_READY"
 _SOURCE = "_SOURCE"
 #: The only root name artifact_path makes: ``<basename>-<8 hex>``.
 _ROOT_NAME = re.compile(r".+-[0-9a-f]{8}")
+#: The driver JVM's class archive (``session.get_spark``): the one
+#: entry of the artifacts dir that belongs to no fixture.
+JVM_ARCHIVE_DIR = os.path.join(_ARTIFACTS_DIR, "jvm")
 
 # The fixture-identity memo: (kind, source paths[, applicationId]) ->
 # (stamp, value). See fixture_memo.
@@ -185,11 +188,14 @@ def _new_root(root: str, src: str) -> None:
     the roots of source dirs that no longer exist: every temporary
     fixture (each test run's copies) gets a root of its own, which
     would otherwise outlive it. Dirs of any other name (an older
-    layout) are deleted too; a root without ``_SOURCE`` yet is kept,
-    because a concurrent first caller may be creating it."""
+    layout) are deleted too, but for the JVM's class archive dir; a
+    root without ``_SOURCE`` yet is kept, because a concurrent first
+    caller may be creating it."""
     with contextlib.suppress(OSError):
         for tag in os.listdir(_ARTIFACTS_DIR):
             old = os.path.join(_ARTIFACTS_DIR, tag)
+            if tag == os.path.basename(JVM_ARCHIVE_DIR):
+                continue
             if _ROOT_NAME.fullmatch(tag):
                 recorded = _read_marker(os.path.join(old, _SOURCE))
                 if not recorded or os.path.isdir(recorded):
