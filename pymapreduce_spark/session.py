@@ -16,8 +16,10 @@ import atexit
 import contextlib
 import fcntl
 import os
+import re
 import shutil
 import subprocess
+import sys
 import zlib
 
 from pyspark import SparkContext
@@ -155,6 +157,24 @@ def _put_engine_on_worker_path(spark: SparkSession) -> None:
 _DUMP_TIMEOUT_S = 60
 #: Longest the exit hook waits for a still-running JVM to exit.
 _JVM_EXIT_TIMEOUT_S = 60
+#: The files of the archive dir: ``spark-<install>-<heap>.jsa``, then
+#: nothing (the archive), ``.lock``, ``.log`` or ``.failed``, or
+#: ``.<pid>.classlist`` / ``.<pid>.tmp`` of the process that writes it.
+_ARCHIVE_FILE = re.compile(
+    r"spark-(?P<install>[0-9a-f]{8})-\w+\.jsa"
+    r"(?:\.(?P<pid>\d+)\.(?:classlist|tmp)|\.(?:lock|log|failed))?")
+#: Runs ``argv[2:]`` in its own place with a SIGKILL due when its parent,
+#: the process ``argv[1]``, dies (Linux ``PR_SET_PDEATHSIG`` survives
+#: the exec). So a dump dies with the process that started it, also one
+#: that leaves by ``os._exit`` or is killed.
+_DIE_WITH_PARENT = """
+import ctypes, os, signal, sys
+if sys.platform.startswith("linux"):
+    ctypes.CDLL(None).prctl(1, signal.SIGKILL)
+    if os.getppid() != int(sys.argv[1]):
+        sys.exit("parent gone")
+os.execv(sys.argv[2], sys.argv[2:])
+"""
 
 
 @contextlib.contextmanager
@@ -180,13 +200,15 @@ def _class_archive(builder: SparkSession.Builder):
     a conf dir that holds nothing but ``*.template`` files (which Spark
     never reads) is swapped for an empty one. Nothing is done when this
     process does not launch the JVM (one is running, or
-    ``PYSPARK_GATEWAY_PORT`` names one) or the conf dir is in use."""
+    ``PYSPARK_GATEWAY_PORT`` names one), the conf dir is in use, or a
+    dump of this archive failed (``<archive>.failed``): a failure that
+    repeats would otherwise cost every later process its dump at exit."""
     archive = _archive_path()
-    if archive is None:
+    recording = archive is not None and not os.path.isfile(archive)
+    if archive is None or recording and os.path.exists(f"{archive}.failed"):
         yield
         return
     classlist = f"{archive}.{os.getpid()}.classlist"
-    recording = not os.path.isfile(archive)
     builder.config("spark.driver.defaultJavaOptions",
                    f"-XX:DumpLoadedClassList={classlist}" if recording
                    else f"-XX:SharedArchiveFile={archive}")
@@ -211,10 +233,11 @@ def _class_archive(builder: SparkSession.Builder):
 def _archive_path() -> str | None:
     """Where the archive for the JVM that PySpark would launch now lives
     (it need not exist yet), or None when this process launches no JVM
-    or the conf dir holds a file Spark reads. The name is keyed by the
-    java binary, the jars Spark puts on the classpath and the driver
-    heap, so a changed install records a new archive. Makes the
-    archive's dir and the empty conf dir in it."""
+    or the conf dir holds a file Spark reads. The name is
+    ``spark-<install>-<heap>.jsa``: ``install`` is keyed by the java
+    binary and the jars Spark puts on the classpath, so a changed
+    install records a new archive, and ``heap`` is the driver heap.
+    Makes the archive's dir and the empty conf dir in it."""
     from pymapreduce_spark.io import JVM_ARCHIVE_DIR  # io imports this module
 
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
@@ -233,8 +256,9 @@ def _archive_path() -> str | None:
         os.makedirs(os.path.join(JVM_ARCHIVE_DIR, "conf"), exist_ok=True)
     except OSError:
         return None
-    key = repr((java, st.st_size, st.st_mtime_ns, jars, BUILD_CONFS["spark.driver.memory"]))
-    return os.path.join(JVM_ARCHIVE_DIR, f"spark-{zlib.crc32(key.encode()):08x}.jsa")
+    install = zlib.crc32(repr((java, st.st_size, st.st_mtime_ns, jars)).encode())
+    heap = re.sub(r"\W", "_", BUILD_CONFS["spark.driver.memory"])
+    return os.path.join(JVM_ARCHIVE_DIR, f"spark-{install:08x}-{heap}.jsa")
 
 
 def _build_archive(jvm: subprocess.Popen, java: str, classpath: str,
@@ -242,14 +266,16 @@ def _build_archive(jvm: subprocess.Popen, java: str, classpath: str,
     """At interpreter exit: stop a session still running (so PySpark's
     accumulator server sees no dropped connection) and wait for the
     recording JVM to exit (closing its stdin ends PySpark's gateway),
-    then dump ``archive`` from the
-    class list it wrote, unless another process holds the build lock or
-    the archive exists. The dump writes a temporary name that replaces
-    ``archive`` only when complete, runs for at most
-    :data:`_DUMP_TIMEOUT_S` and logs to ``<archive>.log``, never to this
-    process's stdout. Any failure leaves no archive; the next run
-    records again."""
-    tmp = f"{archive}.{os.getpid()}.tmp"
+    then dump ``archive`` from the class list it wrote, unless another
+    process holds the build lock or the archive exists.
+
+    The builder first removes what no build will read again
+    (:func:`_prune_archive_dir`). The dump writes a temporary name that
+    replaces ``archive`` only when complete, runs for at most
+    :data:`_DUMP_TIMEOUT_S`, dies with this process and logs to
+    ``<archive>.log``, never to this process's stdout. A dump that
+    fails writes its error to ``<archive>.failed``, after which no
+    process records or dumps this archive again."""
     try:
         if jvm.poll() is None:
             if SparkContext._active_spark_context is not None:
@@ -264,19 +290,65 @@ def _build_archive(jvm: subprocess.Popen, java: str, classpath: str,
         # builder that is killed, where a stale file would block every
         # later build.
         with open(f"{archive}.lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            try:
+                fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                return
+            _prune_archive_dir(archive)
             if os.path.isfile(archive) or not os.path.isfile(classlist):
                 return
-            with open(f"{archive}.log", "w") as log:
-                subprocess.run(
-                    [java, "-Xshare:dump", f"-XX:SharedClassListFile={classlist}",
-                     f"-XX:SharedArchiveFile={tmp}", "-cp", classpath],
-                    stdin=subprocess.DEVNULL, stdout=log, stderr=subprocess.STDOUT,
-                    timeout=_DUMP_TIMEOUT_S, check=True)
-            os.replace(tmp, archive)
+            _dump(java, classpath, classlist, archive)
     except (OSError, subprocess.SubprocessError):
         pass
     finally:
-        for path in (tmp, classlist):
+        with contextlib.suppress(OSError):
+            os.remove(classlist)
+
+
+def _dump(java: str, classpath: str, classlist: str, archive: str) -> None:
+    """Dump ``archive`` from ``classlist``, or write why it failed to
+    ``<archive>.failed``."""
+    tmp = f"{archive}.{os.getpid()}.tmp"
+    try:
+        with open(f"{archive}.log", "w") as log:
+            subprocess.run(
+                [sys.executable, "-c", _DIE_WITH_PARENT, str(os.getpid()),
+                 java, "-Xshare:dump", f"-XX:SharedClassListFile={classlist}",
+                 f"-XX:SharedArchiveFile={tmp}", "-cp", classpath],
+                stdin=subprocess.DEVNULL, stdout=log, stderr=subprocess.STDOUT,
+                timeout=_DUMP_TIMEOUT_S, check=True)
+        os.replace(tmp, archive)
+    except (OSError, subprocess.SubprocessError) as exc:
+        with contextlib.suppress(OSError), open(f"{archive}.failed", "w") as fh:
+            fh.write(f"{type(exc).__name__}: {exc}\n")
+    finally:
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
+
+
+def _prune_archive_dir(archive: str) -> None:
+    """Remove the files of the archive dir that no build will read
+    again: every file of another install's archives (another java or
+    jar set), the class lists and temporary dumps of processes that
+    died before their exit hook ended, and files of no known name. The
+    archives of this install's other heap sizes stay."""
+    folder = os.path.dirname(archive)
+    install = _ARCHIVE_FILE.fullmatch(os.path.basename(archive))["install"]
+    for entry in os.scandir(folder):
+        if not entry.is_file():
+            continue
+        name = _ARCHIVE_FILE.fullmatch(entry.name)
+        if name is None or (not _alive(int(name["pid"])) if name["pid"]
+                            else name["install"] != install):
             with contextlib.suppress(OSError):
-                os.remove(path)
+                os.remove(entry.path)
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # another user's live process
+        return True
+    return True

@@ -18,18 +18,21 @@ import os
 import shutil
 import subprocess
 import sys
+import time
 
 import pytest
 from pyspark.find_spark_home import _find_spark_home
 
 from pymapreduce_spark import io as pio
+from pymapreduce_spark import session
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_CONF = os.path.join(_find_spark_home(), "conf")
 
 pytestmark = pytest.mark.skipif(
-    any(not n.endswith(".template") for n in os.listdir(SPARK_CONF)),
-    reason="Spark's conf dir holds active files, so get_spark uses no archive",
+    not os.path.isdir(SPARK_CONF)
+    or any(not n.endswith(".template") for n in os.listdir(SPARK_CONF)),
+    reason="Spark's conf dir is missing or holds active files, so get_spark uses no archive",
 )
 
 #: perfbench's submit arguments: its java options replace any
@@ -72,6 +75,25 @@ def _reported(cmd, *a, **k):
     return _run(cmd, *a, **k)
 subprocess.run = _reported
 """
+
+#: Leaves by ``os._exit`` 0.5 s into the dump, as a watchdog thread
+#: would, after it reports the pids of the dump it started on stderr.
+EXIT_DURING_DUMP = """
+import subprocess, threading
+_run = subprocess.run
+def _leave():
+    with open(f"/proc/self/task/{os.getpid()}/children") as fh:
+        print("dump pids:", fh.read().strip(), file=sys.stderr, flush=True)
+    os._exit(3)
+def _exit_soon(cmd, *a, **k):
+    if "-Xshare:dump" in cmd:
+        threading.Timer(0.5, _leave).start()
+    return _run(cmd, *a, **k)
+subprocess.run = _exit_soon
+"""
+
+#: A pid above the kernel's largest ``pid_max`` (2**22): never alive.
+DEAD_PID = 2**22 + 1
 
 #: Runs q1_pricing_summary and checks it against its DuckDB oracle.
 CHECK_Q1 = """
@@ -124,11 +146,19 @@ def _processes_naming(text: str) -> list[str]:
     return found
 
 
+#: Files of an archive dir that a build removes: another install's
+#: archive and log, and an archive of an older naming.
+STALE_FILES = ("spark-89abcdef-1g.jsa", "spark-89abcdef-1g.jsa.log", "spark-3bcfdd49.jsa")
+
+
 @pytest.fixture(scope="module")
 def recorded(tmp_path_factory, sf_dir):
     """An archive dir filled by one recording child, with that child's
-    (report, stdout, stderr)."""
+    (report, stdout, stderr). The dir starts with :data:`STALE_FILES`."""
     archive_dir = str(tmp_path_factory.mktemp("jvm_archive"))
+    for name in STALE_FILES:
+        with open(os.path.join(archive_dir, name), "wb") as fh:
+            fh.write(b"stale")
     return archive_dir, _finish(_start(archive_dir, sf_dir, REPORT_DUMPS))
 
 
@@ -137,7 +167,8 @@ def test_recording_run_leaves_a_usable_archive(recorded):
     (the child stops its session but leaves the JVM to its exit hook),
     dumps an archive the same java and classpath map with
     ``-Xshare:on`` (which fails where ``auto`` would fall back). No
-    process of it is left, and nothing follows its last stdout line."""
+    process of it is left, nothing follows its last stdout line, and
+    the stale files the dir started with are gone."""
     archive_dir, (report, stdout, stderr) = recorded
     assert stderr.count("dumping, jvm alive: False\n") == 1, stderr[-3000:]
     archive = report["archive"]
@@ -146,6 +177,7 @@ def test_recording_run_leaves_a_usable_archive(recorded):
     assert os.listdir(archive_dir) and os.path.isfile(archive)
     assert not glob.glob(os.path.join(archive_dir, "*.classlist"))
     assert not glob.glob(os.path.join(archive_dir, "*.tmp"))
+    assert not any(os.path.exists(os.path.join(archive_dir, n)) for n in STALE_FILES)
     assert _processes_naming(archive_dir) == []
     check = subprocess.run(
         [report["java"], "-Xshare:on", f"-XX:SharedArchiveFile={archive}",
@@ -257,3 +289,74 @@ def test_new_artifact_root_keeps_the_archive(tmp_path, monkeypatch):
     assert not os.path.exists(old_layout)
     with open(archive, "rb") as fh:
         assert fh.read() == b"archive"
+
+
+def test_failed_dump_stops_later_recording(sf_dir, tmp_path):
+    """A dump that fails (here: a timeout of 0 s) leaves its error in
+    ``<archive>.failed`` beside the log, and no archive. A later child
+    then neither records nor dumps, and keeps its conf dir."""
+    archive_dir = str(tmp_path / "jvm")
+    first = _run(archive_dir, sf_dir, REPORT_DUMPS + "session._DUMP_TIMEOUT_S = 0\n")
+    archive = first["archive"]
+    with open(f"{archive}.failed") as fh:
+        assert fh.read().startswith("TimeoutExpired")
+    assert os.path.isfile(f"{archive}.log")
+    assert not os.path.exists(archive)
+    assert not glob.glob(os.path.join(archive_dir, "*.tmp"))
+    report, _, stderr = _finish(_start(archive_dir, sf_dir, REPORT_DUMPS))
+    assert report["archive"] == archive
+    assert not any("SharedArchiveFile" in a or "DumpLoadedClassList" in a
+                   for a in report["jvm_args"])
+    assert "dumping" not in stderr
+    assert os.path.join(archive_dir, "conf") not in report["classpath"]
+    assert not glob.glob(os.path.join(archive_dir, "*.classlist"))
+
+
+def test_dump_dies_with_its_process(sf_dir, tmp_path):
+    """A process that leaves by ``os._exit`` during its dump (as a
+    watchdog thread makes it) takes the dump with it: no dump process
+    outlives it."""
+    child = _start(str(tmp_path / "jvm"), sf_dir, EXIT_DURING_DUMP)
+    _, stderr = child.communicate(timeout=600)
+    assert child.returncode == 3, stderr[-3000:]
+    line = next(line for line in stderr.splitlines() if line.startswith("dump pids:"))
+    pids = line.split()[2:]
+    assert pids
+
+    def running(pid: str) -> bool:  # a zombie's cmdline is empty
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as fh:
+                return bool(fh.read())
+        except OSError:
+            return False
+
+    # The dump of a small class list takes a few seconds: a dump left
+    # running is still there after the 1 s a killed one gets to go.
+    deadline = time.monotonic() + 1
+    while any(map(running, pids)) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert not any(map(running, pids))
+    assert _processes_naming(str(tmp_path / "jvm")) == []
+
+
+def test_build_prunes_what_no_build_reads(tmp_path, monkeypatch):
+    """The builder removes the files of another install's archives, the
+    class lists and temporary dumps of dead processes and files of no
+    known name; it keeps this install's archives of any heap size and
+    the files of live processes."""
+    archive = str(tmp_path / "spark-0123abcd-1g.jsa")
+    keep = [archive, f"{archive}.lock", f"{archive}.log",
+            str(tmp_path / "spark-0123abcd-8g.jsa"),
+            f"{archive}.{os.getpid()}.classlist", f"{archive}.{os.getpid()}.tmp"]
+    drop = [f"{archive}.{DEAD_PID}.classlist", f"{archive}.{DEAD_PID}.tmp",
+            str(tmp_path / "spark-89abcdef-1g.jsa"),
+            str(tmp_path / "spark-89abcdef-1g.jsa.log"),
+            str(tmp_path / "spark-89abcdef-1g.jsa.failed"),
+            str(tmp_path / "spark-89abcdef-1g.jsa.lock"),
+            str(tmp_path / "spark-3bcfdd49.jsa")]
+    for path in keep + drop:
+        with open(path, "wb") as fh:
+            fh.write(b"x")
+    (tmp_path / "conf").mkdir()
+    session._prune_archive_dir(archive)
+    assert sorted(os.listdir(tmp_path)) == sorted(["conf", *map(os.path.basename, keep)])
