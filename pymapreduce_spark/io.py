@@ -474,24 +474,6 @@ def stable_scratch(sf_dir: str, name: str) -> str:
     return path
 
 
-@contextlib.contextmanager
-def scratch_dir(prefix: str = "pmr_"):
-    """Self-cleaning temp directory for operators that must exercise a
-    real write→read-back sink path (multi-output, compaction,
-    write-audit-publish, CDC replay). Bench's median-of-3 and the
-    295-query differential suite re-invoke those operators repeatedly;
-    an unmanaged ``tempfile.mkdtemp`` per call leaks hundreds of
-    parquet copies of lineitem/orders/events into /tmp per session.
-    The result DataFrame must be fully materialized (collected or
-    re-created from local rows) before the ``with`` block exits — the
-    files are gone afterwards."""
-    path = tempfile.mkdtemp(prefix=prefix)
-    try:
-        yield path
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
-
-
 def table_row_count(sf_dir: str, name: str) -> int:
     """Exact row count of a fixture table from the parquet footer — no
     Spark job, and memoized per fixture stamp. Used by operator scale

@@ -770,9 +770,7 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.floor(F.when(in_i64, q)).alias("bucket"))
         .agg(
             F.count("*").alias("n"),
-            (F.sum(F.round(F.col("value") * 100, 0).try_cast("long")) / 100.0).alias(
-                "total_value"
-            ),
+            (F.sum(cents("value")) / 100.0).alias("total_value"),
         )
     )
 
@@ -1488,7 +1486,7 @@ def agg_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     g = ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
-        F.sum(F.round(F.col("value") * 100).try_cast("long")).alias("cents"),
+        F.sum(cents("value")).alias("cents"),
     )
     t = g.agg(F.sum("n").alias("tn"), F.sum("cents").alias("tc"))
     return g.crossJoin(F.broadcast(t)).select(

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pymapreduce_spark.functions.checked import epoch_micros, trunc_ntz
+from pymapreduce_spark.functions.checked import cents, epoch_micros, trunc_ntz
 from pymapreduce_spark.io import load_table
 from pymapreduce_spark.registry import query
 
@@ -406,7 +406,7 @@ def ts_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     purchase_cents = F.when(
         F.col("event_type") == "purchase",
-        F.round(F.col("value") * 100, 0).try_cast("long"),
+        cents("value"),
     )
     return ev.select(
         "event_id",
@@ -651,7 +651,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     divergence)."""
     dense = _hourly_grid(
         load_table(spark, sf_dir, "events"),
-        cents=F.sum(F.round(F.col("value") * 100, 0).try_cast("long")),
+        cents=F.sum(cents("value")),
     )
     back = (
         Window.partitionBy("event_type")
@@ -840,7 +840,7 @@ def ts_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         "ts",
-        F.round(F.col("value") * 100).try_cast("long").alias("v"),
+        cents("value").alias("v"),
     )
     wlag = Window.partitionBy("event_type").orderBy("ts", "event_id", "v")
     paired = v.withColumn("p", F.lag("v").over(wlag)).where(
@@ -1162,9 +1162,7 @@ def ts_calendar_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("dow", "hour_of_day", "is_weekend")
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).try_cast("long")).alias(
-                "cents_total"
-            ),
+            F.sum(cents("value")).alias("cents_total"),
         )
     )
 
@@ -1217,7 +1215,7 @@ def ts_sessionized_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     rev = F.when(
         F.col("event_type") == "purchase",
-        F.round(F.col("value") * 100).try_cast("long"),
+        cents("value"),
     ).otherwise(F.lit(0))
     per_session = (
         ev.withColumn("session_id", _gap_session_id())
@@ -1463,7 +1461,7 @@ def ts_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     disagree on. One shuffle on the series key, constant frame
     state. NULL event times are excluded (null-ts doctrine)."""
     ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    vc = F.round(F.col("value") * 100).try_cast("long")
+    vc = cents("value")
     wlag = Window.partitionBy("event_type").orderBy("ts", "event_id", vc)
     d = ev.select(
         "event_id",
@@ -1630,7 +1628,7 @@ def ts_minmax_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent-integers, with constant series yielding NULL via nullif
     rather than a fabricated 0."""
     ev = load_table(spark, sf_dir, "events")
-    vc = F.round(F.col("value") * 100).try_cast("long")
+    vc = cents("value")
     b = ev.groupBy("event_type").agg(
         F.min(vc).alias("lo"), F.max(vc).alias("hi")
     )
@@ -1888,7 +1886,7 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers. NULL event times are excluded (null-ts doctrine: the
     curve IS the time order)."""
     ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    delta = F.round(F.col("value") * 100).try_cast("long") - 2000
+    delta = cents("value") - 2000
     # delta is the FINAL tie-break (dup_ids axis): an order-sensitive
     # running sum must be total-ordered even across duplicate event_ids
     w = Window.partitionBy("event_type").orderBy("ts", "event_id", delta)
@@ -1946,7 +1944,6 @@ def ts_isoweek_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the composite key; NULL event times excluded per the null-ts
     doctrine (a row with no event time has no week)."""
     ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    from pymapreduce_spark.functions.checked import cents
 
     return ev.groupBy(
         F.expr("extract(YEAROFWEEK FROM ts)").cast("int").alias("iso_year"),
@@ -1987,8 +1984,6 @@ def ts_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated shuffle on the composite key; at 100 TB the
     month×flag key space is tiny, so the map-side combine collapses
     virtually all rows before the exchange."""
-    from pymapreduce_spark.functions.checked import cents, trunc_ntz
-
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate").isNotNull()
     )

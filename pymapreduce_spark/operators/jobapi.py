@@ -9,14 +9,27 @@ surface); every one has a declarative twin elsewhere in the registry
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pymapreduce_spark.api import MapReduceJob
-from pymapreduce_spark.io import load_table, read_back
+from pymapreduce_spark.functions.checked import cents
+from pymapreduce_spark.io import load_table, read_back, stable_scratch
 from pymapreduce_spark.registry import query
+
+
+def _finite_cents(x) -> int | None:
+    """Integer cents of one Python money value, or None when it has no
+    finite magnitude: the mapper-side twin of the oracles'
+    ``TRY_CAST(round(x * 100) AS BIGINT)``. A NULL arrives as None or
+    NaN, and damaged telemetry carries ±Inf; ``int(round(NaN))`` raises
+    ValueError and ``int(round(inf))`` OverflowError, where TRY_CAST
+    yields NULL (extreme_measures axis)."""
+    return int(round(x * 100)) if x is not None and math.isfinite(x) else None
 
 
 @query(
@@ -73,19 +86,9 @@ def api_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         MapReduceJob.from_table(spark, sf_dir, "events")
         .filter(lambda row: row["event_type"] == "purchase")
         .map(
-            # a NULL value arrives as NaN, and damaged telemetry can
-            # carry ±Inf — emit NULL cents for anything non-finite
-            # (int(round(inf)) raises OverflowError), matching the
-            # oracle's TRY_CAST(round(value*100) AS BIGINT) → NULL
             lambda row: {
                 "user_id": row["user_id"],
-                "cents": (
-                    None
-                    if row["value"] is None
-                    or row["value"] != row["value"]
-                    or row["value"] in (float("inf"), float("-inf"))
-                    else int(round(row["value"] * 100))
-                ),
+                "cents": _finite_cents(row["value"]),
             },
             schema="user_id long, cents long",
         )
@@ -135,24 +138,12 @@ def api_reduce_side_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows — ``names.iloc[0]`` here would pick an engine-arbitrary
     survivor the moment a nationkey is duplicated (a CDC feed applied
     twice), which is how the dup-key adversarial axis caught it."""
-    import math
-
-    def _cents(x):
-        # non-finite balances carry no cents (extreme_measures axis:
-        # int(round(NaN)) raises, int(round(inf)) overflows; the SQL
-        # twin's TRY_CAST yields NULL — match it with None)
-        return (
-            int(round(x * 100))
-            if x is not None and math.isfinite(x)
-            else None
-        )
-
     sup = MapReduceJob.from_table(spark, sf_dir, "supplier").map(
         lambda r: {
             "key": int(r["s_nationkey"]),
             "tag": "s",
             "name": "",
-            "bal_cents": _cents(r["s_acctbal"]),
+            "bal_cents": _finite_cents(r["s_acctbal"]),
         },
         schema="key long, tag string, name string, bal_cents long",
     )
@@ -228,12 +219,9 @@ def api_map_side_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         k = r["s_nationkey"]
         if k is None or k != k:  # NULL key: inner join drops the row
             return []
-        bal = r["s_acctbal"]
-        cents = (
-            None if bal is None or bal != bal else int(round(bal * 100))
-        )
+        bal = _finite_cents(r["s_acctbal"])
         return [
-            {"n_name": nm, "bal_cents": cents}
+            {"n_name": nm, "bal_cents": bal}
             for nm in bc.value.get(int(k), [])
         ]
 
@@ -350,7 +338,7 @@ def api_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
         purchase_cents=F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.round(F.col("value") * 100).try_cast("long"),
+                cents("value"),
             ).otherwise(F.lit(0))
         ),
     )
@@ -394,8 +382,6 @@ def api_multi_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the in-memory frames. At 100 TB prefer a single
     partitionBy(route) write when routes share a schema — two sinks
     only when downstream ownership differs."""
-    from pymapreduce_spark.io import scratch_dir
-
     purchases = (
         MapReduceJob.from_table(spark, sf_dir, "events")
         .where_expr("event_type = 'purchase'")
@@ -408,23 +394,25 @@ def api_multi_output(spark: SparkSession, sf_dir: str) -> DataFrame:
         .to_df()
         .persist()
     )
+    base = stable_scratch(sf_dir, "multi_output")
+    purchases.where(F.col("value") >= 100).write.mode("overwrite").parquet(
+        base + "/high_value"
+    )
+    purchases.where(F.col("value") < 100).write.mode("overwrite").parquet(
+        base + "/standard"
+    )
+    purchases.unpersist()
     out = []
-    with scratch_dir("multiout_") as base:
-        high = purchases.where(F.col("value") >= 100)
-        std = purchases.where(F.col("value") < 100)
-        high.write.mode("overwrite").parquet(base + "/high_value")
-        std.write.mode("overwrite").parquet(base + "/standard")
-        purchases.unpersist()
-        for name in ("high_value", "standard"):
-            back = read_back(spark, f"{base}/{name}", purchases.schema)
-            # An empty route (e.g. no purchase >= 100 at a skewed SF)
-            # yields sum(cents) = NULL — coalesce to 0 like the oracle
-            # instead of crashing on int(None).
-            row = back.agg(
-                F.count("*").alias("n"),
-                F.coalesce(F.sum("cents"), F.lit(0)).alias("c"),
-            ).first()
-            out.append((name, int(row["n"]), int(row["c"])))
+    for name in ("high_value", "standard"):
+        back = read_back(spark, f"{base}/{name}", purchases.schema)
+        # An empty route (e.g. no purchase >= 100 at a skewed SF)
+        # yields sum(cents) = NULL — coalesce to 0 like the oracle
+        # instead of crashing on int(None).
+        row = back.agg(
+            F.count("*").alias("n"),
+            F.coalesce(F.sum("cents"), F.lit(0)).alias("c"),
+        ).first()
+        out.append((name, int(row["n"]), int(row["c"])))
     return spark.createDataFrame(
         out, "output_name string, n_rows long, cents long"
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pymapreduce_spark.functions.checked import epoch_micros
+from pymapreduce_spark.functions.checked import cents, epoch_micros
 from pymapreduce_spark.io import load_table
 from pymapreduce_spark.registry import query
 
@@ -334,7 +334,7 @@ def win_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one windows-family op whose state is O(frame), and the frame
     is a constant. NULL event times are excluded (null-ts axis)."""
     ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    vc = F.round(F.col("value") * 100).try_cast("long")
+    vc = cents("value")
     # vc is the FINAL tie-break (dup_ids axis): duplicate event_ids
     # with different payloads need a total order for the frame walk
     w = (
@@ -562,8 +562,6 @@ def win_moving_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     host's noise band; the window SORT dominates at this frame width,
     so the lag form's win here is allocation pressure, not measured
     wall-clock (unlike ewma, whose fold was ~15%)."""
-    from pymapreduce_spark.functions.checked import cents
-
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("ts").isNotNull())

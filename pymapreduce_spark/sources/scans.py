@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pymapreduce_spark.functions.checked import cents
 from pymapreduce_spark.io import (
     derived_artifact,
     load_table,
@@ -217,7 +218,6 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     back = spark.read.csv(path, header=True, schema=schema)
     # the partition column comes back from the directory layout
-    from pymapreduce_spark.functions.checked import cents
 
     return back.withColumn(
         "s_nationkey", F.input_file_name()
@@ -246,8 +246,6 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink + schema-explicit read-back of a filtered
     projection, then aggregate — the lossless JSON round trip."""
-    from pymapreduce_spark.functions.checked import cents
-
     path = stable_scratch(sf_dir, "purchases_jsonl")
     ev = load_table(spark, sf_dir, "events")
     (
@@ -319,8 +317,6 @@ def sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     mint in 38-digit decimal, exact for any int64 pair. The decimal is
     internal (sink column); every checked output column stays
     bigint/double."""
-    from pymapreduce_spark.functions.checked import cents
-
     d38 = "decimal(38,0)"
     raw = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -452,7 +448,6 @@ def sink_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").orc(path)
     back = read_back(spark, path, orders.schema, fmt="orc")
-    from pymapreduce_spark.functions.checked import cents
 
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
@@ -783,8 +778,6 @@ def sink_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
         WriterCommitMessage,
     )
 
-    from pymapreduce_spark.functions.checked import cents
-
     path = stable_scratch(sf_dir, "supplier_pyds_sink")
 
     class _Writer(DataSourceWriter):
@@ -956,7 +949,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(
             F.sum(
                 F.when(
-                    corrupt, F.round(F.col("bal") * 100).try_cast("long")
+                    corrupt, cents("bal")
                 )
             ),
             F.lit(0),

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from pymapreduce_spark.functions.checked import cents
 from pymapreduce_spark.io import (
     derived_artifact,
     load_table,
@@ -1450,7 +1451,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").alias("tsu"),
             F.col("event_id").alias("id"),
             F.col("event_type").alias("et"),
-            F.round(F.col("value") * 100).try_cast("long").alias("vc"),
+            cents("value").alias("vc"),
         )
     ).alias("c")
     # State schema derived by PLANNING the merge shape on the batch

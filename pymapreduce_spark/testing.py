@@ -35,6 +35,58 @@ def make_duckdb(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def strict_rows(columns: list[str], rows) -> list[tuple[str, ...]]:
+    """The strict differential form (``tools/driver_sim.py``'s rule):
+    columns ordered by name, every cell rendered with ``str``, rows
+    sorted. Harsher than :func:`canon_cell` on purpose — a DATE and a
+    TIMESTAMP holding the same day, or a Decimal and a float holding
+    the same value, render differently, so engine type skew fails
+    here even when the values agree. Duplicate rows stay distinct."""
+    order = sorted(range(len(columns)), key=lambda i: columns[i])
+    return sorted(tuple(str(row[i]) for i in order) for row in rows)
+
+
+def spark_rows(sdf: DataFrame) -> list[tuple[str, ...]]:
+    """:func:`strict_rows` of a collected Spark DataFrame."""
+    return strict_rows(sdf.columns, sdf.collect())
+
+
+def duck_rows(
+    con: duckdb.DuckDBPyConnection, sql: str
+) -> list[tuple[str, ...]]:
+    """:func:`strict_rows` of a DuckDB query's fetched rows."""
+    cur = con.execute(sql)
+    return strict_rows([d[0] for d in cur.description], cur.fetchall())
+
+
+def oracle_mismatches(
+    spark: SparkSession, sf_dir: str, names, log=None
+) -> list[str]:
+    """Run each named registered op on ``sf_dir`` and strict-compare it
+    with its DuckDB oracle over the dir's fixture views. Returns one
+    ``"<name>: <spark rows> vs <oracle rows> rows"`` line per mismatch.
+    ``log``, when given, gets each mismatch line as it is found and a
+    progress line every 50 ops."""
+    from pymapreduce_spark.registry import ORACLES, QUERIES
+
+    names = list(names)
+    con = make_duckdb(sf_dir)
+    bad: list[str] = []
+    try:
+        for i, name in enumerate(names):
+            got = spark_rows(QUERIES[name](spark, sf_dir))
+            want = duck_rows(con, ORACLES[name])
+            if got != want:
+                bad.append(f"{name}: {len(got)} vs {len(want)} rows")
+                if log:
+                    log(f"MISMATCH {bad[-1]}")
+            if log and (i + 1) % 50 == 0:
+                log(f"  ... {i + 1}/{len(names)} ({len(bad)} bad)")
+    finally:
+        con.close()
+    return bad
+
+
 def canon_cell(v: Any) -> str:
     """Render one cell to a canonical, engine-independent string."""
     if v is None:

@@ -20,6 +20,31 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
 
 
+def _smallest_sibling_sf(sf_dir: str) -> str:
+    root = os.path.dirname(os.path.normpath(sf_dir))
+    try:
+        sibs = sorted(
+            (float(e[2:]), os.path.join(root, e))
+            for e in os.listdir(root)
+            if e.startswith("sf")
+            and os.path.isdir(os.path.join(root, e))
+            and e[2:].replace(".", "", 1).isdigit()
+        )
+    except OSError:
+        return sf_dir
+    return sibs[0][1] if sibs else sf_dir
+
+
+#: Source fixture for the adversarial rebuilds: the smallest available
+#: sibling SF of the session fixture dir (fast to rewrite per-test),
+#: falling back to the session dir itself — derived from SF_DIR rather
+#: than hardcoded so relocated fixtures / renamed SF tags keep the
+#: suite runnable.
+ADVERSARIAL_SRC = os.environ.get(
+    "TEST_ADVERSARIAL_SRC", _smallest_sibling_sf(SF_DIR)
+)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pymapreduce_spark.session import get_spark

@@ -35,39 +35,12 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-# Source fixture for the adversarial rebuilds: the smallest available
-# sibling SF of the session fixture dir (fast to rewrite per-test),
-# falling back to the session dir itself — derived from conftest.SF_DIR
-# rather than hardcoded so relocated fixtures / renamed SF tags keep
-# the suite runnable, same as every other test module.
-from conftest import SF_DIR as _SESSION_SF_DIR
+from conftest import ADVERSARIAL_SRC as SRC
 
-
-def _smallest_sibling_sf(sf_dir: str) -> str:
-    root = os.path.dirname(os.path.normpath(sf_dir))
-    try:
-        sibs = sorted(
-            (
-                float(e[2:]),
-                os.path.join(root, e),
-            )
-            for e in os.listdir(root)
-            if e.startswith("sf")
-            and os.path.isdir(os.path.join(root, e))
-            and e[2:].replace(".", "", 1).isdigit()
-        )
-    except OSError:
-        return sf_dir
-    return sibs[0][1] if sibs else sf_dir
-
-
-SRC = os.environ.get(
-    "TEST_ADVERSARIAL_SRC", _smallest_sibling_sf(_SESSION_SF_DIR)
+from pymapreduce_spark.io import TABLES
+from pymapreduce_spark.testing import (
+    duck_rows, make_duckdb, oracle_mismatches, spark_rows,
 )
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 #: operators the NULL audit caught (crash or divergence), now fixed
 NULL_OPS = [
@@ -134,38 +107,6 @@ def skew_sf(tmp_path_factory) -> str:
     return str(base)
 
 
-def _compare(spark, sf: str, ops: list[str]) -> list[str]:
-    import duckdb
-
-    import __spark_entry__ as entry
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf}/{t}.parquet')"
-        )
-    queries, oracles = entry.queries(), entry.oracle_sql()
-    bad = []
-    for name in ops:
-        sdf = queries[name](spark, sf)
-        si = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-        got = sorted(
-            tuple(str(r[i]) for i in si) for r in sdf.collect()
-        )
-        cur = con.execute(oracles[name])
-        di = sorted(
-            range(len(cur.description)), key=lambda i: cur.description[i][0]
-        )
-        want = sorted(
-            tuple(str(r[i]) for i in di) for r in cur.fetchall()
-        )
-        if got != want:
-            bad.append(f"{name}: {len(got)} vs {len(want)} rows")
-    con.close()
-    return bad
-
-
 @pytest.fixture(scope="module")
 def unicode_sf(tmp_path_factory) -> str:
     base = tmp_path_factory.mktemp("sf_unicode")
@@ -190,17 +131,17 @@ def unicode_sf(tmp_path_factory) -> str:
 
 
 def test_null_injected_fixture_matches_oracle(spark, nulls_sf):
-    bad = _compare(spark, nulls_sf, NULL_OPS)
+    bad = oracle_mismatches(spark, nulls_sf, NULL_OPS)
     assert not bad, "NULL-input divergence:\n" + "\n".join(bad)
 
 
 def test_skewed_fixture_matches_oracle(spark, skew_sf):
-    bad = _compare(spark, skew_sf, SKEW_OPS)
+    bad = oracle_mismatches(spark, skew_sf, SKEW_OPS)
     assert not bad, "skew-input divergence:\n" + "\n".join(bad)
 
 
 def test_unicode_fixture_matches_oracle(spark, unicode_sf):
-    bad = _compare(spark, unicode_sf, UNICODE_OPS)
+    bad = oracle_mismatches(spark, unicode_sf, UNICODE_OPS)
     assert not bad, "unicode-input divergence:\n" + "\n".join(bad)
 
 
@@ -285,7 +226,7 @@ def combined_sf(tmp_path_factory) -> str:
 
 
 def test_combined_fixture_matches_oracle(spark, combined_sf):
-    bad = _compare(spark, combined_sf, COMBINED_OPS)
+    bad = oracle_mismatches(spark, combined_sf, COMBINED_OPS)
     assert not bad, "combined-axis divergence:\n" + "\n".join(bad)
 
 
@@ -318,7 +259,7 @@ COMBINED_BACKLOG_OPS = [
 
 
 def test_combined_fixture_backlog_ops_match_oracle(spark, combined_sf):
-    bad = _compare(spark, combined_sf, COMBINED_BACKLOG_OPS)
+    bad = oracle_mismatches(spark, combined_sf, COMBINED_BACKLOG_OPS)
     assert not bad, "combined-axis backlog divergence:\n" + "\n".join(bad)
 
 
@@ -372,7 +313,7 @@ def degenerate_sf(tmp_path_factory) -> str:
 
 
 def test_degenerate_fixture_matches_oracle(spark, degenerate_sf):
-    bad = _compare(spark, degenerate_sf, DEGENERATE_OPS)
+    bad = oracle_mismatches(spark, degenerate_sf, DEGENERATE_OPS)
     assert not bad, "degenerate-input divergence:\n" + "\n".join(bad)
 
 
@@ -418,7 +359,7 @@ def ts_extreme_sf(tmp_path_factory) -> str:
 
 
 def test_ts_extreme_fixture_matches_oracle(spark, ts_extreme_sf):
-    bad = _compare(spark, ts_extreme_sf, TS_EXTREME_OPS)
+    bad = oracle_mismatches(spark, ts_extreme_sf, TS_EXTREME_OPS)
     assert not bad, "ts-extreme divergence:\n" + "\n".join(bad)
 
 
@@ -460,7 +401,7 @@ def json_sf(tmp_path_factory) -> str:
 
 
 def test_malformed_json_fixture_matches_oracle(spark, json_sf):
-    bad = _compare(spark, json_sf, JSON_OPS)
+    bad = oracle_mismatches(spark, json_sf, JSON_OPS)
     assert not bad, "malformed-JSON divergence:\n" + "\n".join(bad)
 
 
@@ -507,7 +448,7 @@ def orphan_fk_sf(tmp_path_factory) -> str:
 
 
 def test_orphan_fk_fixture_matches_oracle(spark, orphan_fk_sf):
-    bad = _compare(spark, orphan_fk_sf, FK_OPS)
+    bad = oracle_mismatches(spark, orphan_fk_sf, FK_OPS)
     assert not bad, "orphan-FK divergence:\n" + "\n".join(bad)
 
 
@@ -550,7 +491,7 @@ def null_embed_sf(tmp_path_factory) -> str:
 
 
 def test_null_embedding_fixture_matches_oracle(spark, null_embed_sf):
-    bad = _compare(spark, null_embed_sf, NULL_EMBED_OPS)
+    bad = oracle_mismatches(spark, null_embed_sf, NULL_EMBED_OPS)
     assert not bad, "NULL-embedding divergence:\n" + "\n".join(bad)
 
 
@@ -616,7 +557,7 @@ def ties_sf(tmp_path_factory) -> str:
 
 
 def test_total_tie_fixture_matches_oracle(spark, ties_sf):
-    bad = _compare(spark, ties_sf, TIE_OPS)
+    bad = oracle_mismatches(spark, ties_sf, TIE_OPS)
     assert not bad, "total-tie divergence:\n" + "\n".join(bad)
 
 
@@ -682,7 +623,7 @@ def dupkeys_sf(tmp_path_factory) -> str:
 
 
 def test_dupkey_fixture_matches_oracle(spark, dupkeys_sf):
-    bad = _compare(spark, dupkeys_sf, DUPKEY_OPS)
+    bad = oracle_mismatches(spark, dupkeys_sf, DUPKEY_OPS)
     assert not bad, "dup-key divergence:\n" + "\n".join(bad)
 
 
@@ -746,7 +687,7 @@ def dupfact_sf(tmp_path_factory) -> str:
 
 
 def test_dupfact_fixture_matches_oracle(spark, dupfact_sf):
-    bad = _compare(spark, dupfact_sf, DUPFACT_OPS)
+    bad = oracle_mismatches(spark, dupfact_sf, DUPFACT_OPS)
     assert not bad, "dup-fact-key divergence:\n" + "\n".join(bad)
 
 
@@ -775,7 +716,7 @@ def roworder_sf(tmp_path_factory) -> str:
 
 
 def test_roworder_fixture_matches_oracle(spark, roworder_sf):
-    bad = _compare(spark, roworder_sf, ROWORDER_OPS)
+    bad = oracle_mismatches(spark, roworder_sf, ROWORDER_OPS)
     assert not bad, "row-order divergence:\n" + "\n".join(bad)
 
 
@@ -825,7 +766,7 @@ def nan_inf_sf(tmp_path_factory) -> str:
 
 
 def test_nan_inf_fixture_matches_oracle(spark, nan_inf_sf):
-    bad = _compare(spark, nan_inf_sf, NAN_INF_OPS)
+    bad = oracle_mismatches(spark, nan_inf_sf, NAN_INF_OPS)
     assert not bad, "nan-inf divergence:\n" + "\n".join(bad)
 
 
@@ -887,7 +828,7 @@ def zero_embed_sf(tmp_path_factory) -> str:
 
 
 def test_zero_embed_fixture_matches_oracle(spark, zero_embed_sf):
-    bad = _compare(spark, zero_embed_sf, ZERO_EMBED_OPS)
+    bad = oracle_mismatches(spark, zero_embed_sf, ZERO_EMBED_OPS)
     assert not bad, "zero-embed divergence:\n" + "\n".join(bad)
 
 
@@ -938,12 +879,12 @@ def tiny1_sf(tmp_path_factory) -> str:
 
 
 def test_tiny3_fixture_matches_oracle(spark, tiny3_sf):
-    bad = _compare(spark, tiny3_sf, TINY_OPS)
+    bad = oracle_mismatches(spark, tiny3_sf, TINY_OPS)
     assert not bad, "tiny-3 divergence:\n" + "\n".join(bad)
 
 
 def test_tiny1_fixture_matches_oracle(spark, tiny1_sf):
-    bad = _compare(spark, tiny1_sf, TINY_OPS)
+    bad = oracle_mismatches(spark, tiny1_sf, TINY_OPS)
     assert not bad, "tiny-1 divergence:\n" + "\n".join(bad)
 
 
@@ -999,7 +940,7 @@ def unicode_keys_sf(tmp_path_factory) -> str:
 
 
 def test_unicode_keys_fixture_matches_oracle(spark, unicode_keys_sf):
-    bad = _compare(spark, unicode_keys_sf, UNICODE_KEY_OPS)
+    bad = oracle_mismatches(spark, unicode_keys_sf, UNICODE_KEY_OPS)
     assert not bad, "unicode-key divergence:\n" + "\n".join(bad)
 
 
@@ -1068,7 +1009,7 @@ def combined2_sf(tmp_path_factory) -> str:
 
 
 def test_combined2_fixture_matches_oracle(spark, combined2_sf):
-    bad = _compare(spark, combined2_sf, COMBINED2_OPS)
+    bad = oracle_mismatches(spark, combined2_sf, COMBINED2_OPS)
     assert not bad, "combined-v2 divergence:\n" + "\n".join(bad)
 
 
@@ -1123,7 +1064,7 @@ def negative_sf(tmp_path_factory) -> str:
 
 
 def test_negative_fixture_matches_oracle(spark, negative_sf):
-    bad = _compare(spark, negative_sf, NEGATIVE_OPS)
+    bad = oracle_mismatches(spark, negative_sf, NEGATIVE_OPS)
     assert not bad, "negative-value divergence:\n" + "\n".join(bad)
 
 
@@ -1183,7 +1124,7 @@ def control_sf(tmp_path_factory) -> str:
 
 
 def test_control_chars_fixture_matches_oracle(spark, control_sf):
-    bad = _compare(spark, control_sf, CONTROL_OPS)
+    bad = oracle_mismatches(spark, control_sf, CONTROL_OPS)
     assert not bad, "control-chars divergence:\n" + "\n".join(bad)
 
 
@@ -1235,7 +1176,7 @@ def null_ts_sf(tmp_path_factory) -> str:
 
 
 def test_null_ts_fixture_matches_oracle(spark, null_ts_sf):
-    bad = _compare(spark, null_ts_sf, NULL_TS_OPS)
+    bad = oracle_mismatches(spark, null_ts_sf, NULL_TS_OPS)
     assert not bad, "null-event-time divergence:\n" + "\n".join(bad)
 
 
@@ -1277,7 +1218,7 @@ def one_key_sf(tmp_path_factory) -> str:
 
 
 def test_one_key_fixture_matches_oracle(spark, one_key_sf):
-    bad = _compare(spark, one_key_sf, ONE_KEY_OPS)
+    bad = oracle_mismatches(spark, one_key_sf, ONE_KEY_OPS)
     assert not bad, "one-key divergence:\n" + "\n".join(bad)
 
 
@@ -1341,7 +1282,7 @@ def clock_sf(tmp_path_factory) -> str:
 
 
 def test_clock_boundary_fixture_matches_oracle(spark, clock_sf):
-    bad = _compare(spark, clock_sf, CLOCK_OPS)
+    bad = oracle_mismatches(spark, clock_sf, CLOCK_OPS)
     assert not bad, "clock-boundary divergence:\n" + "\n".join(bad)
 
 
@@ -1443,7 +1384,7 @@ def huge_doc_sf(tmp_path_factory) -> str:
 
 
 def test_huge_doc_fixture_matches_oracle(spark, huge_doc_sf):
-    bad = _compare(spark, huge_doc_sf, HUGE_DOC_OPS)
+    bad = oracle_mismatches(spark, huge_doc_sf, HUGE_DOC_OPS)
     assert not bad, "huge-doc divergence:\n" + "\n".join(bad)
 
 
@@ -1546,7 +1487,7 @@ def ragged_embed_sf(tmp_path_factory) -> str:
 
 
 def test_ragged_embedding_fixture_matches_oracle(spark, ragged_embed_sf):
-    bad = _compare(spark, ragged_embed_sf, RAGGED_EMBED_OPS)
+    bad = oracle_mismatches(spark, ragged_embed_sf, RAGGED_EMBED_OPS)
     assert not bad, "ragged-embedding divergence:\n" + "\n".join(bad)
 
 
@@ -1620,7 +1561,7 @@ def dup_ids_sf(tmp_path_factory) -> str:
 
 
 def test_dup_ids_fixture_matches_oracle(spark, dup_ids_sf):
-    bad = _compare(spark, dup_ids_sf, DUP_IDS_OPS)
+    bad = oracle_mismatches(spark, dup_ids_sf, DUP_IDS_OPS)
     assert not bad, "duplicate-id divergence:\n" + "\n".join(bad)
 
 
@@ -1702,7 +1643,7 @@ def null_ids_sf(tmp_path_factory) -> str:
 
 
 def test_null_ids_fixture_matches_oracle(spark, null_ids_sf):
-    bad = _compare(spark, null_ids_sf, NULL_IDS_OPS)
+    bad = oracle_mismatches(spark, null_ids_sf, NULL_IDS_OPS)
     assert not bad, "NULL-id divergence:\n" + "\n".join(bad)
 
 
@@ -1715,6 +1656,20 @@ def test_combined_id_corruption_matches_oracle(spark, tmp_path_factory):
     duplicated doc_id with NULL text). Reuses the combined_ids axis
     builder from tools/adversarial_audit.py; the full 305-query sweep
     ran 0/305 on round 8 — this pins the doctrine-owning ops in CI."""
+    aa = _audit_module()
+    out = str(tmp_path_factory.mktemp("sf_combined_ids"))
+    aa.build_combined_ids(out, 3)
+    bad = oracle_mismatches(spark, out, [
+        "llm_knn_self_join", "llm_semdedup", "graph_components",
+        "ts_resample_ohlc", "win_rolling_median", "llm_dedup_fuzzy",
+        "llm_tfidf_ml", "sample_fixed_k", "llm_sim_search",
+    ])
+    assert not bad, "combined id-corruption divergence:\n" + "\n".join(bad)
+
+
+def _audit_module():
+    """tools/adversarial_audit.py, whose axis builders write the
+    hostile fixtures these tests pin."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -1725,14 +1680,7 @@ def test_combined_id_corruption_matches_oracle(spark, tmp_path_factory):
     )
     aa = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(aa)
-    out = str(tmp_path_factory.mktemp("sf_combined_ids"))
-    aa.build_combined_ids(out, 3)
-    bad = _compare(spark, out, [
-        "llm_knn_self_join", "llm_semdedup", "graph_components",
-        "ts_resample_ohlc", "win_rolling_median", "llm_dedup_fuzzy",
-        "llm_tfidf_ml", "sample_fixed_k", "llm_sim_search",
-    ])
-    assert not bad, "combined id-corruption divergence:\n" + "\n".join(bad)
+    return aa
 
 
 # ---------------------------------------------------------------------------
@@ -1761,19 +1709,10 @@ HOSTILE_JSON_OPS = [
 
 
 def test_hostile_json_fixture_matches_oracle(spark, tmp_path_factory):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "adversarial_audit",
-        os.path.join(
-            os.path.dirname(__file__), "..", "tools", "adversarial_audit.py"
-        ),
-    )
-    aa = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(aa)
+    aa = _audit_module()
     out = str(tmp_path_factory.mktemp("sf_hostile_json"))
     aa.build_hostile_json(out, 3)
-    bad = _compare(spark, out, HOSTILE_JSON_OPS)
+    bad = oracle_mismatches(spark, out, HOSTILE_JSON_OPS)
     assert not bad, "hostile-JSON divergence:\n" + "\n".join(bad)
 
 
@@ -1805,20 +1744,37 @@ EXTREME_MEASURE_OPS = [
 
 
 def test_extreme_measures_fixture_matches_oracle(spark, tmp_path_factory):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "adversarial_audit",
-        os.path.join(
-            os.path.dirname(__file__), "..", "tools", "adversarial_audit.py"
-        ),
-    )
-    aa = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(aa)
+    aa = _audit_module()
     out = str(tmp_path_factory.mktemp("sf_extreme_measures"))
     aa.build_extreme_measures(out, 3)
-    bad = _compare(spark, out, EXTREME_MEASURE_OPS)
+    bad = oracle_mismatches(spark, out, EXTREME_MEASURE_OPS)
     assert not bad, "extreme-measure divergence:\n" + "\n".join(bad)
+
+
+def test_infinite_supplier_balance_facade_joins_match_oracle(
+    spark, tmp_path_factory
+):
+    """±Inf in ``supplier.s_acctbal`` carries no cents on either facade
+    join, as the oracles' TRY_CAST yields NULL. The extreme_measures
+    axis plants its values at rows 5, 16, 27 and 38, past the end of a
+    10-row supplier table, so it never reached the map-side join's
+    mapper, which overflowed on ``int(round(inf * 100))``."""
+    base = tmp_path_factory.mktemp("sf_inf_acctbal")
+    for t in TABLES:
+        tb = pq.read_table(os.path.join(SRC, f"{t}.parquet"))
+        if t == "supplier":
+            bal = tb["s_acctbal"].to_pylist()
+            bal[1] = float("inf")
+            bal[2] = float("-inf")
+            tb = tb.set_column(
+                tb.schema.get_field_index("s_acctbal"), "s_acctbal",
+                pa.array(bal, type=tb.schema.field("s_acctbal").type),
+            )
+        pq.write_table(tb, str(base / f"{t}.parquet"))
+    bad = oracle_mismatches(
+        spark, str(base), ["api_map_side_join", "api_reduce_side_join"]
+    )
+    assert not bad, "infinite-balance divergence:\n" + "\n".join(bad)
 
 
 # ---------------------------------------------------------------------------
@@ -1838,18 +1794,6 @@ STREAM_AXIS_OPS = [
 ]
 
 
-def _audit_module():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "adversarial_audit",
-        os.path.join(
-            os.path.dirname(__file__), "..", "tools", "adversarial_audit.py"
-        ),
-    )
-    aa = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(aa)
-    return aa
 
 
 def test_streaming_null_ts_matches_oracle(spark, tmp_path_factory):
@@ -1859,7 +1803,7 @@ def test_streaming_null_ts_matches_oracle(spark, tmp_path_factory):
     aa = _audit_module()
     out = str(tmp_path_factory.mktemp("sf_stream_nullts"))
     aa.build_null_ts(out, 4)
-    bad = _compare(spark, out, STREAM_AXIS_OPS)
+    bad = oracle_mismatches(spark, out, STREAM_AXIS_OPS)
     assert not bad, "stream null-ts divergence:\n" + "\n".join(bad)
 
 
@@ -1871,7 +1815,7 @@ def test_streaming_dup_ids_matches_oracle(spark, tmp_path_factory):
     aa = _audit_module()
     out = str(tmp_path_factory.mktemp("sf_stream_dupids"))
     aa.build_dup_ids(out, 4)
-    bad = _compare(spark, out, STREAM_AXIS_OPS)
+    bad = oracle_mismatches(spark, out, STREAM_AXIS_OPS)
     assert not bad, "stream dup-ids divergence:\n" + "\n".join(bad)
 
 
@@ -1880,40 +1824,20 @@ def test_streaming_clock_tz_matches_oracle(spark, tmp_path_factory):
     under a hostile +05:45 session timezone, re-poisoned before EVERY
     query: read_stream's ensure_runtime_configs must re-pin UTC each
     time, or epoch-aligned window buckets shift to :45 alignment."""
-    import duckdb
-
     import __spark_entry__ as entry
 
     aa = _audit_module()
     out = str(tmp_path_factory.mktemp("sf_stream_clock"))
     aa.build_clock_tz(out, 4)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{out}/{t}.parquet')"
-        )
+    con = make_duckdb(out)
     queries, oracles = entry.queries(), entry.oracle_sql()
     prior = spark.conf.get("spark.sql.session.timeZone")
     bad = []
     try:
         for name in STREAM_AXIS_OPS:
             spark.conf.set("spark.sql.session.timeZone", "Asia/Kathmandu")
-            sdf = queries[name](spark, out)
-            si = sorted(
-                range(len(sdf.columns)), key=lambda i: sdf.columns[i]
-            )
-            got = sorted(
-                tuple(str(r[i]) for i in si) for r in sdf.collect()
-            )
-            cur = con.execute(oracles[name])
-            di = sorted(
-                range(len(cur.description)),
-                key=lambda i: cur.description[i][0],
-            )
-            want = sorted(
-                tuple(str(r[i]) for i in di) for r in cur.fetchall()
-            )
+            got = spark_rows(queries[name](spark, out))
+            want = duck_rows(con, oracles[name])
             if got != want:
                 bad.append(f"{name}: {len(got)} vs {len(want)} rows")
     finally:
@@ -1938,7 +1862,7 @@ def test_extreme_ids_fixture_matches_oracle(spark, tmp_path_factory):
         "agg_salted_twophase", "llm_dedup_exact", "win_ranking",
         "join_inner_equi",
     ]
-    bad = _compare(spark, out, ops)
+    bad = oracle_mismatches(spark, out, ops)
     assert not bad, "extreme-id divergence:\n" + "\n".join(bad)
     # graph_components' oracle needs the graph edge derivation —
     # covered by the full-registry audit sweep; here pin that the

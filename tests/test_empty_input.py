@@ -26,10 +26,7 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from pymapreduce_spark.io import TABLES
 
 
 @pytest.fixture(scope="module")

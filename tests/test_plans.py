@@ -18,6 +18,19 @@ def plan_of(name: str, spark, sf_dir: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _plan_audit_module():
+    """tools/plan_audit.py, whose plan heuristics these tests pin."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "plan_audit",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "plan_audit.py"),
+    )
+    pa = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(pa)
+    return pa
+
+
 def formatted_plan_of(name: str, spark, sf_dir: str) -> str:
     df = QUERIES[name](spark, sf_dir)
     return spark.sparkContext._jvm.PythonSQLUtils.explainString(
@@ -773,15 +786,7 @@ def test_plan_audit_suppresses_post_limit_global_windows(spark, sf_dir):
     5-row frame) is bounded by construction and must NOT flag, while a
     global window straight over a data-sized scan still must
     (round-7 verdict, task 7)."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "plan_audit",
-        os.path.join(os.path.dirname(__file__), "..", "tools", "plan_audit.py"),
-    )
-    pa = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(pa)
+    pa = _plan_audit_module()
 
     for name in ("llm_vocab_coverage", "llm_query_doc_match"):
         plan = formatted_plan_of(name, spark, sf_dir)
@@ -835,19 +840,11 @@ def test_plan_audit_flags_hof_producer_in_filter(spark, sf_dir):
     (evaluated once per row) must not flag, and no registered query's
     plan may carry the signature (ensure_runtime_configs excludes
     InferFiltersFromGenerate, the only self-inflicted source)."""
-    import importlib.util
-    import os
-
     from pyspark.sql import functions as F
 
     from pymapreduce_spark.io import load_table
 
-    spec = importlib.util.spec_from_file_location(
-        "plan_audit",
-        os.path.join(os.path.dirname(__file__), "..", "tools", "plan_audit.py"),
-    )
-    pa = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(pa)
+    pa = _plan_audit_module()
 
     docs = load_table(spark, sf_dir, "documents")
 

@@ -31,6 +31,9 @@ from hypothesis import HealthCheck, given, settings
 
 from pyspark.sql import functions as F
 
+from pymapreduce_spark.io import TABLES
+from pymapreduce_spark.testing import duck_rows, make_duckdb, spark_rows
+
 EVENT_TYPES = ["view", "click", "purchase", "error", "login"]
 
 #: (name, spark builder, sql fragment) — filters over events
@@ -156,13 +159,8 @@ def _run_spec(spark, duck, sf_dir, spec):
     if keys:
         sql += " GROUP BY " + ", ".join(kmap[k][2] for k in keys)
 
-    si = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    got = sorted(tuple(str(r[i]) for i in si) for r in sdf.collect())
-    cur = duck.execute(sql)
-    di = sorted(
-        range(len(cur.description)), key=lambda i: cur.description[i][0]
-    )
-    want = sorted(tuple(str(r[i]) for i in di) for r in cur.fetchall())
+    got = spark_rows(sdf)
+    want = duck_rows(duck, sql)
     assert got == want, f"spec {spec}\nsql {sql}\n{got[:3]} vs {want[:3]}"
 
 
@@ -300,13 +298,8 @@ def _run_doc_spec(spark, duck, sf_dir, spec):
     if keys:
         sql += " GROUP BY " + ", ".join(kmap[k][2] for k in keys)
 
-    si = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    got = sorted(tuple(str(r[i]) for i in si) for r in sdf.collect())
-    cur = duck.execute(sql)
-    di = sorted(
-        range(len(cur.description)), key=lambda i: cur.description[i][0]
-    )
-    want = sorted(tuple(str(r[i]) for i in di) for r in cur.fetchall())
+    got = spark_rows(sdf)
+    want = duck_rows(duck, sql)
     assert got == want, f"spec {spec}\nsql {sql}\n{got[:3]} vs {want[:3]}"
 
 
@@ -354,13 +347,8 @@ def _diff_spec(spark, duck, spec, space, base_df):
     if keys:
         sql += " GROUP BY " + ", ".join(kmap[k][2] for k in keys)
 
-    si = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    got = sorted(tuple(str(r[i]) for i in si) for r in sdf.collect())
-    cur = duck.execute(sql)
-    di = sorted(
-        range(len(cur.description)), key=lambda i: cur.description[i][0]
-    )
-    want = sorted(tuple(str(r[i]) for i in di) for r in cur.fetchall())
+    got = spark_rows(sdf)
+    want = duck_rows(duck, sql)
     assert got == want, f"spec {spec}\nsql {sql}\n{got[:3]} vs {want[:3]}"
 
 
@@ -653,27 +641,11 @@ def hostile_events_sf(tmp_path_factory):
     import pyarrow as _pa
     import pyarrow.parquet as _pq
 
-    from conftest import SF_DIR as _SESSION
+    from conftest import ADVERSARIAL_SRC as src
 
-    def _smallest(sf_dir):
-        root = _os.path.dirname(_os.path.normpath(sf_dir))
-        try:
-            sibs = sorted(
-                (float(e[2:]), _os.path.join(root, e))
-                for e in _os.listdir(root)
-                if e.startswith("sf")
-                and _os.path.isdir(_os.path.join(root, e))
-                and e[2:].replace(".", "", 1).isdigit()
-            )
-        except OSError:
-            return sf_dir
-        return sibs[0][1] if sibs else sf_dir
-
-    src = _os.environ.get("TEST_ADVERSARIAL_SRC", _smallest(_SESSION))
     rng = _np.random.RandomState(7)
     base = tmp_path_factory.mktemp("sf_hostile_prop")
-    for t in ["region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"]:
+    for t in TABLES:
         tb = _pq.read_table(_os.path.join(src, f"{t}.parquet"))
         if t == "events":
             v = tb["value"].to_pylist()
@@ -708,8 +680,6 @@ def hostile_events_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def hostile_duck(hostile_events_sf):
-    from pymapreduce_spark.testing import make_duckdb
-
     con = make_duckdb(hostile_events_sf)
     yield con
     con.close()
@@ -806,13 +776,8 @@ def _run_window_spec(spark, duck, sf_dir, spec):
         "events_winprop"
     )
     sdf = spark.sql(_window_sql(spec, "events_winprop"))
-    si = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    got = sorted(tuple(str(r[i]) for i in si) for r in sdf.collect())
-    cur = duck.execute(_window_sql(spec, "events"))
-    di = sorted(
-        range(len(cur.description)), key=lambda i: cur.description[i][0]
-    )
-    want = sorted(tuple(str(r[i]) for i in di) for r in cur.fetchall())
+    got = spark_rows(sdf)
+    want = duck_rows(duck, _window_sql(spec, "events"))
     assert got == want, (
         f"spec {spec}\nsql {_window_sql(spec, 'events')}\n"
         f"{got[:3]} vs {want[:3]}"
@@ -937,13 +902,8 @@ def _run_bucket_spec(spark, duck, sf_dir, spec):
         [bmap[bucketer][2]] + (["event_type"] if with_type else [])
     )
 
-    si = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    got = sorted(tuple(str(r[i]) for i in si) for r in sdf.collect())
-    cur = duck.execute(sql)
-    di = sorted(
-        range(len(cur.description)), key=lambda i: cur.description[i][0]
-    )
-    want = sorted(tuple(str(r[i]) for i in di) for r in cur.fetchall())
+    got = spark_rows(sdf)
+    want = duck_rows(duck, sql)
     assert got == want, f"spec {spec}\nsql {sql}\n{got[:3]} vs {want[:3]}"
 
 
@@ -1034,13 +994,8 @@ def test_random_string_chains_match_duckdb(spark, duck, sf_dir, spec):
         f"SELECT {d_expr} AS k, count(*) AS n FROM documents "
         "WHERE text IS NOT NULL GROUP BY 1"
     )
-    si = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    got = sorted(tuple(str(r[i]) for i in si) for r in sdf.collect())
-    cur = duck.execute(sql)
-    di = sorted(
-        range(len(cur.description)), key=lambda i: cur.description[i][0]
-    )
-    want = sorted(tuple(str(r[i]) for i in di) for r in cur.fetchall())
+    got = spark_rows(sdf)
+    want = duck_rows(duck, sql)
     assert got == want, f"spec {spec}\nspark {s_expr}\nduck {d_expr}"
 
 
@@ -1201,13 +1156,8 @@ def _run_chain_spec(spark, duck, sf_dir, spec):
     else:
         sql = base
 
-    si = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    got = sorted(tuple(str(r[i]) for i in si) for r in sdf.collect())
-    cur = duck.execute(sql)
-    di = sorted(
-        range(len(cur.description)), key=lambda i: cur.description[i][0]
-    )
-    want = sorted(tuple(str(r[i]) for i in di) for r in cur.fetchall())
+    got = spark_rows(sdf)
+    want = duck_rows(duck, sql)
     assert got == want, f"spec {spec}\nsql {sql}\n{got[:3]} vs {want[:3]}"
 
 
@@ -1273,13 +1223,8 @@ def _run_event_chain_spec(spark, duck, sf_dir, spec):
         f" FROM ({base})"
     )
 
-    si = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    got = sorted(tuple(str(r[i]) for i in si) for r in sdf.collect())
-    cur = duck.execute(sql)
-    di = sorted(
-        range(len(cur.description)), key=lambda i: cur.description[i][0]
-    )
-    want = sorted(tuple(str(r[i]) for i in di) for r in cur.fetchall())
+    got = spark_rows(sdf)
+    want = duck_rows(duck, sql)
     assert got == want, f"spec {spec}\nsql {sql}\n{got[:3]} vs {want[:3]}"
 
 
@@ -1412,13 +1357,8 @@ def _run_setop_chain_spec(spark, duck, sf_dir, spec):
         sdf = getattr(a, method)(b)
         sql = f"({sql_a}) {kw} ({sql_b})"
 
-    si = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    got = sorted(tuple(str(r[i]) for i in si) for r in sdf.collect())
-    cur = duck.execute(sql)
-    di = sorted(
-        range(len(cur.description)), key=lambda i: cur.description[i][0]
-    )
-    want = sorted(tuple(str(r[i]) for i in di) for r in cur.fetchall())
+    got = spark_rows(sdf)
+    want = duck_rows(duck, sql)
     assert got == want, f"spec {spec}\nsql {sql}\n{got[:3]} vs {want[:3]}"
 
 
@@ -1519,13 +1459,8 @@ def _run_arrow_chain_spec(spark, duck, sf_dir, spec):
     if keys:
         sql += " GROUP BY " + ", ".join(kmap[k][2] for k in keys)
 
-    si = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    got = sorted(tuple(str(r[i]) for i in si) for r in sdf.collect())
-    cur = duck.execute(sql)
-    di = sorted(
-        range(len(cur.description)), key=lambda i: cur.description[i][0]
-    )
-    want = sorted(tuple(str(r[i]) for i in di) for r in cur.fetchall())
+    got = spark_rows(sdf)
+    want = duck_rows(duck, sql)
     assert got == want, f"spec {spec}\nsql {sql}\n{got[:3]} vs {want[:3]}"
 
 
@@ -1665,13 +1600,8 @@ def _run_cogroup_chain_spec(spark, duck, sf_dir, spec):
            coalesce(ca, 0)::BIGINT AS ca, coalesce(cb, 0)::BIGINT AS cb
     FROM a FULL JOIN b ON a.k IS NOT DISTINCT FROM b.k
     """
-    si = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    got = sorted(tuple(str(r[i]) for i in si) for r in sdf.collect())
-    cur = duck.execute(sql)
-    di = sorted(
-        range(len(cur.description)), key=lambda i: cur.description[i][0]
-    )
-    want = sorted(tuple(str(r[i]) for i in di) for r in cur.fetchall())
+    got = spark_rows(sdf)
+    want = duck_rows(duck, sql)
     assert got == want, f"spec {spec}\nsql {sql}\n{got[:3]} vs {want[:3]}"
 
 

@@ -569,24 +569,18 @@ def test_fold_correct_when_key_spans_arrow_chunks(spark, duck, sf_dir):
     sf0.01 — ONE state partition, 200-row Arrow chunks — and require
     the timers op to still match its DuckDB oracle exactly."""
     from pymapreduce_spark.registry import ORACLES, QUERIES
+    from pymapreduce_spark.testing import duck_rows, spark_rows
 
     arrow_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old_arrow = spark.conf.get(arrow_key)
     os.environ["SPARK_GRAFT_STREAM_PARTITIONS"] = "1"
     spark.conf.set(arrow_key, "200")
     try:
-        sdf = QUERIES["stream_stateful_timers"](spark, sf_dir)
-        got = sorted(
-            tuple(str(x) for x in r) for r in sdf.collect()
-        )
+        got = spark_rows(QUERIES["stream_stateful_timers"](spark, sf_dir))
     finally:
         del os.environ["SPARK_GRAFT_STREAM_PARTITIONS"]
         spark.conf.set(arrow_key, old_arrow)
-    want = sorted(
-        tuple(str(x) for x in r)
-        for r in duck.execute(ORACLES["stream_stateful_timers"]).fetchall()
-    )
-    assert got == want
+    assert got == duck_rows(duck, ORACLES["stream_stateful_timers"])
 
 
 # --- one start site, no state carried between drains --------------------

@@ -52,10 +52,8 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from pymapreduce_spark.io import TABLES  # noqa: E402
+
 SRC = os.environ.get("AUDIT_SRC", "/root/testdata/sf0.001")
 
 
@@ -660,10 +658,10 @@ def run(axis: str, rows: int, only: list[str] | None,
     import tempfile
     import time as _time
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from pymapreduce_spark.testing import duck_rows, make_duckdb, spark_rows
 
     out = tempfile.mkdtemp(prefix=f"audit_{axis}_")
     AXES[axis](out, rows)
@@ -689,12 +687,7 @@ def run(axis: str, rows: int, only: list[str] | None,
     if tz:
         builder = builder.config("spark.sql.session.timeZone", tz)
     spark = builder.getOrCreate()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{out}/{t}.parquet')"
-        )
+    con = make_duckdb(out)
 
     queries, oracles = entry.queries(), entry.oracle_sql()
     names = [n for n in queries if not only or n in only]
@@ -709,9 +702,7 @@ def run(axis: str, rows: int, only: list[str] | None,
                 # self-heal at the first load_table must not carry the
                 # rest of the sweep
                 spark.conf.set("spark.sql.session.timeZone", tz)
-            sdf = queries[name](spark, out)
-            si = sorted(range(len(sdf.columns)), key=lambda j: sdf.columns[j])
-            got = sorted(tuple(str(r[j]) for j in si) for r in sdf.collect())
+            got = spark_rows(queries[name](spark, out))
             if time_queries:
                 el = _time.time() - t_q
                 slow.append((el, name))
@@ -726,12 +717,7 @@ def run(axis: str, rows: int, only: list[str] | None,
             print(f"SKIP {name}: no oracle", flush=True)
             continue
         try:
-            cur = con.execute(oracles[name])
-            di = sorted(
-                range(len(cur.description)),
-                key=lambda j: cur.description[j][0],
-            )
-            want = sorted(tuple(str(r[j]) for j in di) for r in cur.fetchall())
+            want = duck_rows(con, oracles[name])
         except Exception as ex:
             print(f"FAIL {name}: ORACLE CRASH {ex}", flush=True)
             bad += 1

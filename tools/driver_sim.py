@@ -4,9 +4,10 @@
 Creates a PLAIN SparkSession (no engine configs — exercising
 ``ensure_runtime_configs`` self-healing, the driver's environment),
 then runs every ``__spark_entry__.oracle_sql()`` entry through BOTH
-engines at the given SF and strict-stringify-compares the sorted rows.
-Harsher than the driver's canonical hash: engine type skew (DATE vs
-TIMESTAMP, Decimal vs float) fails here even when values agree.
+engines at the given SF and strict-stringify-compares the sorted rows
+(``pymapreduce_spark.testing.oracle_mismatches``). Harsher than the
+driver's canonical hash: engine type skew (DATE vs TIMESTAMP, Decimal
+vs float) fails here even when values agree.
 
 Run:  python tools/driver_sim.py [sf_dir] [--only n1,n2,...]
       (default sf_dir /root/testdata/sf0.01; --only filters to the
@@ -21,14 +22,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def main(sf: str = "/root/testdata/sf0.01", only: str | None = None) -> int:
-    import duckdb
     from pyspark.sql import SparkSession
 
     spark = (
@@ -39,39 +34,20 @@ def main(sf: str = "/root/testdata/sf0.01", only: str | None = None) -> int:
         .getOrCreate()
     )
     import __spark_entry__ as entry
+    from pymapreduce_spark.testing import oracle_mismatches
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf}/{t}.parquet')"
-        )
     print("entry rows:", len(entry.entry(spark).collect()), flush=True)
-    queries, oracles = entry.queries(), entry.oracle_sql()
+    names = set(entry.oracle_sql())
     if only:
-        names = {n.strip() for n in only.split(",") if n.strip()}
-        missing = names - set(oracles)
+        wanted = {n.strip() for n in only.split(",") if n.strip()}
+        missing = wanted - names
         if missing:
             print("unknown --only names:", sorted(missing), flush=True)
             return 98
-        oracles = {n: oracles[n] for n in names}
-    bad = []
-    for i, name in enumerate(sorted(oracles)):
-        sdf = queries[name](spark, sf)
-        si = sorted(range(len(sdf.columns)), key=lambda j: sdf.columns[j])
-        got = sorted(tuple(str(r[j]) for j in si) for r in sdf.collect())
-        cur = con.execute(oracles[name])
-        di = sorted(
-            range(len(cur.description)), key=lambda j: cur.description[j][0]
-        )
-        want = sorted(tuple(str(r[j]) for j in di) for r in cur.fetchall())
-        if got != want:
-            bad.append(name)
-            print(f"MISMATCH {name}: {len(got)} vs {len(want)} rows",
-                  flush=True)
-        if (i + 1) % 50 == 0:
-            print(f"  ... {i + 1}/{len(oracles)} ({len(bad)} bad)",
-                  flush=True)
+        names = wanted
+    bad = oracle_mismatches(
+        spark, sf, sorted(names), log=lambda line: print(line, flush=True)
+    )
     print("mismatches:", bad or "NONE", flush=True)
     return len(bad)
 
